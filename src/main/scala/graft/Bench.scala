@@ -41,17 +41,8 @@ object Bench {
       val s = SparkSession.builder()
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        // plan-fingerprint hygiene: the default 100-char metadata
-        // truncation cuts DataFilters at a point that depends on token
-        // LENGTHS (a lambda variable named x_478 vs x_1 shifts the cut),
-        // so identical plans rendered in different sessions hashed apart;
-        // rendering-only, no execution effect
-        .config("spark.sql.maxMetadataStringLength", 100000)
-        // storage-partitioned joins over the graft connector (round 17)
-        .config("spark.sql.sources.v2.bucketing.enabled", "true")
-        .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+        .config(PlanCanon.renderingConfs)
         .getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       s
@@ -102,103 +93,28 @@ object Bench {
     // queries below still report incremental cost and the suite total
     // carries the shared cost exactly once.
     //
-    // The build list is assembled ONCE — the timed labeled entries and the
-    // per-recycle untimed rebuilds must cover the identical set.
-    val sharedBuilds: Seq[(String, () => Unit, (SparkSession, String) => Unit)] = {
-      val b = Seq.newBuilder[(String, () => Unit, (SparkSession, String) => Unit)]
-      if (queries.contains("dedup_survivors") ||
-          queries.contains("dedup_survivors_best"))
-        b += (("cc_shared_build",
-          () => SparkEntry.resetSharedCc(),
-          (s, d) => SparkEntry.buildSharedCc(s, d)))
-      // Same honesty for the passage family: the span table is computed
-      // once and shared by dup_passages / dup_passage_clean.
-      if (queries.contains("dup_passages") ||
-          queries.contains("dup_passage_clean"))
-        b += (("passage_spans_shared",
-          () => SparkEntry.resetSharedSpans(),
-          (s, d) => SparkEntry.buildSharedSpans(s, d)))
-      // And for the fertility monitor's held-out train pass: the even-half
-      // BPE merges are session-cached, so bill the one real train here and
-      // let tokenizer_fertility report score-only cost.
-      if (queries.contains("tokenizer_fertility"))
-        b += (("bpe_fertility_train",
-          () => SparkEntry.resetSharedBpeEven(),
-          (s, d) => SparkEntry.buildSharedBpeEven(s, d)))
-      // And the unigram twin: the even-half unigram vocab is session-cached
-      // for unigram_fertility's score-only read.
-      if (queries.contains("unigram_fertility"))
-        b += (("unigram_fertility_train",
-          () => SparkEntry.resetSharedUnigramEven(),
-          (s, d) => SparkEntry.buildSharedUnigramEven(s, d)))
-      // And for the graph-ANN family: ann_hnsw and hnsw_recall search the
-      // identical session-cached layered graph.
-      if (queries.contains("ann_hnsw") || queries.contains("hnsw_recall"))
-        b += (("hnsw_edges_shared",
-          () => SparkEntry.resetSharedHnswEdges(),
-          (s, d) => SparkEntry.buildSharedHnswEdges(s, d)))
-      // The AutoPlanes gate entry's edge graph (different plane count →
-      // different graph than the fixed-shape build above).
-      if (queries.contains("ann_hnsw_auto"))
-        b += (("hnsw_auto_edges_shared",
-          () => SparkEntry.resetSharedHnswAutoEdges(),
-          (s, d) => SparkEntry.buildSharedHnswAutoEdges(s, d)))
-      // The value-shift monitor family's ONE pinned two-slice histogram
-      // (r18): ks_value_shift / ranksum_shift / median_shift read the
-      // identical (events, type, cents, final-week) histogram.
-      if (Seq("ks_value_shift", "ranksum_shift", "median_shift")
-          .exists(queries.contains))
-        b += (("twoslice_hist_shared",
-          () => SparkEntry.resetSharedTwoSliceHist(),
-          (s, d) => SparkEntry.buildSharedTwoSliceHist(s, d)))
-      // The ANN recall harnesses' ONE exact ground-truth ranking (r18):
-      // ivf/hnsw/binary/pq_recall compare against the identical
-      // brute-force top-5.
-      if (Seq("ivf_recall", "hnsw_recall", "binary_recall", "pq_recall")
-          .exists(queries.contains))
-        b += (("brute_topk_shared",
-          () => SparkEntry.resetSharedBruteTopK(),
-          (s, d) => SparkEntry.buildSharedBruteTopK(s, d)))
-      // The decontamination span family's ONE span table (r18):
-      // decon_spans returns it, decon_span_clean splices by it.
-      if (Seq("decon_spans", "decon_span_clean").exists(queries.contains))
-        b += (("decon_spans_shared",
-          () => SparkEntry.resetSharedDeconSpans(),
-          (s, d) => SparkEntry.buildSharedDeconSpans(s, d)))
-      b.result()
-    }
-    def timeShared(name: String, reset: () => Unit, build: () => Unit): Unit = {
-      val v = (1 to repeat).map { r =>
-        reset(); System.gc()
-        val t0 = System.nanoTime()
-        build()
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] $name%-24s $dt%8.2f s  (build pass $r)")
+    // The table (SparkEntry.sharedBuilds) names each build's consumers,
+    // so the timed labeled entries and the per-recycle untimed rebuilds
+    // cover exactly the builds the selected queries read.
+    val sharedBuilds = SparkEntry.sharedBuilds.filter(_.consumers.exists(queries.contains))
+    sharedBuilds.filter(_.labeled).foreach { b =>
+      samples(b.name) = (1 to repeat).map { r =>
+        val dt = b.timedBuild(spark, sfDir)
+        System.err.println(f"[bench] ${b.name}%-24s $dt%8.2f s  (build pass $r)")
         dt
       }.toVector
-      samples(name) = v
     }
-    sharedBuilds.foreach { case (name, reset, build) =>
-      timeShared(name, reset, () => build(spark, sfDir))
-    }
-    // Per-pass session recycle (see the object scaladoc). The FULL-corpus
-    // tokenizer caches (bpe_train / unigram_train populate them; the
-    // *_encode entries read them) are rebuilt too: they carry no labeled
-    // build entry — their cost is the train entries' own number — but a
-    // fresh session must not hand that cost to whichever family member
-    // happens to run first in the pass.
+    // Per-pass session recycle (see the object scaladoc). The unlabeled
+    // full-corpus tokenizer builds are rebuilt too: their cost is the
+    // train entries' own number, and a fresh session must not hand it to
+    // whichever consumer happens to run first in the pass.
     val restart = sys.env.getOrElse("SPARK_GRAFT_RESTART", "pass")
     def recycle(): Unit = {
       spark.stop()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
       spark = newSession()
-      sharedBuilds.foreach { case (_, _, build) => build(spark, sfDir) }
-      if (Seq("bpe_train", "bpe_encode", "tokenizer_fertility").exists(queries.contains))
-        SparkEntry.buildSharedBpe(spark, sfDir)
-      if (Seq("unigram_train", "unigram_encode", "unigram_fertility").exists(queries.contains)) {
-        SparkEntry.sharedUnigramCounts(spark, sfDir); ()
-      }
+      sharedBuilds.foreach(_.build(spark, sfDir))
       System.gc()
     }
     // A 200-query × 5-pass suite accumulates dead RDD blocks and shuffle
@@ -274,11 +190,11 @@ object Bench {
     // ordering); RDD-scan lines keep their schema, so two pinned-lineage
     // plans with different shapes hash apart. The same protocol builds
     // the committed canonical map (bench/plans_canonical, PlanGateSpec).
-    // The 6 labeled shared builds are fingerprinted too, via the
-    // lazily-constructible corpus-facing stage of each build
-    // (SparkEntry.sharedBuildPlanFrames — knobs single-sourced with the
-    // cache builders), so a plane-count or operator change inside a
-    // build moves a hash even though builds are cached during timing.
+    // The labeled shared builds are fingerprinted too, via the
+    // lazily-constructible corpus-facing stage of each build (its
+    // SharedBuild.planFrame — knobs single-sourced with the build), so a
+    // plane-count or operator change inside a build moves a hash even
+    // though builds are cached during timing.
     // Computed AFTER the timed loop (construction is untimed; shared
     // caches are warm, so construction-time pins are cheap).
     // The NORMALIZED plan text behind every hash is written to
@@ -324,9 +240,8 @@ object Bench {
       }
     val planHashes =
       (queries.toSeq.map { case (n, fn) => n -> (() => fn(spark, sfDir)) } ++
-        SparkEntry.sharedBuildPlanFrames
-          .filter { case (n, _) => samples.contains(n) }
-          .map { case (n, f) => n -> (() => f(spark, sfDir)) })
+        PlanCanon.labeledBuildFrames(spark, sfDir)
+          .filter { case (n, _) => samples.contains(n) })
         .sortBy(_._1)
         .map { case (n, mk) => n -> planHash(n, mk) }
 

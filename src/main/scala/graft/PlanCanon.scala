@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * post-hoc bench-artifact diff.
   *
   * - `bench/plans_canonical/<name>.txt` holds the [[PlanNorm]]-normalized
-  *   plan of each `SparkEntry.queries` entry plus the six labeled
+  *   plan of each `SparkEntry.queries` entry plus the nine labeled
   *   shared-build frames, built under the OFFICIAL bench knobs (sf0.1
   *   data, shuffle.partitions = 4, maxMetadataStringLength = 100000 so
   *   the truncation point — which depends on raw exprId token lengths —
@@ -27,20 +27,30 @@ object PlanCanon {
 
   val canonicalDir = "bench/plans_canonical"
 
-  /** SQL confs the canonical plans are rendered under — applied to a
-    * per-use `newSession()` so neither the bench JVM nor the test JVM
-    * leaks its own defaults into the rendering. Partition counts ride in
-    * Exchange nodes, so shuffle.partitions is part of the rendering. */
+  /** SQL confs every plan rendering runs under — the canonical map's
+    * sessions here and the bench's sessions alike, so `graft.Bench`
+    * hashes stay byte-comparable with the committed map.
+    *  - maxMetadataStringLength: the default 100-char truncation cuts
+    *    DataFilters at a point that depends on token LENGTHS (a lambda
+    *    variable named x_478 vs x_1 shifts the cut), so identical plans
+    *    rendered in different sessions hashed apart; rendering-only.
+    *  - v2 bucketing (round 17): graft scans grouped by bucket
+    *    (KeyGroupedPartitioning, storage-partitioned joins) are part of
+    *    the rendering, pinned so no JVM's session defaults leak in. */
+  val renderingConfs: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.maxMetadataStringLength" -> "100000",
+    "spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")
+
+  /** A fresh session under [[renderingConfs]] — per use, so neither the
+    * bench JVM nor the test JVM leaks its own defaults into the
+    * rendering. Partition counts ride in Exchange nodes, so
+    * shuffle.partitions is part of the rendering. */
   def configured(spark: SparkSession): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", 4)
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    s.conf.set("spark.sql.maxMetadataStringLength", 100000)
-    // part of the rendering since round 17: graft scans grouped by
-    // bucket (KeyGroupedPartitioning) — pinned here so every rendering
-    // JVM (bench, test, PlanSnap) agrees regardless of builder defaults
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+    renderingConfs.foreach { case (k, v) => s.conf.set(k, v) }
     // plan RENDERING (treeString truncation width) reads SQLConf.get,
     // which resolves through the thread's ACTIVE session — without this
     // the new session's width is ignored and metadata truncates at the
@@ -49,30 +59,20 @@ object PlanCanon {
     s
   }
 
-  /** Build every session-keyed shared cache the entry constructions
-    * read (the Bench recycle set) — construction of a dependent entry
-    * would otherwise trigger the build mid-render. */
-  def buildSharedCaches(s: SparkSession, sfDir: String): Unit = {
-    SparkEntry.buildSharedCc(s, sfDir)
-    SparkEntry.buildSharedSpans(s, sfDir)
-    SparkEntry.buildSharedBpeEven(s, sfDir)
-    SparkEntry.buildSharedUnigramEven(s, sfDir)
-    SparkEntry.buildSharedHnswEdges(s, sfDir)
-    SparkEntry.buildSharedHnswAutoEdges(s, sfDir)
-    SparkEntry.buildSharedBpe(s, sfDir)
-    SparkEntry.sharedUnigramCounts(s, sfDir)
-    SparkEntry.buildSharedTwoSliceHist(s, sfDir)
-    SparkEntry.buildSharedBruteTopK(s, sfDir)
-    SparkEntry.buildSharedDeconSpans(s, sfDir)
-    ()
-  }
+  /** Build every shared build (the Bench recycle set) — construction of
+    * a dependent entry would otherwise trigger the build mid-render. */
+  def buildSharedCaches(s: SparkSession, sfDir: String): Unit =
+    SparkEntry.sharedBuilds.foreach(_.build(s, sfDir))
 
   /** Every fingerprinted frame: the registered queries plus the labeled
     * shared-build corpus-facing stages, name-sorted. */
   def frames(s: SparkSession, sfDir: String): Seq[(String, () => DataFrame)] =
     (SparkEntry.queries.toSeq.map { case (n, fn) => n -> (() => fn(s, sfDir)) } ++
-      SparkEntry.sharedBuildPlanFrames.map { case (n, f) => n -> (() => f(s, sfDir)) })
-      .sortBy(_._1)
+      labeledBuildFrames(s, sfDir)).sortBy(_._1)
+
+  /** The labeled shared builds' plan frames, by label. */
+  def labeledBuildFrames(s: SparkSession, sfDir: String): Seq[(String, () => DataFrame)] =
+    SparkEntry.sharedBuilds.flatMap(b => b.planFrame.map(f => b.name -> (() => f(s, sfDir))))
 
   /** Fingerprint protocol v2 (round 16): normalize the PLAIN
     * `executedPlan.toString`, NOT `.canonicalized.toString`. The r15

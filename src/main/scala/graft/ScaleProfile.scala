@@ -593,18 +593,8 @@ object ScaleProfile {
       def exp10(t1: Double, t10: Double): Double = math.log(t10 / t1) / math.log(10.0)
 
       // family-shared builds, timed like Bench bills them
-      def timeSpans(dir: String): Double = {
-        SparkEntry.resetSharedSpans()
-        val t0 = System.nanoTime()
-        SparkEntry.buildSharedSpans(spark, dir)
-        (System.nanoTime() - t0) / 1e9
-      }
-      def timeCc(dir: String): Double = {
-        SparkEntry.resetSharedCc()
-        val t0 = System.nanoTime()
-        SparkEntry.buildSharedCc(spark, dir)
-        (System.nanoTime() - t0) / 1e9
-      }
+      def timeSpans(dir: String): Double = SparkEntry.passageSpansShared.timedBuild(spark, dir)
+      def timeCc(dir: String): Double = SparkEntry.ccSharedBuild.timedBuild(spark, dir)
       timeSpans(src); timeCc(src) // warmup: codegen + JIT
       val sp1 = median3(timeSpans(src)); val sp10 = median3(timeSpans(big))
       println(f"SCALE10 passage_spans_shared    sf0.1=$sp1%6.2f s  sf1=$sp10%7.2f s  exponent=${exp10(sp1, sp10)}%5.2f")
@@ -1114,12 +1104,7 @@ object ScaleProfile {
       }
       def exp100(t1: Double, t100: Double): Double =
         math.log(t100 / t1) / math.log(100.0)
-      def timeSpans(dir: String): Double = {
-        SparkEntry.resetSharedSpans()
-        val t0 = System.nanoTime()
-        SparkEntry.buildSharedSpans(spark, dir)
-        (System.nanoTime() - t0) / 1e9
-      }
+      def timeSpans(dir: String): Double = SparkEntry.passageSpansShared.timedBuild(spark, dir)
       timeSpans(src) // warmup
       val sp1 = median3(timeSpans(src)); val sp100 = median3(timeSpans(big))
       println(f"SCALE100 passage_spans_shared   sf0.1=$sp1%6.2f s  sf10=$sp100%7.2f s  exponent=${exp100(sp1, sp100)}%5.2f")

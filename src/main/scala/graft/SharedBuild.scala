@@ -1,0 +1,100 @@
+package graft
+
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** One session-keyed shared build of the query registry: an intermediate
+  * result that every query in `consumers` reads, computed once per
+  * (session, dir) and reused by the rest — one session's work amortized
+  * over many queries. The rows, in bench order, are
+  * [[SparkEntry.sharedBuilds]]; Bench, PlanCanon, ScaleProfile and the
+  * eviction listener all read that one table.
+  *
+  * A row with a `planFrame` is LABELED: `graft.Bench` times its build as
+  * an entry named `name` (so consumers report incremental cost) and
+  * fingerprints `planFrame` — the lazy, corpus-facing stage of the build,
+  * since the builds themselves run jobs at construction. An unlabeled
+  * row's cost is billed by whichever entry trains the same thing itself.
+  *
+  * The testdata dirs are immutable, so no value is ever invalidated; a
+  * session's values go when its application ends.
+  */
+private[graft] final class SharedBuild[T <: AnyRef](
+    val name: String,
+    val consumers: Set[String],
+    val planFrame: Option[(SparkSession, String) => DataFrame],
+    make: (SparkSession, String) => T) {
+
+  import SharedBuild.store
+
+  def labeled: Boolean = planFrame.isDefined
+
+  /** The session's value for `dir`, built on the first read. */
+  def apply(s: SparkSession, dir: String): T = {
+    val key = (SharedBuild.sessionKey(s), name, dir)
+    store.get(key) match {
+      case null =>
+        SharedBuild.installEvictionListener(s)
+        // built OUTSIDE the map: a make that reads another row would
+        // otherwise nest computeIfAbsent calls on one ConcurrentHashMap,
+        // which throws "Recursive update"; a lost race keeps the winner
+        val built = make(s, dir)
+        store.putIfAbsent(key, built) match {
+          case null => built
+          case won => won.asInstanceOf[T]
+        }
+      case v => v.asInstanceOf[T]
+    }
+  }
+
+  def build(s: SparkSession, dir: String): Unit = { apply(s, dir); () }
+
+  /** Drop this row's values for every session and dir. */
+  def reset(): Unit = { store.keySet.removeIf(_._2 == name); () }
+
+  /** Seconds for one fresh build: reset, GC, then build — the protocol
+    * the bench's labeled entries and the scale tool share. */
+  def timedBuild(s: SparkSession, dir: String): Double = {
+    reset(); System.gc()
+    val t0 = System.nanoTime()
+    build(s, dir)
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  def isCached(s: SparkSession, dir: String): Boolean =
+    store.containsKey((SharedBuild.sessionKey(s), name, dir))
+
+  /** Values held for this row across all sessions and dirs. */
+  def size: Int = store.keySet.stream.filter(_._2 == name).count.toInt
+}
+
+private[graft] object SharedBuild {
+
+  /** Every row's values, keyed by (session, row name, dir). */
+  private val store = new ConcurrentHashMap[(String, String, String), AnyRef]()
+
+  // sessions whose application already carries the eviction listener —
+  // values must not outlive their session (VERDICT r8 #4: dead sessions'
+  // cached frames and localCheckpoint files were never released)
+  private val listening = ConcurrentHashMap.newKeySet[String]()
+
+  def sessionKey(s: SparkSession): String = System.identityHashCode(s).toString
+
+  private def installEvictionListener(s: SparkSession): Unit = {
+    val sessKey = sessionKey(s)
+    if (listening.add(sessKey))
+      s.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+          evict(sessKey)
+      })
+  }
+
+  /** Drop one session's values (the listener's target; checkpoint blocks
+    * die with the session's context). */
+  def evict(sessKey: String): Unit = {
+    store.keySet.removeIf(_._1 == sessKey)
+    listening.remove(sessKey)
+  }
+}

@@ -61,329 +61,154 @@ object SparkEntry {
       Extract.displayName(col("source"), docCountry).as("display_name"),
       col("n_chars"))
 
+  // ---------------------------------------------------------- shared builds
+  //
+  // Session-keyed builds that several queries read ([[SharedBuild]]).
+  // Each row states its knobs once: a labeled row's plan frame is the
+  // same lazy stage its build runs, so a knob or operator change in a
+  // build moves its bench fingerprint (VERDICT r14 #1) even though the
+  // build is cached while timed.
+
+  /** A pinned row: the build is its plan frame, `localCheckpoint`ed so
+    * reuse is a flat file-backed scan instead of a lineage replay. */
+  private def pinnedRow(name: String, consumers: Set[String],
+      frame: (SparkSession, String) => DataFrame): SharedBuild[DataFrame] =
+    new SharedBuild[DataFrame](name, consumers, Some(frame),
+      (s, d) => frame(s, d).localCheckpoint())
+
+  /** The even-doc half the held-out tokenizer monitors train on (scoring
+    * must never see the odd half). */
+  private def evenHalfDocs(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).where(col("doc_id") % 2 === 0)
+
+  /** The corpus-facing stage of both even-half tokenizer trains (their
+    * merge/EM rounds are adaptive loops that run jobs at construction);
+    * the two labels intentionally share this plan. */
+  private def evenHalfWordFreqFrame(s: SparkSession, dir: String): DataFrame =
+    Bpe.wordFrequencies(evenHalfDocs(s, dir), "text")
+
+  private def bpeMerges(docs: DataFrame): Seq[(String, String)] =
+    Bpe.train(docs, "text", numMerges = 10)
+      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
+
+  private def unigramVocab(docs: DataFrame): Map[String, Long] =
+    graft.operators.Unigram.vocabCounts(graft.operators.Unigram.train(
+      docs, "text", rounds = 2, seedSize = 200, vocabSize = 120))
+
+  /** The pair stage feeding the CC fold (the fold itself is an adaptive
+    * loop that runs jobs at construction). */
+  private def ccPairsFrame(s: SparkSession, dir: String): DataFrame =
+    Dedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
+      blockCol = "source", n = 3, thresholdNum = 1, thresholdDen = 50)
+
+  /** The value-shift monitors' shared arguments: events, event_type,
+    * cents, final week. */
+  private def onWeekValues[T](
+      f: (DataFrame, String, Column, Column, Int) => T): (SparkSession, String) => T =
+    (s, d) => f(weekValuedEvents(s, d), "event_type", col("cents"), col("__day"), 7)
+
+  /** ONE pair→connected-components materialization: the survivor
+    * policies and the component splits all run the identical
+    * n-gram-Jaccard pair stage and CC, so each paying the CC loop's
+    * fixed per-round cost is pure waste (VERDICT r7 #3). */
+  private[graft] val ccSharedBuild = new SharedBuild[DataFrame]("cc_shared_build",
+    Set("dedup_survivors", "dedup_survivors_best", "dup_cluster_sizes",
+      "split_by_component", "split_leakage"),
+    Some(ccPairsFrame _),
+    (s, d) => Graph.connectedComponents(ccPairsFrame(s, d), "a_id", "b_id")
+      .localCheckpoint())
+
+  /** ONE token-window span table: `dup_passages` returns it and
+    * `dup_passage_clean` splices by it — the window exchange + census is
+    * the family's whole cost. */
+  private[graft] val passageSpansShared = pinnedRow("passage_spans_shared",
+    Set("dup_passages", "dup_passage_clean"),
+    (s, d) => Dedup.duplicatedPassageSpans(Tables.documents(s, d), "doc_id", "text", w = 8))
+
+  /** The BPE fertility monitor's even-half training pass; billed here so
+    * `tokenizer_fertility` reads score-only. */
+  private[graft] val bpeFertilityTrain = new SharedBuild[Seq[(String, String)]](
+    "bpe_fertility_train", Set("tokenizer_fertility"),
+    Some(evenHalfWordFreqFrame _), (s, d) => bpeMerges(evenHalfDocs(s, d)))
+
+  /** The unigram twin of [[bpeFertilityTrain]]. */
+  private[graft] val unigramFertilityTrain = new SharedBuild[Map[String, Long]](
+    "unigram_fertility_train", Set("unigram_fertility"),
+    Some(evenHalfWordFreqFrame _), (s, d) => unigramVocab(evenHalfDocs(s, d)))
+
+  private def hnswEdgesRow(name: String, consumers: Set[String], planes: Int) =
+    pinnedRow(name, consumers, (s, d) => Hnsw.knnEdges(Tables.embeddings(s, d),
+      "vec_id", "embedding", dim = 64, m = 8, maxLevel = 3, planes = planes, tables = 4))
+
+  /** ONE layered-edge graph: `ann_hnsw` and `hnsw_recall` search the
+    * identical graph (the recall harness measures the search brute force
+    * is compared against). */
+  private[graft] val hnswEdgesShared = hnswEdgesRow("hnsw_edges_shared",
+    Set("ann_hnsw", "hnsw_recall"), planes = 4)
+
+  /** The AutoPlanes gate entry's graph (stats-derived plane count, so a
+    * different graph than [[hnswEdgesShared]]). */
+  private[graft] val hnswAutoEdgesShared = hnswEdgesRow("hnsw_auto_edges_shared",
+    Set("ann_hnsw_auto"), planes = Dedup.AutoPlanes)
+
+  /** ONE pinned two-slice (key, value) histogram (round 18): the three
+    * value-shift monitors are read-outs of one monitoring decision over
+    * identical arguments, so each pinning its own tripled the family's
+    * corpus scans. */
+  private[graft] val twosliceHistShared = new SharedBuild[DataFrame](
+    "twoslice_hist_shared", Set("ks_value_shift", "ranksum_shift", "median_shift"),
+    Some(onWeekValues(Validate.twoSliceHistogramByDayFrame)),
+    onWeekValues(Validate.twoSliceHistogramByDay(_, _, _, _, _)))
+
+  /** ONE exact ground-truth ranking (first-20-queries cosine top-5, the
+    * deliberately quadratic pass) shared by the ANN recall harnesses
+    * (round 18) — one ground truth amortized over a knob sweep.
+    * `cosine_topk` stays independent: it gates the operator itself. */
+  private[graft] val bruteTopkShared = pinnedRow("brute_topk_shared",
+    Set("ivf_recall", "hnsw_recall", "binary_recall", "pq_recall"), (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      Similarity.bruteForceTopK(emb.where(col("vec_id") < 20), emb, k = 5)
+    })
+
+  /** ONE contaminated-span table (round 18): `decon_spans` returns it and
+    * `decon_span_clean` splices by it — the passage-span precedent. */
+  private[graft] val deconSpansShared = pinnedRow("decon_spans_shared",
+    Set("decon_spans", "decon_span_clean"), (s, d) => {
+      val docs = Tables.documents(s, d)
+      Decontaminate.contaminatedSpans(
+        docs.where(pmod(col("doc_id"), lit(50)) =!= 0), "doc_id", "text",
+        docs.where(pmod(col("doc_id"), lit(50)) === 0), "doc_id", "text", w = 4)
+    })
+
+  /** The full-corpus BPE merges `bpe_encode` applies. Training is
+    * deterministic, so reuse changes nothing; the train cost is
+    * `bpe_train`'s own entry. */
+  private[graft] val bpeMergesShared = new SharedBuild[Seq[(String, String)]](
+    "bpe_merges_shared", Set("bpe_encode"), None,
+    (s, d) => bpeMerges(Tables.documents(s, d)))
+
+  /** The full-corpus unigram vocab `unigram_encode` applies — the
+    * [[bpeMergesShared]] posture. */
+  private[graft] val unigramVocabShared = new SharedBuild[Map[String, Long]](
+    "unigram_vocab_shared", Set("unigram_encode"), None,
+    (s, d) => unigramVocab(Tables.documents(s, d)))
+
+  /** Every shared build: the labeled rows in bench order, then the
+    * unlabeled ones. */
+  private[graft] val sharedBuilds: Seq[SharedBuild[_ <: AnyRef]] = Seq(
+    ccSharedBuild, passageSpansShared, bpeFertilityTrain, unigramFertilityTrain,
+    hnswEdgesShared, hnswAutoEdgesShared, twosliceHistShared, bruteTopkShared,
+    deconSpansShared, bpeMergesShared, unigramVocabShared)
+
+  // perfbench/ bills these three builds by name inside its query mix
+  private[graft] def buildSharedCc(s: SparkSession, dir: String): Unit =
+    ccSharedBuild.build(s, dir)
+  private[graft] def buildSharedHnswEdges(s: SparkSession, dir: String): Unit =
+    hnswEdgesShared.build(s, dir)
+  private[graft] def buildSharedBpeEven(s: SparkSession, dir: String): Unit =
+    bpeFertilityTrain.build(s, dir)
+
   // ---------------------------------------------------------------- queries
-
-  /** ONE pair→connected-components materialization shared by the
-    * text-survivor query family: `dedup_survivors` and
-    * `dedup_survivors_best` run the identical n-gram-Jaccard pair stage
-    * and CC (only the survivor rank differs), so each policy paying the
-    * CC driver loop's fixed per-round cost separately is pure waste
-    * (VERDICT r7 #3). Keyed by (session, dir); `localCheckpoint`
-    * truncates the iterative lineage so reuse is a flat file-backed scan.
-    * The testdata dirs are immutable, so no invalidation is needed. */
-  private[graft] val ccCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  // sessions whose application already carries the eviction listener —
-  // the cache must not outlive its session (VERDICT r8 #4: dead sessions'
-  // cached frames and localCheckpoint files were never released)
-  private[graft] val ccListenerInstalled =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[graft] def installEvictionListener(s: SparkSession): String = {
-    val sessKey = System.identityHashCode(s).toString
-    if (ccListenerInstalled.add(sessKey))
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-            evictSharedCc(sessKey)
-        })
-    sessKey
-  }
-
-  /** The pair stage feeding the shared CC build — split out so the bench
-    * can fingerprint the build's plan without executing it (the CC fold
-    * itself is adaptive driver/loop and runs jobs at construction). */
-  private[graft] def ccPairsFrame(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.ngramJaccardPairs(
-      Tables.documents(s, dir), "doc_id", "text", blockCol = "source",
-      n = 3, thresholdNum = 1, thresholdDen = 50)
-
-  private[graft] def sharedJaccardComponents(s: SparkSession, dir: String): DataFrame = {
-    val sessKey = installEvictionListener(s)
-    ccCache.computeIfAbsent(s"$sessKey#$dir", _ =>
-      graft.operators.Graph.connectedComponents(
-        ccPairsFrame(s, dir), "a_id", "b_id")
-        .localCheckpoint())
-  }
-
-  /** ONE token-window span materialization shared by the passage query
-    * family: `dup_passages` returns it and `dup_passage_clean` splices
-    * by it — the w-token window exchange + census is the family's whole
-    * cost, identical in both (same reuse argument as the CC cache). */
-  private[graft] val spansCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private[graft] def passageSpansFrame(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.duplicatedPassageSpans(
-      Tables.documents(s, dir), "doc_id", "text", w = 8)
-
-  private[graft] def sharedPassageSpans(s: SparkSession, dir: String): DataFrame = {
-    val sessKey = installEvictionListener(s)
-    spansCache.computeIfAbsent(s"$sessKey#$dir", _ =>
-      passageSpansFrame(s, dir).localCheckpoint())
-  }
-
-  /** ONE trained BPE merge list shared by the tokenizer query family:
-    * training is fully deterministic, so `bpe_encode` reusing the merges
-    * `bpe_train` computes changes nothing semantically — and the
-    * realistic shape is train-once / encode-per-pass anyway. The train
-    * cost stays VISIBLE in the suite as `bpe_train`'s own number (unlike
-    * the CC/spans caches, no extra bench entry is needed); `bpe_encode`
-    * reads as encode-only. Driver-side Seq, same eviction lifecycle. */
-  private[graft] val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
-  private[graft] def sharedBpeMerges(s: SparkSession, dir: String): Seq[(String, String)] = {
-    val sessKey = installEvictionListener(s)
-    bpeCache.computeIfAbsent(s"$sessKey#$dir", _ =>
-      graft.operators.Bpe.train(Tables.documents(s, dir), "text", numMerges = 10)
-        .collect().map(r => (r.getString(1), r.getString(2))).toSeq)
-  }
-
-  /** ONE trained unigram final vocab shared by the tokenizer family —
-    * the [[sharedBpeMerges]] posture exactly: training is deterministic,
-    * `unigram_train` bills the real train as its own entry, and
-    * `unigram_encode` reads encode-only off the cached counts. */
-  private[graft] val unigramCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
-  private[graft] def sharedUnigramCounts(s: SparkSession, dir: String): Map[String, Long] = {
-    val sessKey = installEvictionListener(s)
-    unigramCache.computeIfAbsent(s"$sessKey#$dir", _ =>
-      graft.operators.Unigram.vocabCounts(
-        graft.operators.Unigram.train(Tables.documents(s, dir), "text",
-          rounds = 2, seedSize = 200, vocabSize = 120)))
-  }
-
-  /** The unigram fertility monitor's EVEN-doc-half training pass — the
-    * [[sharedBpeMergesEven]] twin (held-out scoring must never train on
-    * the odd half). Bench bills the build as its own
-    * `unigram_fertility_train` entry so `unigram_fertility` reads
-    * score-only. */
-  private[graft] def sharedUnigramEven(s: SparkSession, dir: String): Map[String, Long] = {
-    val sessKey = installEvictionListener(s)
-    unigramCache.computeIfAbsent(s"$sessKey#$dir#even", _ =>
-      graft.operators.Unigram.vocabCounts(
-        graft.operators.Unigram.train(
-          Tables.documents(s, dir).where(col("doc_id") % 2 === 0), "text",
-          rounds = 2, seedSize = 200, vocabSize = 120)))
-  }
-  private[graft] def resetSharedUnigramEven(): Unit =
-    unigramCache.keySet.removeIf(_.endsWith("#even"))
-  private[graft] def buildSharedUnigramEven(s: SparkSession, dir: String): Unit = {
-    sharedUnigramEven(s, dir); ()
-  }
-
-  /** The corpus-facing input stage of the even-half tokenizer trains —
-    * the lazily-constructible part of `bpe_fertility_train` /
-    * `unigram_fertility_train` (their merge/EM rounds are adaptive
-    * driver loops that run jobs at construction, so the bench
-    * fingerprints the trains' shared word-frequency stage; the two
-    * labels intentionally share this fingerprint). */
-  private[graft] def evenHalfWordFreqFrame(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Bpe.wordFrequencies(
-      Tables.documents(s, dir).where(col("doc_id") % 2 === 0), "text")
-
-  /** Labeled shared-build plan frames for the bench's plan
-    * fingerprinting (VERDICT r14 #1): a LAZY construction of each
-    * labeled build's corpus-facing stage, with the knob values
-    * single-sourced through the same `*Frame` helpers the cache
-    * builders use — a knob or operator change in a build now moves its
-    * fingerprint even though the build itself is cached during timing. */
-  private[graft] def sharedBuildPlanFrames
-      : Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "cc_shared_build" -> ((s: SparkSession, d: String) => ccPairsFrame(s, d)),
-    "passage_spans_shared" -> ((s: SparkSession, d: String) => passageSpansFrame(s, d)),
-    "hnsw_edges_shared" -> ((s: SparkSession, d: String) =>
-      hnswEdgesFrame(s, d, planes = 4)),
-    "hnsw_auto_edges_shared" -> ((s: SparkSession, d: String) =>
-      hnswEdgesFrame(s, d, planes = graft.operators.Dedup.AutoPlanes)),
-    "bpe_fertility_train" -> ((s: SparkSession, d: String) =>
-      evenHalfWordFreqFrame(s, d)),
-    "unigram_fertility_train" -> ((s: SparkSession, d: String) =>
-      evenHalfWordFreqFrame(s, d)),
-    "twoslice_hist_shared" -> ((s: SparkSession, d: String) =>
-      twoSliceHistPlanFrame(s, d)),
-    "brute_topk_shared" -> ((s: SparkSession, d: String) =>
-      bruteTopkPlanFrame(s, d)),
-    "decon_spans_shared" -> ((s: SparkSession, d: String) =>
-      deconSpansFrame(s, d)))
-
-  /** The fertility monitor's EVEN-doc-half training pass, cached with the
-    * same session-keyed lifecycle (it cannot reuse the full-corpus merges
-    * above — held-out scoring requires training to never see the odd
-    * half). Bench bills the build as its own `bpe_fertility_train` entry
-    * so `tokenizer_fertility` reads score-only. */
-  private[graft] def sharedBpeMergesEven(s: SparkSession, dir: String): Seq[(String, String)] = {
-    val sessKey = installEvictionListener(s)
-    bpeCache.computeIfAbsent(s"$sessKey#$dir#even", _ =>
-      graft.operators.Bpe.train(
-          Tables.documents(s, dir).where(col("doc_id") % 2 === 0),
-          "text", numMerges = 10)
-        .collect().map(r => (r.getString(1), r.getString(2))).toSeq)
-  }
-
-  /** Bench hooks: drop + rebuild the even-half merge cache so its train
-    * cost lands in exactly one labeled bench entry (the shared-CC/spans
-    * honesty pattern). */
-  private[graft] def resetSharedBpeEven(): Unit =
-    bpeCache.keySet.removeIf(_.endsWith("#even"))
-  private[graft] def buildSharedBpeEven(s: SparkSession, dir: String): Unit = {
-    sharedBpeMergesEven(s, dir); ()
-  }
-
-  /** ONE layered-edge materialization shared by the graph-ANN family:
-    * `ann_hnsw` and `hnsw_recall` search the IDENTICAL graph (same
-    * corpus, same knobs — the recall harness measures the same search
-    * brute force is compared against), so each paying the bucket-join +
-    * top-m edge build separately is pure waste (the CC/spans reuse
-    * argument). Keyed by (session, dir); `localCheckpoint` truncates the
-    * build so reuse is a flat scan; Bench bills the build once as the
-    * labeled `hnsw_edges_shared` entry. */
-  private[graft] val hnswEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private[graft] def hnswEdgesFrame(s: SparkSession, dir: String,
-      planes: Int): DataFrame =
-    Hnsw.knnEdges(Tables.embeddings(s, dir), "vec_id", "embedding",
-      dim = 64, m = 8, maxLevel = 3, planes = planes, tables = 4)
-
-  private[graft] def sharedHnswEdges(s: SparkSession, dir: String): DataFrame = {
-    val sessKey = installEvictionListener(s)
-    hnswEdgeCache.computeIfAbsent(s"$sessKey#$dir", _ =>
-      hnswEdgesFrame(s, dir, planes = 4).localCheckpoint())
-  }
-  private[graft] def resetSharedHnswEdges(): Unit =
-    hnswEdgeCache.keySet.removeIf(!_.endsWith("#auto"))
-  private[graft] def buildSharedHnswEdges(s: SparkSession, dir: String): Unit = {
-    sharedHnswEdges(s, dir); ()
-  }
-
-  /** The AutoPlanes twin of [[sharedHnswEdges]]: the production-shape
-    * gate entry's edge graph (stats-derived plane count), cached with
-    * the same lifecycle and billed once as the labeled
-    * `hnsw_auto_edges_shared` bench entry so `ann_hnsw_auto` reads
-    * search-only like its fixed-shape siblings. */
-  private[graft] def sharedHnswAutoEdges(s: SparkSession, dir: String): DataFrame = {
-    val sessKey = installEvictionListener(s)
-    hnswEdgeCache.computeIfAbsent(s"$sessKey#$dir#auto", _ =>
-      hnswEdgesFrame(s, dir, planes = graft.operators.Dedup.AutoPlanes)
-        .localCheckpoint())
-  }
-  private[graft] def resetSharedHnswAutoEdges(): Unit =
-    hnswEdgeCache.keySet.removeIf(_.endsWith("#auto"))
-  private[graft] def buildSharedHnswAutoEdges(s: SparkSession, dir: String): Unit = {
-    sharedHnswAutoEdges(s, dir); ()
-  }
-
-  /** ONE pinned two-slice (key, value) histogram shared by the
-    * value-shift monitor family (round 18): `ks_value_shift`,
-    * `ranksum_shift` and `median_shift` run over the IDENTICAL
-    * (events, event_type, cents, final-week) arguments — the magnitude /
-    * direction / value-unit read-outs of one monitoring decision — so
-    * each building its own pinned histogram tripled the family's corpus
-    * scans (and pin jobs). Same lifecycle as the CC/spans caches; Bench
-    * bills the build once as the labeled `twoslice_hist_shared` entry
-    * and each monitor reports incremental (window + rollup) cost. */
-  private[graft] val histCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private[graft] def twoSliceHistPlanFrame(s: SparkSession, dir: String): DataFrame =
-    Validate.twoSliceHistogramByDayFrame(weekValuedEvents(s, dir),
-      "event_type", col("cents"), col("__day"), 7)
-  private[graft] def sharedTwoSliceHist(s: SparkSession, dir: String): DataFrame = {
-    val sessKey = installEvictionListener(s)
-    histCache.computeIfAbsent(s"$sessKey#$dir", _ =>
-      Validate.twoSliceHistogramByDay(weekValuedEvents(s, dir),
-        "event_type", col("cents"), col("__day"), 7))
-  }
-  private[graft] def resetSharedTwoSliceHist(): Unit = histCache.clear()
-  private[graft] def buildSharedTwoSliceHist(s: SparkSession, dir: String): Unit = {
-    sharedTwoSliceHist(s, dir); ()
-  }
-
-  /** ONE contaminated-span materialization shared by the
-    * decontamination span family (round 18): `decon_spans` returns it
-    * and `decon_span_clean` splices by it — the
-    * dup_passages/dup_passage_clean precedent exactly (same window
-    * census, different final transform). Keyed by (session, dir);
-    * Bench bills the build once as the labeled `decon_spans_shared`
-    * entry. */
-  private[graft] val deconSpansCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private[graft] def deconSpansFrame(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    graft.operators.Decontaminate.contaminatedSpans(
-      docs.where(pmod(col("doc_id"), lit(50)) =!= 0), "doc_id", "text",
-      docs.where(pmod(col("doc_id"), lit(50)) === 0), "doc_id", "text", w = 4)
-  }
-  private[graft] def sharedDeconSpans(s: SparkSession, dir: String): DataFrame = {
-    val sessKey = installEvictionListener(s)
-    deconSpansCache.computeIfAbsent(s"$sessKey#$dir", _ =>
-      deconSpansFrame(s, dir).localCheckpoint())
-  }
-  private[graft] def resetSharedDeconSpans(): Unit = deconSpansCache.clear()
-  private[graft] def buildSharedDeconSpans(s: SparkSession, dir: String): Unit = {
-    sharedDeconSpans(s, dir); ()
-  }
-
-  /** ONE pinned brute-force exact top-k ranking shared by the ANN
-    * recall harnesses (round 18): `ivf_recall`, `hnsw_recall`,
-    * `binary_recall` and `pq_recall` all compare their probe against
-    * the IDENTICAL exact ground truth (first-20-queries cosine top-5 —
-    * the deliberately-quadratic pass), so each recomputing it paid the
-    * ground truth once per harness per pass. The realistic deployment
-    * shape is exactly this cache: one ground-truth table amortized over
-    * a knob-tuning sweep. `cosine_topk` (the brute-force operator's own
-    * gate entry) stays independent and still computes from inputs.
-    * Bench bills the build once as the labeled `brute_topk_shared`
-    * entry. */
-  private[graft] val bruteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private[graft] def bruteTopkPlanFrame(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    Similarity.bruteForceTopK(emb.where(col("vec_id") < 20), emb, k = 5)
-  }
-  private[graft] def sharedBruteTopK(s: SparkSession, dir: String): DataFrame = {
-    val sessKey = installEvictionListener(s)
-    bruteCache.computeIfAbsent(s"$sessKey#$dir", _ =>
-      bruteTopkPlanFrame(s, dir).localCheckpoint())
-  }
-  private[graft] def resetSharedBruteTopK(): Unit = bruteCache.clear()
-  private[graft] def buildSharedBruteTopK(s: SparkSession, dir: String): Unit = {
-    sharedBruteTopK(s, dir); ()
-  }
-
-  /** Drop one session's cached shared-stage frames (the listener's
-    * target; checkpoint blocks die with the session's context). */
-  private[graft] def evictSharedCc(sessKey: String): Unit = {
-    ccCache.keySet.removeIf(_.startsWith(sessKey + "#"))
-    spansCache.keySet.removeIf(_.startsWith(sessKey + "#"))
-    bpeCache.keySet.removeIf(_.startsWith(sessKey + "#"))
-    hnswEdgeCache.keySet.removeIf(_.startsWith(sessKey + "#"))
-    unigramCache.keySet.removeIf(_.startsWith(sessKey + "#"))
-    histCache.keySet.removeIf(_.startsWith(sessKey + "#"))
-    bruteCache.keySet.removeIf(_.startsWith(sessKey + "#"))
-    deconSpansCache.keySet.removeIf(_.startsWith(sessKey + "#"))
-    ccListenerInstalled.remove(sessKey)
-  }
-
-  private[graft] def sharedCcKeyOf(s: SparkSession): String =
-    System.identityHashCode(s).toString
-  private[graft] def sharedCcSize: Int = ccCache.size
-
-  /** Bench hook (VERDICT r8 #3): clear the cache, then time the shared
-    * pair→CC build EXPLICITLY — `localCheckpoint` is eager, so the cost
-    * lands here, making the survivor queries' own numbers interpretable
-    * as incremental cost over one visible `cc_shared_build` entry. */
-  private[graft] def resetSharedCc(): Unit = ccCache.clear()
-  private[graft] def buildSharedCc(s: SparkSession, dir: String): Unit = {
-    sharedJaccardComponents(s, dir); ()
-  }
-  private[graft] def sharedSpansSize: Int = spansCache.size
-  private[graft] def resetSharedSpans(): Unit = spansCache.clear()
-  private[graft] def sharedBpeSize: Int = bpeCache.size
-  private[graft] def buildSharedBpe(s: SparkSession, dir: String): Unit = {
-    sharedBpeMerges(s, dir); ()
-  }
-  private[graft] def buildSharedSpans(s: SparkSession, dir: String): Unit = {
-    sharedPassageSpans(s, dir); ()
-  }
 
   /** Recall combinator shared by the recall harnesses (`ivf_recall` /
     * `binary_recall` / …, and `lsh_recall` via the key/name overrides):

@@ -32,9 +32,14 @@ object VectorOps {
     * candidate score, r19): Σ a(i)·codes(i) ascending — the same
     * doubles in the same fold order as the HOF formulation
     * `aggregate(zip_with(a, cast(codes as array<double>), *), 0.0, +)`
-    * it replaces, without the two per-row array materializations. */
+    * it replaces, without the two per-row array materializations.
+    * Vectors and codes of different lengths throw: a silent truncation
+    * would score a corrupt row as a plausible candidate. */
   def dotCodes(a: ArrayData, af: Boolean, codes: ArrayData): Double = {
-    val n = math.min(a.numElements(), codes.numElements())
+    val n = a.numElements()
+    if (codes.numElements() != n)
+      throw new IllegalArgumentException(
+        s"dot_codes: vector length $n != codes length ${codes.numElements()}")
     var s = 0.0; var i = 0
     while (i < n) { s += get(a, i, af) * codes.getInt(i); i += 1 }
     s

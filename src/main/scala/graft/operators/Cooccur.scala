@@ -45,7 +45,7 @@ object Cooccur {
     // degree table); without materialization the distinct + user-keyed
     // window re-executes per consumer (the plan audit counted 11
     // shuffles for a documented-4 shape). localCheckpoint pins the
-    // ≤D-per-user result once — the sharedJaccardComponents precedent.
+    // ≤D-per-user result once — the ccSharedBuild precedent.
     val capped = ui
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col("u")).orderBy(rank.asc, col("item").asc)))

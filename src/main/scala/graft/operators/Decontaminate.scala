@@ -111,12 +111,6 @@ object Decontaminate {
     bos.toByteArray
   }
 
-  /** Serialized Bloom filter over the benchmark's distinct shingle
-    * hashes. */
-  def shingleBloom(benchmark: DataFrame, benchTextCol: String, n: Int = 3,
-      fpp: Double = 0.01): Array[Byte] =
-    bloomOf(benchShingleHashes(benchmark, benchTextCol, n), fpp)
-
   /** [[flag]] with a BLOOM prefilter — for when the benchmark outgrows
     * [[flag]]'s broadcast-the-exact-hash-set plan. The exact set costs
     * 64 bits per shingle; the Bloom costs ~10 bits at fpp=1% (~6×), so

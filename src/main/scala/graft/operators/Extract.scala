@@ -152,13 +152,4 @@ object Extract {
         isoTimestamp(col("timestamp")).as("original_timestamp")) ++
         keep.map(col): _*)
   }
-
-  /** Vector width validation against the target DDL's `VECTOR(FLOAT, 128)`
-    * (`CONFIGURATION.md:109`) — Spark has no fixed-length vector type, so
-    * enforce with a predicate; `strict=false` nulls out bad vectors
-    * instead of dropping rows. */
-  def validateVectorDim(df: DataFrame, col: String,
-      dim: Int = Schemas.EmbeddingDim, strict: Boolean = true): DataFrame =
-    if (strict) df.where(size(df(col)) === dim)
-    else df.withColumn(col, when(size(df(col)) === dim, df(col)))
 }

@@ -170,8 +170,6 @@ object FileStats {
       ColRange(col, Some(BigDecimal(v)), Some(BigDecimal(v)))
     def atLeast(col: String, v: Long): ColRange =
       ColRange(col, lo = Some(BigDecimal(v)))
-    def atMost(col: String, v: Long): ColRange =
-      ColRange(col, hi = Some(BigDecimal(v)))
     def between(col: String, lo: Long, hi: Long): ColRange =
       ColRange(col, Some(BigDecimal(lo)), Some(BigDecimal(hi)))
     def strEq(col: String, v: String): ColRange = {

@@ -285,11 +285,6 @@ object TimeSeries {
       keyCol: String): DataFrame =
     trendOver(zeroFilledDays(events, tsCol, keyCol))
 
-  /** [[trendSlopeMilli]] over a pre-aggregated `(key, day, n)` table —
-    * the [[DailyCounts]] profile path. */
-  def trendSlopeFromDaily(daily: DataFrame): DataFrame =
-    trendOver(zeroFilledFromDaily(daily))
-
   /** Day-of-week traffic profile per key over the ZERO-FILLED axis —
     * WHICH days carry the weekly cycle [[autocorrMilli]] detects:
     * per (key, weekday) the observed axis-day count, exact mean daily
@@ -304,11 +299,6 @@ object TimeSeries {
   def dowProfile(events: DataFrame, tsCol: String,
       keyCol: String): DataFrame =
     dowProfileOver(zeroFilledDays(events, tsCol, keyCol))
-
-  /** [[dowProfile]] over a pre-aggregated `(key, day, n)` table — the
-    * [[DailyCounts]] profile path. */
-  def dowProfileFromDaily(daily: DataFrame): DataFrame =
-    dowProfileOver(zeroFilledFromDaily(daily))
 
   private def dowProfileOver(filled: DataFrame): DataFrame =
     filled

@@ -265,7 +265,7 @@ private[graft] object TierAnn extends Registry {
       // (labeled brute_topk_shared build) — the quadratic pass no
       // longer re-runs per harness.
       recallVsExact(
-        sharedBruteTopK(s, dir),
+        bruteTopkShared(s, dir),
         Ivf.ivfTopK(queries, emb, k = 5, centroids = seeds, nprobe = 2))
     }),
 
@@ -311,7 +311,7 @@ private[graft] object TierAnn extends Registry {
     "ann_hnsw" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Hnsw.searchTopK(emb.where(col("vec_id") < 20), emb,
-        sharedHnswEdges(s, dir), k = 5, maxLevel = 3, beam = 16, rounds = 3)
+        hnswEdgesShared(s, dir), k = 5, maxLevel = 3, beam = 16, rounds = 3)
     }),
 
     // The PRODUCTION shape of ann_hnsw: the SRP candidate generator's
@@ -329,7 +329,7 @@ private[graft] object TierAnn extends Registry {
     "ann_hnsw_auto" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Hnsw.searchTopK(emb.where(col("vec_id") < 20), emb,
-        sharedHnswAutoEdges(s, dir), k = 5, maxLevel = 3,
+        hnswAutoEdgesShared(s, dir), k = 5, maxLevel = 3,
         beam = 16, rounds = 3)
     }),
 
@@ -357,8 +357,8 @@ private[graft] object TierAnn extends Registry {
       val emb = Tables.embeddings(s, dir)
       val queries = emb.where(col("vec_id") < 20)
       recallVsExact(
-        sharedBruteTopK(s, dir),
-        Hnsw.searchTopK(queries, emb, sharedHnswEdges(s, dir), k = 5,
+        bruteTopkShared(s, dir),
+        Hnsw.searchTopK(queries, emb, hnswEdgesShared(s, dir), k = 5,
           maxLevel = 3, beam = 16, rounds = 3))
     }),
 
@@ -380,7 +380,7 @@ private[graft] object TierAnn extends Registry {
       val emb = Tables.embeddings(s, dir)
       val queries = emb.where(col("vec_id") < 20)
       recallVsExact(
-        sharedBruteTopK(s, dir),
+        bruteTopkShared(s, dir),
         Similarity.binaryRerankTopK(queries, emb, k = 5, dim = 64,
           candidates = 30))
     }),
@@ -393,7 +393,7 @@ private[graft] object TierAnn extends Registry {
       val queries = emb.where(col("vec_id") < 20)
       val cb = Pq.seedCodebooks(emb, m = 8, ksub = 16)
       recallVsExact(
-        sharedBruteTopK(s, dir),
+        bruteTopkShared(s, dir),
         Pq.pqRerankTopK(queries, emb, k = 5, codebooks = cb,
           candidates = 30))
     }),

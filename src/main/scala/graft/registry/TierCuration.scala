@@ -219,7 +219,7 @@ private[graft] object TierCuration extends Registry {
     // split_by_component closes. Reports component and member-pair
     // counts per split pair.
     "split_leakage" -> ((s, dir) => {
-      val comp = sharedJaccardComponents(s, dir)
+      val comp = ccSharedBuild(s, dir)
         .select(col("id").as("doc_id"), col("label"))
       val assigned = Tables.documents(s, dir).select(col("doc_id"))
         .join(comp, Seq("doc_id"), "left")

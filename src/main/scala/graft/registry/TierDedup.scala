@@ -110,7 +110,7 @@ private[graft] object TierDedup extends Registry {
     // exact-substring dedup): merged character ranges covered by 8-token
     // windows occurring ≥2× corpus-wide — the locate/merge transform the
     // aggregate-only repeated_spans can't do.
-    "dup_passages" -> ((s, dir) => sharedPassageSpans(s, dir)),
+    "dup_passages" -> ((s, dir) => passageSpansShared(s, dir)),
 
     // End-to-end passage REMOVAL: splice the merged spans out with the
     // codegen'd aggregate-HOF (Dedup.removeSpans). The oracle derives the
@@ -118,7 +118,7 @@ private[graft] object TierDedup extends Registry {
     // the driver cross-checks the splice against arithmetic it never ran.
     "dup_passage_clean" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val spans = sharedPassageSpans(s, dir)
+      val spans = passageSpansShared(s, dir)
         .groupBy("doc_id")
         .agg(sort_array(collect_list(struct(col("span_start"), col("span_end"))))
             .as("spans"),
@@ -136,14 +136,14 @@ private[graft] object TierDedup extends Registry {
     // family pays the iterative CC driver loop once, not per policy.
     "dedup_survivors" -> ((s, dir) =>
       Dedup.survivorsFromComponents(Tables.documents(s, dir), "doc_id",
-          sharedJaccardComponents(s, dir))
+          ccSharedBuild(s, dir))
         .select("doc_id", "source", "lang", "n_chars")),
 
     // Quality-policy dedup: same clusters as dedup_survivors, but the
     // LONGEST member (n_chars, tie: min id) survives each cluster.
     "dedup_survivors_best" -> ((s, dir) =>
       Dedup.survivorsFromComponentsBest(Tables.documents(s, dir), "doc_id",
-          "n_chars", sharedJaccardComponents(s, dir))
+          "n_chars", ccSharedBuild(s, dir))
         .select("doc_id", "source", "lang", "n_chars")),
 
     // Crawl-refresh census: per source, how many of the "new" (odd-id)
@@ -166,7 +166,7 @@ private[graft] object TierDedup extends Registry {
     // over the |docs|-sized label table; the corpus is never rescanned.
     "dup_cluster_sizes" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val cc = sharedJaccardComponents(s, dir)
+      val cc = ccSharedBuild(s, dir)
       docs.join(cc, col("doc_id") === col("id"), "left")
         .select(coalesce(col("label"), col("doc_id")).as("component"))
         .groupBy("component").agg(count(lit(1)).as("cluster_size"))
@@ -194,7 +194,7 @@ private[graft] object TierDedup extends Registry {
     // r18: the span table is computed once and shared with
     // decon_span_clean (the dup_passages family pattern); Bench bills
     // the build as the labeled `decon_spans_shared` entry.
-    "decon_spans" -> ((s, dir) => sharedDeconSpans(s, dir)),
+    "decon_spans" -> ((s, dir) => deconSpansShared(s, dir)),
 
     // End-to-end span REMOVAL for the contaminated passages: splice the
     // located spans out with the codegen'd aggregate-HOF (removeSpans).
@@ -204,7 +204,7 @@ private[graft] object TierDedup extends Registry {
     "decon_span_clean" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val corpus = docs.where(pmod(col("doc_id"), lit(50)) =!= 0)
-      val spans = sharedDeconSpans(s, dir)
+      val spans = deconSpansShared(s, dir)
         .groupBy("doc_id")
         .agg(sort_array(collect_list(struct(col("span_start"), col("span_end"))))
             .as("spans"),
@@ -339,7 +339,7 @@ private[graft] object TierDedup extends Registry {
     // contamination channel a per-doc split leaves open even after
     // source-level splitting.
     "split_by_component" -> ((s, dir) => {
-      val comp = sharedJaccardComponents(s, dir)
+      val comp = ccSharedBuild(s, dir)
         .select(col("id").as("doc_id"), col("label"))
       Tables.documents(s, dir).join(comp, Seq("doc_id"), "left")
         .select(col("doc_id"),

@@ -187,21 +187,21 @@ private[graft] object TierMonitor extends Registry {
     // slice arguments, one corpus scan for the family; Bench bills the
     // build as the labeled `twoslice_hist_shared` entry.
     "ks_value_shift" -> ((s, dir) =>
-      Validate.ksTwoSliceFromHistogram(sharedTwoSliceHist(s, dir))
+      Validate.ksTwoSliceFromHistogram(twosliceHistShared(s, dir))
         .withColumnRenamed("key", "event_type")),
 
     // Mann–Whitney common-language effect size on the same slice split:
     // the DIRECTION companion to ks_value_shift's magnitude — permille
     // probability this week's values run higher (500 = no shift).
     "ranksum_shift" -> ((s, dir) =>
-      Validate.rankSumAucFromHistogram(sharedTwoSliceHist(s, dir))
+      Validate.rankSumAucFromHistogram(twosliceHistShared(s, dir))
         .withColumnRenamed("key", "event_type")),
 
     // Exact lower-median per slice and the shift in raw cents — the
     // value-unit magnitude a human acts on, completing the two-slice
     // triad (KS distance, AUC direction, median shift).
     "median_shift" -> ((s, dir) =>
-      Validate.medianShiftFromHistogram(sharedTwoSliceHist(s, dir))
+      Validate.medianShiftFromHistogram(twosliceHistShared(s, dir))
         .withColumnRenamed("key", "event_type")),
 
     // Exact OLS trend of daily event volume per type (milli events/day

@@ -178,7 +178,7 @@ private[graft] object TierText extends Registry {
     "bpe_encode" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       Bpe.encodeViaVocab(docs, "doc_id", "text",
-        Bpe.vocabulary(docs, "text", sharedBpeMerges(s, dir)))
+        Bpe.vocabulary(docs, "text", bpeMergesShared(s, dir)))
     }),
 
     // Unigram-LM (SentencePiece-style) tokenizer training — the second
@@ -197,7 +197,7 @@ private[graft] object TierText extends Registry {
     // unigram_train's own entry).
     "unigram_encode" -> ((s, dir) =>
       graft.operators.Unigram.encodeViaVocab(Tables.documents(s, dir),
-        "doc_id", "text", sharedUnigramCounts(s, dir))),
+        "doc_id", "text", unigramVocabShared(s, dir))),
 
     // Held-out unigram quality — the BPE fertility monitor's twin:
     // train on the even-doc half, score the odd half; words carrying a
@@ -209,7 +209,7 @@ private[graft] object TierText extends Registry {
       val test = docs.where(col("doc_id") % 2 === 1)
       graft.operators.Unigram.fertilityReport(test, "text", "source",
         Bpe.wordFrequencies(train, "text").select("w"),
-        sharedUnigramEven(s, dir))
+        unigramFertilityTrain(s, dir))
     }),
 
     // Held-out tokenizer quality: train BPE on the even-doc half, score
@@ -223,7 +223,7 @@ private[graft] object TierText extends Registry {
       val docs = Tables.documents(s, dir)
       val train = docs.where(col("doc_id") % 2 === 0)
       val test = docs.where(col("doc_id") % 2 === 1)
-      val merges = sharedBpeMergesEven(s, dir)
+      val merges = bpeFertilityTrain(s, dir)
       val segmented = Bpe.vocabulary(test, "text", merges)
       val trainWords = Bpe.wordFrequencies(train, "text").select(col("w"))
         .withColumn("__seen", lit(true))

@@ -67,4 +67,13 @@ class VectorOpsSpec extends SparkSpecBase {
       .collect()
       .foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
   }
+
+  test("dotCodes fails loud on a vector/codes length mismatch") {
+    val df = Seq((Seq(0.5, -1.0, 2.0), Seq(1, 2))).toDF("qp", "codes")
+    val e = intercept[Exception](
+      df.select(F.dotCodes(col("qp"), col("codes"))).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(msgs.contains("vector length 3 != codes length 2"), msgs)
+  }
 }
