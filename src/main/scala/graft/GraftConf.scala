@@ -22,8 +22,9 @@ object GraftConf {
     // to amortize task overhead, small enough that one split's rows +
     // shuffle state fit executor memory comfortably.
     "spark.sql.files.maxPartitionBytes" -> (128L * 1024 * 1024).toString,
-    // Dynamic partition overwrite: partitioned sinks (the hash-bucketed
-    // merge target) replace only written partitions.
+    // Dynamic partition overwrite: partitioned overwrites (the staged
+    // batch's `source=` partitions, a caller's `partitionBy` output)
+    // replace only the partitions they write.
     "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
     // Parquet writers: snappy matches the reference's staging compression
     // (embeddings-pipeline.py:255).

@@ -42,17 +42,16 @@ object Pipeline {
       fallbackDate: Timestamp = Timestamp.valueOf("2024-01-01 00:00:00"),
       mainRefcoMaxLength: Int = graft.schema.Schemas.MainRefcoMaxLength,
       cleanupStaging: Boolean = true,
-      /** > 0 ⇒ hash-bucket-partitioned target with partition-pruned
-        * incremental merges (only touched buckets read + rewritten — the
-        * 100 TB layout); 0 ⇒ snapshot-pointer rewrite of the whole
-        * target. */
+      /** > 0 ⇒ manifest-bucketed target
+        * ([[graft.operators.Upsert.mergeIntoManifestBucketedParquet]]):
+        * each run reads and rewrites only the touched buckets and commits
+        * with one atomic manifest publish — the 100 TB layout; 0 ⇒
+        * snapshot-pointer rewrite of the whole target. */
       mergeBuckets: Int = 0,
-      /** With mergeBuckets > 0: commit each run via the immutable-file
-        * manifest layout ([[graft.operators.Upsert.mergeIntoManifestBucketedParquet]])
-        * — incremental bucket rewrite AND atomic object-store-safe
-        * publish, no torn window. false keeps the dynamic-partition-
-        * overwrite layout (torn runs detected via `_merge_manifest`). */
-      manifestCommit: Boolean = false,
+      /** Selects no writer: bucketed targets are always manifest-committed.
+        * `false` with `mergeBuckets > 0` named the removed
+        * dynamic-partition-overwrite layout and is refused by [[run]]. */
+      manifestCommit: Boolean = true,
       /** Enforce the target DDL's fixed vector width `VECTOR(FLOAT, dim)`
         * (`CONFIGURATION.md:109`): ragged vectors are quarantined
         * (`bad_vector_dim`) instead of flowing into a target that would
@@ -107,6 +106,10 @@ object Pipeline {
       cjkUnmapped: Long = 0L)
 
   def run(spark: SparkSession, conf: Config): RunStats = {
+    require(conf.mergeBuckets <= 0 || conf.manifestCommit,
+      "mergeBuckets > 0 with manifestCommit = false asks for the " +
+        "hash-bucketed dynamic-partition-overwrite layout, which was " +
+        "removed: bucketed targets are always manifest-committed")
     // F2 rides the scan: the reference's Mongo query filters empty
     // embeddings server-side. The JSON path additionally keeps malformed
     // lines alive (flag `__malformed`) so they reach the quarantine count
@@ -205,13 +208,8 @@ object Pipeline {
     val observed = withDim.observe(unique, count(lit(1)).as("n"))
 
     // J3: idempotent merge (cleaned_ref inserted but never updated)
-    if (conf.mergeBuckets > 0 && conf.manifestCommit)
+    if (conf.mergeBuckets > 0)
       Upsert.mergeIntoManifestBucketedParquet(spark, conf.targetPath, observed,
-        keys = Seq("main_refco"), nBuckets = conf.mergeBuckets,
-        insertOnlyCols = Set("cleaned_ref"),
-        refreshExprs = Map("embedding_inserted_at" -> current_timestamp()))
-    else if (conf.mergeBuckets > 0)
-      Upsert.mergeIntoHashBucketedParquet(spark, conf.targetPath, observed,
         keys = Seq("main_refco"), nBuckets = conf.mergeBuckets,
         insertOnlyCols = Set("cleaned_ref"),
         refreshExprs = Map("embedding_inserted_at" -> current_timestamp()))

@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions.col
   * `keysPath` is a Parquet/JSON key list (one column, `--key-col`).
   * Target layout is auto-detected: a manifest-bucketed target
   * (`--merge-buckets` must match the merge's bucket count) erases via the
-  * bucket-pruned rewrite; otherwise the snapshot-pointer predicate delete
-  * runs. Ordering matters for crash-safety: the TARGET commits first
+  * bucket-pruned rewrite; otherwise the snapshot-pointer key delete runs
+  * (it refuses a legacy hash-bucketed directory rather than adopt it).
+  * Ordering matters for crash-safety: the TARGET commits first
   * (atomic pointer publish), then the index maintenance jobs — a crash in
   * between leaves indexes over-complete, which a re-run fixes
   * (every step is idempotent), and probes against a stale index only ever
@@ -60,27 +61,11 @@ object RunErasure {
           val p = new org.apache.hadoop.fs.Path(target, s"$snap.manifest.json")
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
         }
-      // A pointer-less dir of __bucket= partitions is the hash-bucketed
-      // (dynamic-overwrite) layout — the plain delete's legacy adoption
-      // would silently convert it to the snapshot layout and break its
-      // merge contract, so it gets its own bucket-pruned path.
-      val isHashBucketed = !isManifest && {
-        val root = new org.apache.hadoop.fs.Path(target)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.exists(root) &&
-          operators.Upsert.currentSnapshot(spark, target).isEmpty &&
-          fs.listStatus(root).exists(st =>
-            st.isDirectory && st.getPath.getName.startsWith("__bucket="))
-      }
       val nBuckets = opts.get("--merge-buckets").map(_.toInt).getOrElse(256)
       if (isManifest) {
         operators.Upsert.deleteKeysFromManifestBucketedParquet(
           spark, target, keys, Seq(keyCol), nBuckets, keep)
         System.err.println(s"[erasure] manifest target: erased keys from $target")
-      } else if (isHashBucketed) {
-        operators.Upsert.deleteKeysFromHashBucketedParquet(
-          spark, target, keys, Seq(keyCol), nBuckets)
-        System.err.println(s"[erasure] hash-bucketed target: erased keys from $target")
       } else {
         val removed = operators.Upsert.deleteKeysFromParquet(spark, target,
           keys, Seq(keyCol), keepSnapshots = keep)

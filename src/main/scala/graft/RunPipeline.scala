@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   *   spark-submit --class graft.RunPipeline <jar> \
   *     <sourcePath> <targetPath> <statePath> <stagingPath> \
   *     [--dims <sourcesConfigPath>] [--fallback '2024-01-01 00:00:00'] \
-  *     [--merge-buckets 256] [--manifest-commit true] [--format json] \
+  *     [--merge-buckets 256] [--format json] \
   *     [--ivf-index <indexPath>] [--ivf-nlist 16] [--retries 3] \
   *     [--quality 'rule:sql_predicate;...'] [--quality-budgets 'rule=5;...']
   * }}}
@@ -65,7 +65,6 @@ object RunPipeline {
         fallbackDate = opts.get("--fallback").map(Timestamp.valueOf)
           .getOrElse(Timestamp.valueOf("2024-01-01 00:00:00")),
         mergeBuckets = opts.get("--merge-buckets").map(_.toInt).getOrElse(0),
-        manifestCommit = opts.get("--manifest-commit").exists(_.toBoolean),
         sourceFormat = opts.getOrElse("--format", "parquet"),
         ivfIndexPath = opts.get("--ivf-index"),
         ivfNlist = opts.get("--ivf-nlist").map(_.toInt).getOrElse(16),
@@ -148,8 +147,7 @@ object RunPipeline {
     * extra attempts. Each retry starts from the persisted state: the
     * watermarks of a failed run were never advanced, and a half-written
     * merge is invisible behind the snapshot/manifest pointer (the retry
-    * simply re-merges); the bucketed dynamic-overwrite path detects torn
-    * runs via `_merge_manifest` and is idempotently rewritten. */
+    * simply re-merges). */
   def runWithRetries(spark: SparkSession, conf: Pipeline.Config,
       retries: Int,
       runFn: (SparkSession, Pipeline.Config) => Pipeline.RunStats = Pipeline.run)

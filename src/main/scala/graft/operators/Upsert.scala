@@ -163,13 +163,18 @@ object Upsert {
     * `snap-000000000` and a pointer to it is published, so the merge that
     * follows sees them as the current snapshot. Idempotent: a crash
     * mid-adoption leaves loose files that the retry keeps moving; the
-    * pointer is only published once everything is inside the snapshot. */
+    * pointer is only published once everything is inside the snapshot.
+    * A legacy hash-bucketed directory is refused, not adopted (see
+    * [[refuseForeignLayout]]). A committed target returns before any
+    * listing. */
   private def adoptLegacyTarget(fs: org.apache.hadoop.fs.FileSystem,
       hadoopConf: org.apache.hadoop.conf.Configuration,
       targetPath: String): Unit = {
     val root = new Path(targetPath)
     if (!fs.exists(root) || fs.exists(pointerPath(targetPath))) return
-    val legacy = fs.listStatus(root).filter { st =>
+    val listing = fs.listStatus(root)
+    refuseForeignLayout(targetPath, listing, manifestWriter = false)
+    val legacy = listing.filter { st =>
       val n = st.getPath.getName
       !n.startsWith("_") && !n.startsWith(".") &&
         !(st.isDirectory && n.startsWith("snap-")) &&
@@ -189,6 +194,48 @@ object Upsert {
     }
     publishPointer(fs, hadoopConf, targetPath, "snap-000000000", "adopt")
   }
+
+  /** Refuse a merge target whose root holds a layout the calling writer
+    * cannot commit into. Committing anyway would publish a first snapshot
+    * or manifest holding only the batch, hiding every prior row:
+    *  - a legacy hash-bucketed directory — pointer-less `__bucket=<k>/`
+    *    partitions, written by the removed dynamic-partition-overwrite
+    *    merge — is refused by every writer (adoption skips `_` names);
+    *  - `snap-<n>/` directories ([[mergeIntoParquet]]'s layout) are
+    *    refused by the manifest writers.
+    * Both stay readable through [[readTarget]]. `listing` is the target
+    * root's listing; the manifest layout's own crash leftovers
+    * (`data/run-*`, manifest and pointer tmp files, `.commit` markers)
+    * pass. */
+  private def refuseForeignLayout(targetPath: String,
+      listing: Seq[org.apache.hadoop.fs.FileStatus],
+      manifestWriter: Boolean): Unit = {
+    def hasDir(prefix: String): Boolean = listing.exists(st =>
+      st.isDirectory && st.getPath.getName.startsWith(prefix))
+    if (hasDir("__bucket="))
+      throw new IllegalStateException(s"$targetPath is a legacy " +
+        "hash-bucketed directory (pointer-less __bucket=<k>/ partitions of " +
+        "the removed dynamic-partition-overwrite merge) and no writer " +
+        "accepts it: read it with Upsert.readTarget, then merge the rows " +
+        "into a fresh target")
+    if (manifestWriter && hasDir("snap-"))
+      throw new IllegalStateException(s"$targetPath is a snapshot-directory " +
+        "target (snap-<n>/ written by mergeIntoParquet); a manifest commit " +
+        "would hide its rows. Keep merging it with mergeIntoParquet, or " +
+        "read it with Upsert.readTarget and merge the rows into a fresh target")
+  }
+
+  /** Manifest-writer side of [[refuseForeignLayout]]: runs only while no
+    * manifest is committed (`manifest` empty), so a commit onto a live
+    * manifest table lists nothing extra. */
+  private def requireManifestLayout(spark: SparkSession, targetPath: String,
+      manifest: Map[Int, Seq[String]]): Unit =
+    if (manifest.isEmpty) {
+      val root = new Path(targetPath)
+      refuseForeignLayout(targetPath, listSafe(
+        root.getFileSystem(spark.sparkContext.hadoopConfiguration), root),
+        manifestWriter = true)
+    }
 
   /** Name of the committed live snapshot directory under `targetPath`
     * (e.g. `snap-000000003`), if a pointer has been published.
@@ -226,9 +273,9 @@ object Upsert {
 
   /** Read the committed state of a merge target: resolves the `_current`
     * pointer when present — to a manifest (manifest-bucketed layout) or a
-    * snapshot directory — otherwise reads `targetPath` directly (the
-    * hash-bucketed layout of [[mergeIntoHashBucketedParquet]], which has
-    * no pointer). */
+    * snapshot directory — otherwise reads `targetPath` directly (a
+    * legacy pointer-less directory, e.g. the `__bucket=<k>/` partitions
+    * no writer accepts any more: see [[refuseForeignLayout]]). */
   def readTarget(spark: SparkSession, targetPath: String): DataFrame =
     currentSnapshot(spark, targetPath) match {
       case Some(snap) =>
@@ -258,7 +305,7 @@ object Upsert {
     *   with [[snapshots]] / [[readTargetAt]] — at the cost of their storage.
     * @param evolveSchema additive schema evolution (see [[merge]]). Only
     *   offered on THIS layout: every snapshot is a full rewrite, so all
-    *   files of a snapshot share one schema. The bucketed layouts keep
+    *   files of a snapshot share one schema. The manifest layout keeps
     *   untouched buckets' files verbatim — evolving them would mix schemas
     *   within one table and force mergeSchema on every read; evolve via a
     *   one-off full rewrite instead. */
@@ -621,135 +668,6 @@ object Upsert {
     }.sorted
   }
 
-  /** MERGE into a hash-bucket-partitioned Parquet dataset, rewriting ONLY
-    * the partitions the batch touches — the incremental upgrade path
-    * SURVEY.md §7.4(2) calls out (a plain-Parquet MERGE is otherwise a
-    * full table rewrite per run).
-    *
-    * The target is laid out `__bucket=pmod(xxhash64(keys), nBuckets)/...`;
-    * a batch's distinct buckets (collected driver-side — at most
-    * `nBuckets` longs) prune both the target READ (partition filters: only
-    * affected directories are scanned) and the WRITE (dynamic partition
-    * overwrite replaces only written directories). Merge cost scales with
-    * the batch's bucket spread, not the target size: at 100 TB with
-    * nBuckets=4096 a 1%-spread batch reads and rewrites ~1% of the table.
-    * Trade-off vs [[mergeIntoParquet]]'s swap: per-partition overwrite is
-    * not atomic across buckets (a crash mid-write can leave a torn batch).
-    * A per-run manifest (`_merge_manifest.json`: batch id + touched bucket
-    * list, written atomically BEFORE the overwrite, cleared after) makes
-    * the torn window detectable: the next run refuses to proceed with a
-    * DIFFERENT batch while a manifest is pending, and re-running the SAME
-    * batch id is the deterministic recovery (the merge is idempotent —
-    * property-tested in UpsertSpec).
-    */
-  def mergeIntoHashBucketedParquet(
-      spark: SparkSession,
-      targetPath: String,
-      updates: DataFrame,
-      keys: Seq[String],
-      nBuckets: Int = 256,
-      insertOnlyCols: Set[String] = Set.empty,
-      refreshExprs: Map[String, org.apache.spark.sql.Column] = Map.empty,
-      batchId: String = "adhoc"): Unit = {
-    require(!updates.columns.contains("__bucket"), "updates must not carry __bucket")
-    val fs = new Path(targetPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new Path(targetPath))
-    val effN = hashBucketCount(spark, fs, targetPath, keys, nBuckets, writeIfAbsent = true)
-    val bucketOf = pmod(xxhash64(keys.map(col): _*), lit(effN)).cast("int")
-
-    pendingManifest(spark, targetPath).foreach { case (pendingBatch, _) =>
-      require(pendingBatch == batchId,
-        s"target $targetPath has a torn run: batch '$pendingBatch' crashed " +
-          s"mid-overwrite and batch '$batchId' is not its re-run. Re-run " +
-          "the pending batch (idempotent) or clear _merge_manifest.json.")
-    }
-
-    val withBucket = updates.withColumn("__bucket", bucketOf)
-    val touched = withBucket.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    writeManifest(fs, targetPath, batchId, touched.toIndexedSeq)
-
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // First write: the refresh columns (e.g. embedding_inserted_at) must
-      // be stamped here too — they exist on the target, not the updates.
-      val merged = if (!exists)
-        refreshExprs.foldLeft(withBucket) { case (df, (c, e)) => df.withColumn(c, e) }
-      else {
-        val target = spark.read.parquet(targetPath)
-          .where(col("__bucket").isin(touched.map(Integer.valueOf).toSeq: _*))
-        merge(target, withBucket, keys, insertOnlyCols, refreshExprs)
-      }
-      // key-sorted within each partition file: parquet min/max row-group
-      // statistics then prune key point-lookups inside a bucket too.
-      merged.sortWithinPartitions(keys.map(col): _*)
-        .write.mode("overwrite").option("compression", "snappy")
-        .partitionBy("__bucket").parquet(targetPath)
-      fs.delete(manifestPath(targetPath), false)
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
-
-  /** DELETE by key on a hash-bucketed (dynamic-partition-overwrite)
-    * target: rewrites only the buckets the keys hash to, under the same
-    * torn-run manifest protection as [[mergeIntoHashBucketedParquet]]. A
-    * bucket whose rows are all deleted has its partition directory
-    * removed explicitly (dynamic overwrite only replaces partitions
-    * PRESENT in the written output — an emptied bucket would otherwise
-    * silently keep its old files). */
-  def deleteKeysFromHashBucketedParquet(
-      spark: SparkSession,
-      targetPath: String,
-      deleteKeys: DataFrame,
-      keys: Seq[String],
-      nBuckets: Int = 256,
-      batchId: String = "erasure"): Unit = {
-    val fs = new Path(targetPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(targetPath))) return
-    pendingManifest(spark, targetPath).foreach { case (pendingBatch, _) =>
-      require(pendingBatch == batchId,
-        s"target $targetPath has a torn run: batch '$pendingBatch' crashed " +
-          s"mid-overwrite and batch '$batchId' is not its re-run.")
-    }
-    val effN = hashBucketCount(spark, fs, targetPath, keys, nBuckets, writeIfAbsent = false)
-    val delKeys = deleteKeys.select(keys.map(col): _*).distinct()
-      .withColumn("__bucket",
-        pmod(xxhash64(keys.map(col): _*), lit(effN)).cast("int"))
-    val touched = delKeys.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return
-    writeManifest(fs, targetPath, batchId, touched.toIndexedSeq)
-
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val target = spark.read.parquet(targetPath)
-        .where(col("__bucket").isin(touched.map(Integer.valueOf).toSeq: _*))
-      val remaining = antiJoinKeys(target, delKeys.drop("__bucket"), keys)
-        .localCheckpoint() // materialize BEFORE overwriting what it reads
-      val nonEmpty = remaining.select("__bucket").distinct()
-        .collect().map(_.getInt(0)).toSet
-      if (nonEmpty.nonEmpty)
-        remaining.sortWithinPartitions(keys.map(col): _*)
-          .write.mode("overwrite").option("compression", "snappy")
-          .partitionBy("__bucket").parquet(targetPath)
-      touched.filterNot(nonEmpty).foreach { b =>
-        fs.delete(new Path(targetPath, s"__bucket=$b"), true)
-      }
-      fs.delete(manifestPath(targetPath), false)
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
-
   // ------------------------------------------------------------------
   // Manifest-bucketed target: incremental merge + atomic commit TOGETHER.
   //
@@ -757,10 +675,8 @@ object Upsert {
   //   <targetPath>/snap-<id>.manifest.json   bucket -> [file paths]
   //   <targetPath>/_current                  pointer file (atomic replace)
   //
-  // mergeIntoHashBucketedParquet rewrites only touched buckets but its
-  // dynamic partition overwrite mutates live directories (torn window,
-  // detected via _merge_manifest). mergeIntoParquet commits atomically but
-  // rewrites the whole table. This layout does both: a run writes NEW
+  // mergeIntoParquet commits atomically but rewrites the whole table.
+  // This layout also rewrites only touched buckets: a run writes NEW
   // files for its touched buckets only, the new manifest re-points those
   // buckets while untouched buckets keep their existing file entries (no
   // data copied), and the commit is one pointer-file replace. Data files
@@ -1014,6 +930,7 @@ object Upsert {
     while (!committed) {
       val current = repairPointer(spark, targetPath)
       val manifest = readBucketManifestRaw(spark, targetPath, current)
+      requireManifestLayout(spark, targetPath, manifest)
       val effN = effectiveNBuckets(spark, targetPath, nBuckets)
       val withBucket = updates.withColumn("__bucket",
         pmod(xxhash64(keys.map(col): _*), lit(effN)).cast("int"))
@@ -1083,6 +1000,7 @@ object Upsert {
     while (!committed) {
       val current = repairPointer(spark, targetPath)
       val manifest = readBucketManifestRaw(spark, targetPath, current)
+      requireManifestLayout(spark, targetPath, manifest)
       val effN = effectiveNBuckets(spark, targetPath, nBuckets)
       val withBucket = rows.withColumn("__bucket",
         pmod(xxhash64(keys.map(col): _*), lit(effN)).cast("int"))
@@ -1996,6 +1914,7 @@ object Upsert {
     while (!committed) {
       val current = repairPointer(spark, targetPath)
       val manifest = readBucketManifestRaw(spark, targetPath, current)
+      requireManifestLayout(spark, targetPath, manifest)
       if (manifest.isEmpty) return
       val effN = effectiveNBuckets(spark, targetPath, nBuckets)
       val delKeys = deleteKeys.select(keys.map(col): _*).distinct()
@@ -2070,6 +1989,7 @@ object Upsert {
     while (!committed) {
       val current = repairPointer(spark, targetPath)
       val oldManifest = readBucketManifestRaw(spark, targetPath, current)
+      requireManifestLayout(spark, targetPath, oldManifest)
       if (oldManifest.isEmpty || oldManifest.values.forall(_.isEmpty)) return
       val read = readManifestTable(spark, targetPath)
       val table = newNBuckets match {
@@ -2198,157 +2118,5 @@ object Upsert {
         }
       }
     }
-  }
-
-  /** Effective bucket count of a hash-bucketed target. Persisted as
-    * `<targetPath>/_nbuckets` on first merge (underscore files are
-    * invisible to Spark's parquet reader); thereafter the stored value
-    * WINS over a mismatched argument — a wrong `--merge-buckets` on an
-    * erasure job would otherwise prune to the wrong buckets and silently
-    * leave keys unerased (ADVICE r7). Pre-round-8 targets without the
-    * file validate the argument against the on-disk partition dirs
-    * instead (every observed bucket id must fit under it). */
-  private def hashBucketCount(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, targetPath: String,
-      keys: Seq[String], passed: Int, writeIfAbsent: Boolean): Int = {
-    val meta = new Path(targetPath, "_nbuckets")
-    if (fs.exists(meta)) {
-      val stored = readFileBody(fs, meta).trim.toInt
-      if (stored != passed)
-        System.err.println(s"[graft] $targetPath was bucketed nBuckets=$stored; " +
-          s"ignoring mismatched argument $passed")
-      stored
-    } else {
-      val root = new Path(targetPath)
-      var validated = false
-      if (fs.exists(root)) {
-        val observed = fs.listStatus(root).toSeq.flatMap { st =>
-          val n = st.getPath.getName
-          if (st.isDirectory && n.startsWith("__bucket="))
-            Some(n.stripPrefix("__bucket=").toInt)
-          else None
-        }
-        require(observed.forall(_ < passed),
-          s"$targetPath holds bucket ids up to ${if (observed.isEmpty) -1
-            else observed.max} — nBuckets=$passed cannot be the count its " +
-            "merges used; pass the original bucket count")
-        // A too-LARGE wrong count also clears the check above but would
-        // compute key buckets with the wrong modulus — an erasure would
-        // then prune to the wrong directories and silently leave keys
-        // unerased (ADVICE r8). Verify on a row sample that the passed
-        // count reproduces the stored __bucket (a wrong multiple-of-true
-        // count mismatches each sampled row w.p. 1 − true/passed).
-        if (observed.nonEmpty) {
-          val bad = spark.read.parquet(targetPath).limit(2048)
-            .where(pmod(xxhash64(keys.map(col): _*), lit(passed)).cast("int")
-              =!= col("__bucket").cast("int")).count()
-          require(bad == 0,
-            s"$targetPath: nBuckets=$passed does not reproduce the stored " +
-              s"__bucket of $bad sampled rows — pass the original bucket count")
-          validated = true
-        }
-      }
-      if (writeIfAbsent || validated) {
-        // pin the (validated) count so later jobs cannot mis-specify it;
-        // dynamic overwrite never clears root-level _files
-        fs.mkdirs(root)
-        val out = fs.create(meta, true)
-        try out.write(passed.toString.getBytes("UTF-8")) finally out.close()
-      }
-      passed
-    }
-  }
-
-  private def manifestPath(targetPath: String): Path =
-    new Path(new Path(targetPath).getParent,
-      new Path(targetPath).getName + "._merge_manifest.json")
-
-  /** The pending (batchId, touched buckets) of a crashed hash-bucketed
-    * merge, if any — present only between a run's manifest write and its
-    * successful completion. */
-  def pendingManifest(spark: SparkSession, targetPath: String): Option[(String, Seq[Int])] = {
-    val p = manifestPath(targetPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val batch = "\"batch_id\"\\s*:\\s*\"([^\"]*)\"".r
-        .findFirstMatchIn(body).map(_.group(1)).getOrElse("")
-      val buckets = "\"buckets\"\\s*:\\s*\\[([^\\]]*)\\]".r
-        .findFirstMatchIn(body).map(_.group(1)).getOrElse("")
-        .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toIndexedSeq
-      Some((batch, buckets))
-    }
-  }
-
-  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem, targetPath: String,
-      batchId: String, buckets: Seq[Int]): Unit = {
-    val p = manifestPath(targetPath)
-    val tmp = new Path(p.toString + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"""{"batch_id":"$batchId","buckets":[${buckets.mkString(",")}]}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(tmp, p)
-  }
-
-  /** MERGE into a bucketed managed table — the co-located-join variant of
-    * [[mergeIntoParquet]] for the 100 TB case.
-    *
-    * The target is stored `bucketBy(numBuckets, keys)` on the merge key,
-    * so the merge's full-outer join reads the target pre-partitioned:
-    * ONLY the (small) incremental batch shuffles; the big target side has
-    * no Exchange in the plan. The rewrite preserves the bucketing, so
-    * every subsequent run gets the same co-location. (An overwrite still
-    * rewrites all buckets — that is inherent to plain Spark tables; the
-    * bucketing removes the per-run shuffle of the target, which at 1000
-    * executors is the dominating movement.)
-    */
-  def mergeIntoBucketedTable(
-      spark: SparkSession,
-      table: String,
-      updates: DataFrame,
-      keys: Seq[String],
-      numBuckets: Int = 64,
-      insertOnlyCols: Set[String] = Set.empty,
-      refreshExprs: Map[String, org.apache.spark.sql.Column] = Map.empty): Unit = {
-    def writeBucketed(df: DataFrame, mode: String, to: String): Unit =
-      df.write.mode(mode)
-        .bucketBy(numBuckets, keys.head, keys.tail: _*)
-        .sortBy(keys.head, keys.tail: _*)
-        .option("compression", "snappy")
-        .format("parquet")
-        .saveAsTable(to)
-
-    val swap = table + "_swap"
-    // Crash recovery (mirrors mergeIntoParquet's .old-swap restore): a
-    // failure between the swap DROP and RENAME below leaves the canonical
-    // name absent while the fully-merged snapshot sits in the swap table.
-    // Restore it BEFORE the first-write/merge decision — otherwise this
-    // run would treat the target as a first write and recreate it from
-    // the incremental batch alone, silently orphaning the merged data.
-    if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(swap))
-      spark.sql(s"ALTER TABLE $swap RENAME TO $table")
-
-    if (!spark.catalog.tableExists(table)) {
-      // First write: stamp refresh columns here — they exist only on the
-      // target side of a merge, and later merges expect them in the schema.
-      val stamped = refreshExprs.foldLeft(updates) {
-        case (df, (c, e)) => df.withColumn(c, e)
-      }
-      writeBucketed(stamped, "error", table)
-      return
-    }
-    val merged = merge(spark.table(table), updates, keys,
-      insertOnlyCols, refreshExprs)
-    // Overwriting a table while reading it is illegal; stage the merge
-    // result in a swap table, then swap names (metadata-only).
-    spark.sql(s"DROP TABLE IF EXISTS $swap")
-    writeBucketed(merged, "error", swap)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $swap RENAME TO $table")
   }
 }

@@ -23,8 +23,8 @@ import graft.operators.FileStats
   *    so a SQL join of two tables co-bucketed on the join keys (same
   *    `n`, same hash — [[GraftBucketFunction]] is the identity both
   *    sides resolve against) runs with ZERO Exchange on either side —
-  *    the property `Upsert.mergeIntoBucketedTable` always had for
-  *    library callers, now for `SELECT … JOIN` through the catalog. At
+  *    the no-target-shuffle property of a bucketed table, for
+  *    `SELECT … JOIN` through the catalog. At
   *    100 TB that is the difference between a metadata decision and
   *    re-shuffling both tables.
   *  - '''Runtime filtering''': [[filter]] accepts the executor-time

@@ -270,6 +270,52 @@ class PipelineSpec extends SparkSpecBase {
     assert(t.where($"embedding_inserted_at".isNull).count() == 0L)
   }
 
+  test("bucketed run on a snapshot-layout target is refused; watermark unchanged") {
+    val dir = Files.createTempDirectory("graft-pipe-layout").toString
+    val conf = Pipeline.Config(
+      sourcePath = s"$dir/source",
+      targetPath = s"$dir/target",
+      statePath = s"$dir/state.json",
+      stagingPath = s"$dir/staging",
+      vectorDim = 2)
+    Seq(
+      doc("s1", "2024-02-01 10:00:00", "r1", ""),
+      doc("s2", "2024-02-03 10:00:00", "r2", "red"))
+      .toDF(cols: _*).write.mode(SaveMode.Overwrite).parquet(conf.sourcePath)
+    Pipeline.run(spark, conf) // mergeBuckets = 0: snapshot layout
+    val state = java.nio.file.Paths.get(conf.statePath)
+    val watermark = Files.readAllBytes(state)
+
+    Seq(doc("s1", "2024-02-05 10:00:00", "r3", ""))
+      .toDF(cols: _*).write.mode(SaveMode.Append).parquet(conf.sourcePath)
+    val e = intercept[IllegalStateException] {
+      Pipeline.run(spark, conf.copy(mergeBuckets = 4))
+    }
+    assert(e.getMessage.contains("snapshot-directory"), e.getMessage)
+    assert(Files.readAllBytes(state).sameElements(watermark),
+      "a refused run advanced the watermark")
+    assert(graft.operators.Upsert.readTarget(spark, conf.targetPath).count() == 2L)
+  }
+
+  test("manifestCommit = false with mergeBuckets > 0 names the removed layout") {
+    val dir = Files.createTempDirectory("graft-pipe-nomanifest").toString
+    val conf = Pipeline.Config(
+      sourcePath = s"$dir/source",
+      targetPath = s"$dir/target",
+      statePath = s"$dir/state.json",
+      stagingPath = s"$dir/staging",
+      mergeBuckets = 8, manifestCommit = false,
+      vectorDim = 2)
+    Seq(doc("s1", "2024-02-01 10:00:00", "r1", ""))
+      .toDF(cols: _*).write.mode(SaveMode.Overwrite).parquet(conf.sourcePath)
+    val e = intercept[IllegalArgumentException](Pipeline.run(spark, conf))
+    assert(e.getMessage.contains("dynamic-partition-overwrite"), e.getMessage)
+    // refused before any work: nothing staged, merged or recorded
+    Seq(conf.stagingPath, conf.targetPath, conf.statePath).foreach { p =>
+      assert(!new java.io.File(p).exists(), s"$p written by a refused run")
+    }
+  }
+
   test("JSON document source: schema-on-read, scalar/array country, malformed counted") {
     val dir = Files.createTempDirectory("graft-pipe-json").toString
     val conf = Pipeline.Config(

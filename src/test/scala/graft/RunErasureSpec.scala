@@ -106,21 +106,23 @@ class RunErasureSpec extends SparkSpecBase {
   test("hash-bucketed target auto-detected — layout NOT converted to snapshots") {
     val dir = Files.createTempDirectory("graft-erasure-hb").toString
     val target = s"$dir/target"
-    Upsert.mergeIntoHashBucketedParquet(spark, target,
-      (0L until 20L).map(k => (k, s"v$k")).toDF("key", "v"), Seq("key"),
-      nBuckets = 4)
+    writeLegacyBucketDir(target)
     Seq(5L).toDF("key").write.parquet(s"$dir/keys")
-    RunErasure.run(spark, Array(target, s"$dir/keys",
-      "--key-col", "key", "--merge-buckets", "4"))
-    assert(spark.read.parquet(target).select("key").as[Long].collect().toSet ==
-      (0L until 20L).toSet - 5L)
-    // the layout contract survives: no _current pointer, no snap dirs,
-    // and a subsequent hash-bucketed merge still works
+    val before = treeState(target)
+    // the snapshot key delete refuses the legacy layout instead of
+    // adopting it (adoption skips `__bucket=` and would erase nothing)
+    val e = intercept[IllegalStateException] {
+      RunErasure.run(spark, Array(target, s"$dir/keys",
+        "--key-col", "key", "--merge-buckets", "4"))
+    }
+    assert(e.getMessage.contains("legacy hash-bucketed") &&
+      e.getMessage.contains("readTarget"), e.getMessage)
+    assert(treeState(target) == before, "refused erasure changed the directory")
+    // the layout is left as it was: no _current pointer, no snap dirs,
+    // and every row still reads
     assert(!new java.io.File(s"$target/_current").exists())
     assert(!new java.io.File(target).listFiles().exists(_.getName.startsWith("snap-")))
-    Upsert.mergeIntoHashBucketedParquet(spark, target,
-      Seq((100L, "new")).toDF("key", "v"), Seq("key"), nBuckets = 4)
-    assert(spark.read.parquet(target).count() == 20L)
+    assert(Upsert.readTarget(spark, target).count() == 20L)
   }
 
   test("manifest-bucketed target auto-detected and bucket-pruned") {

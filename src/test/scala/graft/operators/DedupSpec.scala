@@ -591,4 +591,16 @@ class DedupSpec extends SparkSpecBase {
     assert(out(2L)._2 <= out(4L)._2 && out(4L)._2 <= out(6L)._2)
     assert(out(2L)._5 >= out(4L)._5 && out(4L)._5 >= out(6L)._5)
   }
+
+  test("salted top-k equals plain top-k, including on a hot key") {
+    val hot = (1 to 500).map(i => (1L, i.toLong))
+    val cold = Seq((2L, 7L), (2L, 3L), (3L, 9L))
+    val df = (hot ++ cold).toDF("k", "v")
+    val plain = Dedup.topKPerKey(df, 3, Seq("k"), Seq(col("v").desc))
+      .as[(Long, Long)].collect().toSet
+    val salted = Dedup.topKPerKeySalted(df, 3, Seq("k"), Seq(col("v").desc),
+      saltOn = Seq(col("v")), saltBuckets = 8)
+      .as[(Long, Long)].collect().toSet
+    assert(salted == plain)
+  }
 }

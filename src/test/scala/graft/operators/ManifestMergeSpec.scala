@@ -183,6 +183,58 @@ class ManifestMergeSpec extends SparkSpecBase {
     } finally Upsert.gcGraceMs = savedGrace
   }
 
+  test("a snapshot-layout target is refused; its rows stay readable") {
+    val path = mkTarget()
+    Upsert.mergeIntoParquet(spark, path,
+      Seq((1L, "a"), (2L, "b")).toDF("key", "v"), Seq("key"))
+    val before = treeState(path)
+    val e = intercept[IllegalStateException] {
+      Upsert.mergeIntoManifestBucketedParquet(spark, path,
+        Seq((3L, "c")).toDF("key", "v"), Seq("key"), nBuckets = 2)
+    }
+    assert(e.getMessage.contains("snapshot-directory"), e.getMessage)
+    assert(treeState(path) == before, "refused merge changed the target")
+    assert(Upsert.readTarget(spark, path).select("key", "v")
+      .as[(Long, String)].collect().toMap == Map(1L -> "a", 2L -> "b"))
+  }
+
+  test("a legacy hash-bucketed directory is refused by the manifest writers") {
+    val path = mkTarget()
+    writeLegacyBucketDir(path)
+    val before = treeState(path)
+    val writers: Seq[(String, () => Unit)] = Seq(
+      "merge" -> (() => Upsert.mergeIntoManifestBucketedParquet(spark, path,
+        Seq((100L, "new")).toDF("key", "v"), Seq("key"), nBuckets = 4)),
+      "append" -> (() => Upsert.appendToManifestBucketedParquet(spark, path,
+        Seq((100L, "new")).toDF("key", "v"), Seq("key"), nBuckets = 4)),
+      "deleteKeys" -> (() => Upsert.deleteKeysFromManifestBucketedParquet(
+        spark, path, Seq(5L).toDF("key"), Seq("key"), nBuckets = 4)))
+    writers.foreach { case (name, write) =>
+      val e = intercept[IllegalStateException](write())
+      assert(e.getMessage.contains("legacy hash-bucketed") &&
+        e.getMessage.contains("readTarget"), s"$name: ${e.getMessage}")
+      assert(treeState(path) == before, s"refused $name changed the directory")
+    }
+    assert(Upsert.readTarget(spark, path).count() == 20L)
+  }
+
+  test("a first commit accepts the manifest layout's own crash leftovers") {
+    val path = mkTarget()
+    // what a crashed first commit can leave: an orphan run dir, a pointer
+    // tmp, a manifest-link tmp and a claim marker — no manifest
+    Seq((9L, "orphan")).toDF("key", "v").withColumn("__bucket", lit(0))
+      .withColumn("__bucket_p", lit(0))
+      .write.partitionBy("__bucket_p").parquet(s"$path/data/run-000000000-dead0000")
+    Seq("_current.tmp-0-dead0000", "snap-000000000.manifest.json.mftmp-dead0000",
+        "snap-000000000.commit").foreach { n =>
+      Files.writeString(java.nio.file.Paths.get(path, n), "x")
+    }
+    Upsert.mergeIntoManifestBucketedParquet(spark, path,
+      Seq((1L, "a"), (2L, "b")).toDF("key", "v"), Seq("key"), nBuckets = 2)
+    assert(Upsert.readTarget(spark, path).select("key", "v")
+      .as[(Long, String)].collect().toMap == Map(1L -> "a", 2L -> "b"))
+  }
+
   test("crash after manifest commit but before pointer publish rolls forward") {
     val path = mkTarget()
     Upsert.mergeIntoManifestBucketedParquet(spark, path,

@@ -328,4 +328,38 @@ class UpsertSpec extends SparkSpecBase {
       .select("key", "v").as[(String, Long)].collect().toMap
     assert(out == Map("k1" -> 1L, "k2" -> 2L, "k3" -> 3L))
   }
+
+  test("mergeIntoParquet refuses a legacy hash-bucketed directory") {
+    val path = Files.createTempDirectory("graft-upsert-hb").toString + "/table"
+    writeLegacyBucketDir(path)
+    val before = treeState(path)
+    // adoption skips `__bucket=` names: merging would publish a first
+    // snapshot holding only the batch
+    val e = intercept[IllegalStateException] {
+      Upsert.mergeIntoParquet(spark, path,
+        Seq((100L, "new")).toDF("key", "v"), Seq("key"))
+    }
+    assert(e.getMessage.contains("legacy hash-bucketed") &&
+      e.getMessage.contains("readTarget"), e.getMessage)
+    assert(treeState(path) == before, "refused merge changed the directory")
+    assert(Upsert.readTarget(spark, path).count() == 20L)
+  }
+
+  test("snapshot deletes refuse a legacy hash-bucketed directory") {
+    val path = Files.createTempDirectory("graft-upsert-hb-del").toString + "/table"
+    writeLegacyBucketDir(path)
+    val before = treeState(path)
+    // each used to return 0 without erasing anything
+    val deletes: Seq[(String, () => Long)] = Seq(
+      "deleteKeys" -> (() => Upsert.deleteKeysFromParquet(spark, path,
+        Seq(5L).toDF("key"), Seq("key"))),
+      "deletePredicate" -> (() => Upsert.deleteFromParquet(spark, path,
+        col("key") === 5L)))
+    deletes.foreach { case (name, delete) =>
+      val e = intercept[IllegalStateException](delete())
+      assert(e.getMessage.contains("legacy hash-bucketed"), s"$name: ${e.getMessage}")
+      assert(treeState(path) == before, s"refused $name changed the directory")
+    }
+    assert(Upsert.readTarget(spark, path).where(col("key") === 5L).count() == 1L)
+  }
 }
