@@ -22,9 +22,10 @@ object GraftConf {
     // to amortize task overhead, small enough that one split's rows +
     // shuffle state fit executor memory comfortably.
     "spark.sql.files.maxPartitionBytes" -> (128L * 1024 * 1024).toString,
-    // Dynamic partition overwrite: partitioned overwrites (the staged
-    // batch's `source=` partitions, a caller's `partitionBy` output)
-    // replace only the partitions they write.
+    // Dynamic partition overwrite: partitioned overwrites (a caller's
+    // `partitionBy` output) replace only the partitions they write. The
+    // pipeline stages its batch unpartitioned, so each run's staging
+    // write still replaces the whole staging directory.
     "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
     // Parquet writers: snappy matches the reference's staging compression
     // (embeddings-pipeline.py:255).

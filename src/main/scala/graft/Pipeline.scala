@@ -22,9 +22,11 @@ import graft.sources.WatermarkStore
   *
   * Scale design: the (potentially huge) source is scanned exactly ONCE —
   * the extract stages the incremental batch to Parquet (S4, as the
-  * reference does), and every downstream consumer (merge, watermark maxima,
-  * row counts, file metrics) reads the much smaller staged batch. Counts
-  * come from `Observation` metrics and Parquet footer counts, never from
+  * reference does), flat (one file per writing task, `source` a column,
+  * not a directory), and every downstream consumer (merge, watermark
+  * maxima, row counts, file metrics) reads the much smaller staged batch.
+  * Counts come from `Observation` metrics and ONE per-source aggregate
+  * over the staged batch (rows + watermark maxima), never from
   * re-executing the transform. An empty batch short-circuits before the
   * merge (F6, `embeddings-pipeline.py:278-280`) so no full target rewrite
   * happens for zero new rows.
@@ -155,14 +157,15 @@ object Pipeline {
     val good = flagged.where(size(col("__errors")) === 0)
       .drop("__errors", "__malformed")
     val filtered = Extract.incrementalFilter(good, wmDf, conf.fallbackDate)
-    // source + event timestamp ride along for partitioning + watermarks
+    // source + event timestamp ride along for the per-source watermarks
     val incoming = Extract.deriveRecord(filtered, keep = Seq("source", "timestamp"))
       .withColumnRenamed("timestamp", "__ts")
 
     // S4: stage the incremental batch — the ONLY pass over the source.
-    incoming.write.mode("overwrite").option("compression", "snappy")
-      .partitionBy("source")
-      .parquet(conf.stagingPath)
+    // Flat, not partitioned by source: at most one file per writing task
+    // and no pre-write sort, and an overwrite replaces the whole staging
+    // directory even under dynamic partition overwrite.
+    Upsert.parquetWriter(incoming).parquet(conf.stagingPath)
     val nQuarantined = quarantineObs.get("n_bad") match {
       case n: Long => n
       case null => 0L
@@ -172,10 +175,15 @@ object Pipeline {
       case null => 0L
     }
 
-    // Parquet footer count — metadata only, no data scan. Explicit schema:
-    // an empty staged batch has no footers to infer from (F6 rerun path).
+    // One read of the staged batch for its row count and the A2/A4
+    // per-source watermark maxima (applied only after the merge). Explicit
+    // schema: an empty staged batch has no footers to infer from (F6
+    // rerun path).
     val staged = spark.read.schema(incoming.schema).parquet(conf.stagingPath)
-    val recordsProcessed = staged.count()
+    val perSource = staged.groupBy("source")
+      .agg(count(lit(1)).as("n"), max("__ts").as("wm")).collect()
+    val recordsProcessed = perSource.map(_.getLong(1)).sum
+    val maxima = perSource.map(r => r.getString(0) -> r.getTimestamp(2)).toMap
 
     // F6: empty-batch short-circuit — no merge, no watermark change.
     if (recordsProcessed == 0L) {
@@ -245,10 +253,7 @@ object Pipeline {
           dim = conf.vectorDim)
     }
 
-    // A2/A4: advance watermarks from the staged batch — only after merge
-    val maxima = staged
-      .groupBy("source").agg(max("__ts").as("wm"))
-      .collect().map(r => r.getString(0) -> r.getTimestamp(1)).toMap
+    // A2/A4: advance watermarks to the staged maxima — only after merge
     val advanced = WatermarkStore.advance(prior, maxima)
     WatermarkStore.write(spark, conf.statePath, advanced)
 

@@ -98,7 +98,10 @@ object Extract {
   /** The P10 validation projection itself: every row flagged with its
     * failed checks in `__errors` (empty array = good). Lets callers count
     * or route bad rows in the SAME pass that consumes the good ones (via
-    * `observe`), instead of re-scanning the source for the bad side. */
+    * `observe`), instead of re-scanning the source for the bad side.
+    * When `df` carries a `source` column, a null source is flagged
+    * `null_source`: it has no watermark key, so it could never advance
+    * state. */
   def flagErrors(df: DataFrame,
       embCol: String = "embeddings",
       tsCol: String = "timestamp",
@@ -109,6 +112,8 @@ object Extract {
       "null_timestamp" -> col(tsCol).isNull,
       "empty_embedding" -> (col(embCol).isNull || size(col(embCol)) === 0)) ++
       (if (enforceDim) Seq("bad_vector_dim" -> (size(col(embCol)) =!= dim)) else Nil) ++
+      (if (df.columns.contains("source")) Seq("null_source" -> col("source").isNull)
+       else Nil) ++
       extraChecks
     val errs = array(checks.map { case (n, c) =>
       when(c, lit(n)).otherwise(lit(null))

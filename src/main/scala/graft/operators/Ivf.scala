@@ -554,11 +554,14 @@ object Ivf {
     // CANDIDATE row inside pq_adc) and the residual formulation's
     // query·centroid dot. The candidate pass then pays m lookups per
     // row; scores are bit-identical (PqOps.adcLut folds the same
-    // doubles in the same order as PqOps.adc).
+    // doubles in the same order as PqOps.adc). The table depends on the
+    // query alone, so it is built once per query, BEFORE the explode over
+    // the nprobe probed cells.
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_v"),
-        explode(F.nearestCentroids(col(vecCol), centroids, nprobe)).as("__cell"))
-      .withColumn("__lut", F.pqLut(
-        if (opqR.nonEmpty) F.matVec(col("q_v"), opqR) else col("q_v"), cb))
+        F.pqLut(if (opqR.nonEmpty) F.matVec(col(vecCol), opqR) else col(vecCol),
+          cb).as("__lut"))
+      .withColumn("__cell",
+        explode(F.nearestCentroids(col("q_v"), centroids, nprobe)))
       .withColumn("__cdot",
         if (residual) centroidDot(col("q_v"), col("__cell"), centroids)
         else lit(0.0))

@@ -76,6 +76,27 @@ object Upsert {
     joined.select((outCols ++ appended).toIndexedSeq: _*)
   }
 
+  /** Parquet options of every staging and merge-target write, derived
+    * from the schema: snappy (the reference's staging compression,
+    * `embeddings-pipeline.py:255`), and no dictionary for the elements of
+    * `array<float|double>` columns. Embedding vectors are almost all
+    * distinct floats, so a dictionary is hashed for every column chunk
+    * only to fall back to plain encoding: CPU spent for the same bytes.
+    * String and key columns keep their dictionaries. */
+  private[graft] def parquetWriteOptions(
+      schema: org.apache.spark.sql.types.StructType): Map[String, String] = {
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructField}
+    Map("compression" -> "snappy") ++ schema.fields.collect {
+      case StructField(name, ArrayType(FloatType | DoubleType, _), _, _) =>
+        s"parquet.enable.dictionary#$name.list.element" -> "false"
+    }
+  }
+
+  /** Overwrite-mode Parquet writer of `df` with [[parquetWriteOptions]]. */
+  private[graft] def parquetWriter(df: DataFrame)
+      : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
+    df.write.mode("overwrite").options(parquetWriteOptions(df.schema))
+
   // ------------------------------------------------------------------
   // Snapshot-pointer target layout (object-store-safe commit, SURVEY §7.3)
   //
@@ -342,7 +363,7 @@ object Upsert {
     // is simply overwritten by the retry (merge is idempotent).
     val nextId = current.map(_.stripPrefix("snap-").toLong + 1).getOrElse(0L)
     val snapName = f"snap-$nextId%09d"
-    val writer = merged.write.mode("overwrite").option("compression", "snappy")
+    val writer = parquetWriter(merged)
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(new Path(root, snapName).toString)
 
@@ -1280,12 +1301,10 @@ object Upsert {
       else clustered // key-sorted files: parquet row-group stats prune lookups
     partCol match {
       case Some(pc) =>
-        sorted.withColumn(s"${pc}_p", col(pc))
-          .write.mode("overwrite").option("compression", "snappy")
+        parquetWriter(sorted.withColumn(s"${pc}_p", col(pc)))
           .partitionBy(s"${pc}_p").parquet(runDir.toString)
       case None =>
-        sorted.write.mode("overwrite").option("compression", "snappy")
-          .parquet(runDir.toString)
+        parquetWriter(sorted).parquet(runDir.toString)
     }
     val newEntries: Map[Int, Seq[String]] = partCol match {
       case Some(pc) =>
@@ -1693,6 +1712,10 @@ object Upsert {
         return false
       }
       val curEntries = curBody.map(parseManifestEntries).getOrElse(Map.empty)
+      // a first commit onto a snapshot-dir or legacy target would hide
+      // its rows: refuse, and take this epoch's files back out
+      try requireManifestLayout(spark, targetPath, curEntries)
+      catch { case e: IllegalStateException => retireNewFiles(); throw e }
       val nextEntries = (curEntries.keySet ++ newByBucket.keySet).map { b =>
         b -> (curEntries.getOrElse(b, Nil) ++ newByBucket.getOrElse(b, Nil))
       }.toMap
@@ -1805,8 +1828,7 @@ object Upsert {
         val before = target.count()
         val nextId = snap.stripPrefix("snap-").toLong + 1
         val snapName = f"snap-$nextId%09d"
-        val writer = remaining.write.mode("overwrite")
-          .option("compression", "snappy")
+        val writer = parquetWriter(remaining)
         (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
           .parquet(new Path(root, snapName).toString)
         val after = spark.read.parquet(new Path(root, snapName).toString).count()
@@ -1862,8 +1884,7 @@ object Upsert {
         val before = target.count()
         val nextId = snap.stripPrefix("snap-").toLong + 1
         val snapName = f"snap-$nextId%09d"
-        val writer = remaining.write.mode("overwrite")
-          .option("compression", "snappy")
+        val writer = parquetWriter(remaining)
         (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
           .parquet(new Path(root, snapName).toString)
         val after = spark.read.parquet(new Path(root, snapName).toString).count()

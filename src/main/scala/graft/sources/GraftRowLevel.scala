@@ -190,14 +190,16 @@ private[sources] final class GraftReplaceBatchWrite(
 
   override def createBatchWriterFactory(
       pinfo: PhysicalWriteInfo): DataWriterFactory = {
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
     // Spark's own parquet write support, configured exactly like the
-    // library write path (snappy); the physical schema appends the
-    // stored __bucket placement column to the incoming data columns
+    // library write path (Upsert.parquetWriteOptions); the physical
+    // schema appends the stored __bucket placement column to the
+    // incoming data columns
     val physicalSchema = StructType(info.schema().fields :+
       StructField("__bucket", IntegerType, nullable = true))
-    val owf = new ParquetFileFormat().prepareWrite(spark, job,
-      Map("compression" -> "snappy"), physicalSchema)
+    val opts = Upsert.parquetWriteOptions(physicalSchema)
+    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(opts))
+    val owf = new ParquetFileFormat().prepareWrite(spark, job, opts,
+      physicalSchema)
     val keyIdx = op.keys.map(k => info.schema().fieldIndex(k)).toArray
     val keyTypes = op.keys.map(k =>
       info.schema().fields(info.schema().fieldIndex(k)).dataType).toArray

@@ -58,9 +58,10 @@ private[sources] final class GraftStreamingAppend(
 
   override def createStreamingWriterFactory(
       pinfo: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val owf = new ParquetFileFormat().prepareWrite(spark, job,
-      Map("compression" -> "snappy"), physicalSchema)
+    val opts = Upsert.parquetWriteOptions(physicalSchema)
+    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(opts))
+    val owf = new ParquetFileFormat().prepareWrite(spark, job, opts,
+      physicalSchema)
     val keyIdx = keys.map(k => info.schema().fieldIndex(k)).toArray
     val keyTypes = keys.map(k =>
       info.schema().fields(info.schema().fieldIndex(k)).dataType).toArray

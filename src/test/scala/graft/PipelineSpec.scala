@@ -406,4 +406,156 @@ class PipelineSpec extends SparkSpecBase {
     val t = graft.operators.Upsert.readTarget(spark, conf.targetPath)
     assert(t.select("main_refco").as[String].collect().toSeq == Seq("ok"))
   }
+
+  private def conf(dir: String) = Pipeline.Config(
+    sourcePath = s"$dir/source",
+    targetPath = s"$dir/target",
+    statePath = s"$dir/state.json",
+    stagingPath = s"$dir/staging",
+    vectorDim = 2)
+
+  /** Parquet data files under `dir`, recursively. */
+  private def parquetFiles(dir: String): Seq[java.nio.file.Path] = {
+    val walk = Files.walk(java.nio.file.Paths.get(dir))
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
+        .toList
+    } finally walk.close()
+  }
+
+  test("a null source is quarantined; the run commits and records state") {
+    val dir = Files.createTempDirectory("graft-pipe-nullsrc").toString
+    val c = conf(dir)
+    Seq(
+      doc("s1", "2024-02-01 10:00:00", "r1", ""),
+      doc(null, "2024-02-01 11:00:00", "r2", ""))
+      .toDF(cols: _*).write.mode(SaveMode.Overwrite).parquet(c.sourcePath)
+    val run1 = Pipeline.run(spark, c)
+    assert(run1.quarantined == 1L)
+    assert(run1.recordsProcessed == 1L)
+    assert(run1.sources == 1L)
+    assert(WatermarkStore.read(spark, c.statePath) ==
+      Map("s1" -> Timestamp.valueOf("2024-02-01 10:00:00")))
+    assert(graft.operators.Upsert.readTarget(spark, c.targetPath)
+      .select("main_refco").as[String].collect().toSeq == Seq("r1"))
+    // the rerun reads the recorded state: nothing new, nothing re-merged
+    assert(Pipeline.run(spark, c).recordsProcessed == 0L)
+  }
+
+  test("an empty-string source is a watermark key of its own") {
+    val dir = Files.createTempDirectory("graft-pipe-emptysrc").toString
+    val c = conf(dir)
+    Seq(
+      doc("s1", "2024-02-01 10:00:00", "r1", ""),
+      doc("", "2024-02-01 11:00:00", "r2", ""))
+      .toDF(cols: _*).write.mode(SaveMode.Overwrite).parquet(c.sourcePath)
+    val run1 = Pipeline.run(spark, c)
+    assert(run1.quarantined == 0L)
+    assert(run1.recordsProcessed == 2L)
+    assert(run1.sources == 2L)
+    val expected = Map(
+      "s1" -> Timestamp.valueOf("2024-02-01 10:00:00"),
+      "" -> Timestamp.valueOf("2024-02-01 11:00:00"))
+    assert(run1.newWatermarks == expected)
+    assert(WatermarkStore.read(spark, c.statePath) == expected)
+    assert(graft.operators.Upsert.readTarget(spark, c.targetPath).count() == 2L)
+    assert(Pipeline.run(spark, c).recordsProcessed == 0L)
+  }
+
+  test("kept staging is not re-read under dynamic partition overwrite") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, GraftConf.scaleDefaults(key))
+    try {
+      val dir = Files.createTempDirectory("graft-pipe-stale").toString
+      val c = conf(dir).copy(cleanupStaging = false)
+      Seq(
+        doc("s1", "2024-02-01 10:00:00", "r1", ""),
+        doc("s2", "2024-02-01 11:00:00", "r2", ""))
+        .toDF(cols: _*).write.mode(SaveMode.Overwrite).parquet(c.sourcePath)
+      assert(Pipeline.run(spark, c).recordsProcessed == 2L)
+
+      Seq(doc("s1", "2024-02-05 10:00:00", "r3", ""))
+        .toDF(cols: _*).write.mode(SaveMode.Append).parquet(c.sourcePath)
+      val run2 = Pipeline.run(spark, c)
+      assert(run2.recordsProcessed == 1L, "run 2 re-read run 1's staged rows")
+      assert(run2.sources == 1L)
+      assert(run2.uniqueRecords == 1L)
+      assert(spark.read.parquet(c.stagingPath).count() == 1L)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("staging is flat: no source= directory, at most one file per write task") {
+    val dir = Files.createTempDirectory("graft-pipe-flat").toString
+    val c = conf(dir).copy(cleanupStaging = false)
+    // one source file holding three sources: one write task
+    Seq(
+      doc("s1", "2024-02-01 10:00:00", "r1", ""),
+      doc("s1", "2024-02-02 10:00:00", "r1", ""),
+      doc("s2", "2024-02-03 10:00:00", "r2", "red"),
+      doc("s3", "2024-02-04 10:00:00", "r3", ""),
+      ("s2", Option.empty[Timestamp], Seq(1f, 2f),
+        "bad", "", "cat", Seq("US"), Option.empty[String], false))
+      .toDF(cols: _*).coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(c.sourcePath)
+    val writeTasks = spark.read.parquet(c.sourcePath).rdd.getNumPartitions
+    val run1 = Pipeline.run(spark, c)
+    assert(run1 == Pipeline.RunStats(recordsProcessed = 4L, uniqueRecords = 3L,
+      quarantined = 1L, sources = 3L, stagedFiles = run1.stagedFiles,
+      stagedBytes = run1.stagedBytes, newWatermarks = Map(
+        "s1" -> Timestamp.valueOf("2024-02-02 10:00:00"),
+        "s2" -> Timestamp.valueOf("2024-02-03 10:00:00"),
+        "s3" -> Timestamp.valueOf("2024-02-04 10:00:00"))))
+    val staged = parquetFiles(c.stagingPath)
+    assert(!new java.io.File(c.stagingPath).listFiles()
+      .exists(f => f.isDirectory && f.getName.startsWith("source=")))
+    assert(staged.size.toLong == run1.stagedFiles)
+    assert(run1.stagedFiles >= 1L && run1.stagedFiles <= writeTasks,
+      s"${run1.stagedFiles} staged files from $writeTasks write task(s)")
+    assert(run1.stagedBytes == staged.map(Files.size(_)).sum)
+    assert(spark.read.parquet(c.stagingPath).select("source").as[String]
+      .collect().sorted.toSeq == Seq("s1", "s1", "s2", "s3"))
+  }
+
+  test("vector element chunks carry no dictionary; string chunks keep theirs") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    /** column path -> whether any chunk of it in `files` uses a dictionary */
+    def dictionaryByColumn(files: Seq[java.nio.file.Path]): Map[String, Boolean] =
+      files.flatMap { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri),
+          spark.sparkContext.hadoopConfiguration))
+        try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+          .map(ch => ch.getPath.toDotString -> ch.getEncodings.asScala.exists(_.usesDictionary))
+        finally reader.close()
+      }.groupMapReduce(_._1)(_._2)(_ || _)
+
+    Seq(0, 4).foreach { buckets =>
+      val dir = Files.createTempDirectory(s"graft-pipe-dict-$buckets").toString
+      val c = conf(dir).copy(cleanupStaging = false, mergeBuckets = buckets)
+      // few distinct floats, so a dictionary WOULD pay off for the
+      // vectors: only the write options can keep it off
+      (0 until 40).map(i => doc(s"s${i % 2}", f"2024-02-01 10:$i%02d:00",
+          s"r$i", "", Seq((i % 3).toFloat, 1f)))
+        .toDF(cols: _*).write.mode(SaveMode.Overwrite).parquet(c.sourcePath)
+      Pipeline.run(spark, c)
+      Seq("staged" -> parquetFiles(c.stagingPath),
+          "target" -> parquetFiles(c.targetPath)).foreach { case (what, files) =>
+        assert(files.nonEmpty, s"$what: no parquet files")
+        val dict = dictionaryByColumn(files)
+        assert(dict.get("embedding_vector.list.element").contains(false),
+          s"$what (mergeBuckets = $buckets): $dict")
+        // every row's category is "cat": a dictionary Parquet keeps
+        assert(dict.get("category").contains(true),
+          s"$what (mergeBuckets = $buckets): $dict")
+      }
+    }
+  }
 }

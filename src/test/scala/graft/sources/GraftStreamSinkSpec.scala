@@ -139,4 +139,41 @@ class GraftStreamSinkSpec extends SparkSpecBase {
     }
     assert(e.getMessage != null)
   }
+
+  test("a stream append refuses a snapshot-dir or legacy target and retires its files") {
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    def refused(dst: String, rows: Long): Unit = {
+      // one epoch's files, staged where the sink writes them
+      val runRel = "data/run-stream-layouttest-e0"
+      val stagedDir = new org.apache.hadoop.fs.Path(dst, s"$runRel/__bucket_p=0")
+      (100L until 105L).map(k => (k, "new")).toDF("key", "v")
+        .withColumn("__bucket", lit(0))
+        .coalesce(1).write.mode("overwrite").parquet(stagedDir.toString)
+      val staged = fs.listStatus(stagedDir).map(_.getPath.getName)
+        .filter(_.endsWith(".parquet")).toSeq
+      val e = intercept[IllegalStateException] {
+        Upsert.commitStreamAppend(spark, dst, "layouttest", epochId = 0L,
+          newByBucket = Map(0 -> staged.map(n => s"$runRel/__bucket_p=0/$n")),
+          schemaDdl = "key BIGINT, v STRING, __bucket INT",
+          keys = Seq("key"), nBuckets = 4, keepSnapshots = 1)
+      }
+      assert(e.getMessage.contains(dst), e.getMessage)
+      assert(!fs.listStatus(new org.apache.hadoop.fs.Path(dst))
+        .exists(_.getPath.getName.endsWith(".manifest.json")),
+        "a refused append committed a manifest")
+      assert(staged.forall(n => !fs.exists(new org.apache.hadoop.fs.Path(
+        stagedDir, n))), "a refused append left its files behind")
+      assert(Upsert.readTarget(spark, dst).count() == rows)
+    }
+
+    val snapshotTarget = freshTable("snapdir")
+    Upsert.mergeIntoParquet(spark, snapshotTarget,
+      Seq((1L, "a"), (2L, "b")).toDF("key", "v"), Seq("key"))
+    refused(snapshotTarget, rows = 2L)
+
+    val legacyTarget = freshTable("legacy")
+    writeLegacyBucketDir(legacyTarget)
+    refused(legacyTarget, rows = 20L)
+  }
 }
