@@ -22,9 +22,8 @@ import org.apache.spark.sql.SparkSession
   * shuffle churn) faster than the ContextCleaner drains it, and the r14
   * full runs measured the SAME plans degrading 0.757 → 0.854 s/entry with
   * cumulative GC 19 → 24 s inside one session. Each TIMED pass therefore
-  * runs in a FRESH SparkSession (`SPARK_GRAFT_RESTART=pass`, the default;
-  * `off` restores the single-session protocol): entry N's measurement no
-  * longer pays entry 1's accumulated heap. Whole-stage codegen lives in a
+  * runs in a FRESH SparkSession: entry N's measurement no longer pays
+  * entry 1's accumulated heap. Whole-stage codegen lives in a
   * JVM-global cache keyed by source, so recompiles are NOT re-paid after
   * a restart; the session-keyed shared caches are rebuilt eagerly and
   * UNTIMED on each recycle — their cost is billed exactly once by the
@@ -34,20 +33,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Optional comma-separated query filter for profiling single queries.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config(PlanCanon.renderingConfs)
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = newSession()
+    var spark = GraftSession.local(cpus)
     val queries = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     // noop sink: forces evaluation of EVERY output column — a count()
     // would let the optimizer prune pure projections to a row count.
@@ -108,12 +97,11 @@ object Bench {
     // full-corpus tokenizer builds are rebuilt too: their cost is the
     // train entries' own number, and a fresh session must not hand it to
     // whichever consumer happens to run first in the pass.
-    val restart = sys.env.getOrElse("SPARK_GRAFT_RESTART", "pass")
     def recycle(): Unit = {
       spark.stop()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
-      spark = newSession()
+      spark = GraftSession.local(cpus)
       sharedBuilds.foreach(_.build(spark, sfDir))
       System.gc()
     }
@@ -127,12 +115,10 @@ object Bench {
     var sinceGc = 0
     System.gc() // start the timed loop on a clean heap, not warmup debris
     for (r <- 1 to repeat) {
-      if (restart == "pass") {
-        val t0 = System.nanoTime()
-        recycle()
-        System.err.println(
-          f"[bench] session recycle + shared rebuild (untimed): ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      }
+      val t0 = System.nanoTime()
+      recycle()
+      System.err.println(
+        f"[bench] session recycle + shared rebuild (untimed): ${(System.nanoTime() - t0) / 1e9}%.1f s")
       queries.foreach { case (name, fn) =>
         val t0 = System.nanoTime()
         run(name, fn, sfDir)
@@ -170,7 +156,7 @@ object Bench {
         s"entries (median > $heavyThreshold s) to $heavyRepeat samples: " +
         heavy.map(_._1).mkString(", "))
       for (r <- repeat + 1 to heavyRepeat) {
-        if (restart == "pass") recycle()
+        recycle()
         heavy.foreach { case (name, fn) =>
           val t0 = System.nanoTime()
           run(name, fn, sfDir)
@@ -222,9 +208,8 @@ object Bench {
     // (bigram_surprisal/stupid_backoff, caught diffing against
     // bench/plans_canonical). The pristine state is exactly what
     // PlanSnap/PlanGateSpec render, so bench digests and the committed
-    // map stay byte-comparable. restart=off keeps the old post-suite
-    // rendering (no recycle exists to borrow).
-    if (restart == "pass") recycle()
+    // map stay byte-comparable.
+    recycle()
     def planHash(name: String, mk: () => org.apache.spark.sql.DataFrame): String =
       try {
         val norm = PlanCanon.normalizedPlan(mk) // protocol v2: see PlanCanon
@@ -279,7 +264,7 @@ object Bench {
       }.mkString("{", ",", "}")
       val heavyJson = heavy.map("\"" + _._1 + "\"").mkString("[", ",", "]")
       val sig = s"""{"loadavg_before":${num(loadBefore, 2)},"loadavg_after":${num(loadAvg, 2)},""" +
-        s""""jvm_gc_ms":${gcMillis - gcBefore},"repeat":$repeat,"restart":"$restart",""" +
+        s""""jvm_gc_ms":${gcMillis - gcBefore},"repeat":$repeat,""" +
         s""""heavy_s":${num(heavyThreshold, 1)},"heavy_repeat":$heavyRepeat,"heavy":$heavyJson}"""
       val plans = planHashes.map { case (k, h) => "\"" + k + "\":\"" + h + "\"" }
         .mkString("{", ",", "}")

@@ -46,22 +46,6 @@ object GraftConf {
     // joins.
     "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true")
 
-  /** V2 parquet reader experiment (SURVEY §7.6.4): the V2 scan supports
-    * MIN/MAX/COUNT aggregate pushdown into parquet footers — free scan
-    * speed for count/distinct-shaped queries at 100 TB. Flipping
-    * `useV1SourceList` is an engine-wide plan-shape change, so it ships
-    * behind this env toggle until a full plan diff signs it off.
-    * Gated confs: V2 for parquet reads + footer aggregate pushdown. */
-  val v2ParquetExperiment: Map[String, String] = Map(
-    "spark.sql.sources.useV1SourceList" ->
-      "avro,csv,json,kafka,orc,text", // everything BUT parquet stays V1
-    "spark.sql.parquet.aggregatePushdown" -> "true")
-
-  /** Apply [[v2ParquetExperiment]] when `SPARK_GRAFT_V2_PARQUET=1`. */
-  def applyV2ExperimentIfRequested(spark: SparkSession): Unit =
-    if (sys.env.get("SPARK_GRAFT_V2_PARQUET").contains("1"))
-      v2ParquetExperiment.foreach { case (k, v) => spark.conf.set(k, v) }
-
   /** Shuffle partition count sized to the cluster: ~2 waves per shuffle
     * keeps stragglers bounded without drowning the scheduler. */
   def shufflePartitionsFor(totalCores: Int): Int = math.max(1, totalCores * 2)

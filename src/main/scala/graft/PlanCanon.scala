@@ -27,30 +27,14 @@ object PlanCanon {
 
   val canonicalDir = "bench/plans_canonical"
 
-  /** SQL confs every plan rendering runs under — the canonical map's
-    * sessions here and the bench's sessions alike, so `graft.Bench`
-    * hashes stay byte-comparable with the committed map.
-    *  - maxMetadataStringLength: the default 100-char truncation cuts
-    *    DataFilters at a point that depends on token LENGTHS (a lambda
-    *    variable named x_478 vs x_1 shifts the cut), so identical plans
-    *    rendered in different sessions hashed apart; rendering-only.
-    *  - v2 bucketing (round 17): graft scans grouped by bucket
-    *    (KeyGroupedPartitioning, storage-partitioned joins) are part of
-    *    the rendering, pinned so no JVM's session defaults leak in. */
-  val renderingConfs: Map[String, String] = Map(
-    "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.maxMetadataStringLength" -> "100000",
-    "spark.sql.sources.v2.bucketing.enabled" -> "true",
-    "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")
-
-  /** A fresh session under [[renderingConfs]] — per use, so neither the
-    * bench JVM nor the test JVM leaks its own defaults into the
-    * rendering. Partition counts ride in Exchange nodes, so
+  /** A fresh session under [[GraftSession.renderingConfs]] — per use, so
+    * neither the bench JVM nor the test JVM leaks its own defaults into
+    * the rendering. Partition counts ride in Exchange nodes, so
     * shuffle.partitions is part of the rendering. */
   def configured(spark: SparkSession): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", 4)
-    renderingConfs.foreach { case (k, v) => s.conf.set(k, v) }
+    GraftSession.renderingConfs.foreach { case (k, v) => s.conf.set(k, v) }
     // plan RENDERING (treeString truncation width) reads SQLConf.get,
     // which resolves through the thread's ACTIVE session — without this
     // the new session's width is ignored and metadata truncates at the
@@ -100,11 +84,7 @@ object PlanSnap {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val outDir = java.nio.file.Paths.get(
       args.lift(1).getOrElse(PlanCanon.canonicalDir))
-    val base = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    base.sparkContext.setLogLevel("ERROR")
+    val base = GraftSession.local(4)
     val s = PlanCanon.configured(base)
     PlanCanon.buildSharedCaches(s, sfDir)
     if (java.nio.file.Files.isDirectory(outDir)) {

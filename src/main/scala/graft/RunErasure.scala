@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions.col
   *     [--merge-buckets 256] [--keep-snapshots 1] \
   *     [--ivf-index <indexPath>] [--ivf-id-col vec_id] \
   *     [--hnsw-index <indexPath>] [--hnsw-id-col main_refco] \
-  *     [--neardup-index <indexPath>]
+  *     [--neardup-index <indexPath>] [--text-index <indexPath>] \
+  *     [--components <storePath>] [--vacuum true]
   * }}}
   *
   * `keysPath` is a Parquet/JSON key list (one column, `--key-col`).
@@ -28,26 +29,24 @@ import org.apache.spark.sql.functions.col
   * return ids the target no longer serves.
   */
 object RunErasure {
+  private val usage =
+    "usage: RunErasure <target> <keysPath> [--key-col c] " +
+      "[--merge-buckets n] [--keep-snapshots n] " +
+      "[--ivf-index p] [--ivf-id-col c] [--hnsw-index p] " +
+      "[--hnsw-id-col c] [--neardup-index p] [--text-index p] " +
+      "[--components p] [--vacuum true]"
+
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().appName("graft-erasure").getOrCreate()
-    GraftConf.applyScaleProfile(spark)
+    val spark = GraftSession.submitted("graft-erasure")
     try run(spark, args) finally spark.stop()
   }
 
   /** The erasure job body (separated from [[main]]'s session lifecycle so
     * tests can drive the CLI surface on a shared session). */
   def run(spark: SparkSession, args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: RunErasure <target> <keysPath> [--key-col c] " +
-        "[--merge-buckets n] [--keep-snapshots n] " +
-        "[--ivf-index p] [--ivf-id-col c] [--hnsw-index p] " +
-        "[--hnsw-id-col c] [--neardup-index p] " +
-        "[--text-index p] " +
-        "[--components p]")
+    require(args.length >= 2, usage)
     val Array(target, keysPath) = args.take(2)
-    val opts = args.drop(2).sliding(2, 2).collect {
-      case Array(k, v) => k -> v
-    }.toMap
+    val opts = CliFlags.parse(args.drop(2).toSeq, usage)
     val keyCol = opts.getOrElse("--key-col", "main_refco")
     val keep = opts.get("--keep-snapshots").map(_.toInt).getOrElse(1)
 

@@ -49,22 +49,42 @@ import org.apache.spark.sql.SparkSession
   *         small-file count, bucket skew — the table-compact tripwire
   *     expire <targetPath> --ts-col <c> --older-than <ts>
   *            [--key-col main_refco] [--merge-buckets N]
-  *            [--keep-snapshots N] [--ivf-index p] [--neardup-index p]
-  *            [--components p] [--vacuum true]
+  *            [--keep-snapshots N] [--ivf-index p] [--ivf-id-col c]
+  *            [--neardup-index p] [--text-index p] [--components p]
+  *            [--vacuum true]
   *         retention TTL: delete every key whose row's timestamp
   *         predates the cutoff — computed key list routed through the
   *         RunErasure path (same layout handling, index scrubs and
   *         snapshot protocol; add --vacuum true for a hard horizon)
   * }}}
   *
+  * A flag the usage text does not list, or one without a value, fails
+  * the job ([[CliFlags]]): `vacuum <t> --keep-snapshot 5` is refused
+  * instead of vacuuming to the default 1 snapshot.
+  *
   * Every action commits through the snapshot/manifest protocol: a crash
   * mid-job leaves the previous state fully readable, and concurrent
   * pipeline runs keep reading the old snapshot until the pointer flips.
   */
 object RunMaintain {
+  private val usage =
+    "usage: RunMaintain <action> <path> [opts]\n" +
+      "  ivf-compact <index> [--id-col c]\n" +
+      "  hnsw-compact | neardup-compact | textindex-compact <index>\n" +
+      "  table-compact <target> [--keys k1,k2] [--zorder c1,c2] " +
+      "[--target-file-rows n] [--rebucket n] [--keep-snapshots n]\n" +
+      "  vacuum <target> [--keep-snapshots n]\n" +
+      "  snapshots <target>\n" +
+      "  changes <target> --keys k1,k2 [--since snap] [--out dir]\n" +
+      "  mirror <target> --keys k1,k2 --to dir\n" +
+      "  stats <target> [--small-file-bytes n]\n" +
+      "  expire <target> --ts-col c --older-than ts [--key-col c] " +
+      "[--merge-buckets n] [--keep-snapshots n] [--ivf-index p] " +
+      "[--ivf-id-col c] [--neardup-index p] [--text-index p] " +
+      "[--components p] [--vacuum true]"
+
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().appName("graft-maintain").getOrCreate()
-    GraftConf.applyScaleProfile(spark)
+    val spark = GraftSession.submitted("graft-maintain")
     try run(spark, args) finally spark.stop()
   }
 
@@ -72,15 +92,10 @@ object RunMaintain {
     * drive the CLI surface on a shared session (the [[RunErasure]]
     * pattern). */
   def run(spark: SparkSession, args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: RunMaintain <ivf-compact|hnsw-compact|neardup-compact|table-compact|vacuum|snapshots|changes> " +
-        "<path> [--id-col c] [--keep-snapshots n] [--keys k1,k2] " +
-        "[--zorder c1,c2] [--target-file-rows n] [--since snap] [--out dir]")
+    require(args.length >= 2, usage)
     val action = args(0)
     val path = args(1)
-    val opts = args.drop(2).sliding(2, 2).collect {
-      case Array(k, v) => k -> v
-    }.toMap
+    val opts = CliFlags.parse(args.drop(2).toSeq, usage)
     action match {
       case "ivf-compact" =>
         operators.Ivf.compactIndex(spark, path,
@@ -219,7 +234,8 @@ object RunMaintain {
         } finally tmpFs.delete(tmpHPath, true)
       case other =>
         throw new IllegalArgumentException(s"unknown action '$other' " +
-          "(ivf-compact | neardup-compact | textindex-compact | table-compact | vacuum | snapshots | changes | mirror | stats | expire)")
+          "(ivf-compact | hnsw-compact | neardup-compact | textindex-compact | " +
+          "table-compact | vacuum | snapshots | changes | mirror | stats | expire)")
     }
   }
 }

@@ -18,7 +18,9 @@ import org.apache.spark.sql.SparkSession
   * }}}
   *
   * Master/executor sizing come from spark-submit; the session gets the
-  * [[GraftConf]] scale profile. Exit code 0 only after merge + watermark
+  * [[GraftConf]] scale profile ([[GraftSession.submitted]]). A flag the
+  * usage text does not list, or one without a value, fails the job
+  * ([[CliFlags]]). Exit code 0 only after merge + watermark
   * advance succeed (state is written last — the reference's
   * at-least-once + idempotent-merge ordering, `:480`).
   *
@@ -29,22 +31,26 @@ import org.apache.spark.sql.SparkSession
   * successful merge — a retried run re-reads the same increment.
   */
 object RunPipeline {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 4,
-      "usage: RunPipeline <source> <target> <state> <staging> " +
-        "[--dims p] [--fallback ts] [--merge-buckets n] [--format f] " +
-        "[--retries n] [--stream ckptDir [--enrich spec] " +
-        "[--cardinality-profile dir] [--quantile-profile dir] " +
-        "[--freq-profile dir] [--daily-counts dir] " +
-        "[--components dir] [--scd2 dir] " +
-        "[--text-index dir [--text-index-col c] [--text-index-shards n]]]")
-    val Array(source, target, state, staging) = args.take(4)
-    val opts = args.drop(4).sliding(2, 2).collect {
-      case Array(k, v) => k -> v
-    }.toMap
+  private val usage =
+    "usage: RunPipeline <source> <target> <state> <staging> " +
+      "[--dims p] [--fallback ts] [--merge-buckets n] [--format f] " +
+      "[--ivf-index p] [--ivf-nlist n] [--hnsw-index p] " +
+      "[--quality 'rule:pred;...'] [--quality-budgets 'rule=n;...'] " +
+      "[--retries n] [--stream ckptDir [--enrich spec] " +
+      "[--neardup-text c [--neardup-threshold t] [--neardup-shingle n] " +
+      "[--neardup-index p]] " +
+      "[--cardinality-profile dir] [--quantile-profile dir] " +
+      "[--freq-profile dir] [--daily-counts dir] " +
+      "[--components dir] [--scd2 dir] " +
+      "[--text-index dir [--text-index-col c] [--text-index-shards n]] " +
+      "[--keep-snapshots n] [--max-files-per-trigger n]]"
 
-    val spark = SparkSession.builder().appName("graft-pipeline").getOrCreate()
-    GraftConf.applyScaleProfile(spark)
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 4, usage)
+    val Array(source, target, state, staging) = args.take(4)
+    val opts = CliFlags.parse(args.drop(4).toSeq, usage)
+
+    val spark = GraftSession.submitted("graft-pipeline")
     try {
       // --stream <checkpointDir>: run the Structured-Streaming pipeline
       // (AvailableNow — drains what's there, then exits 0; a scheduler

@@ -80,16 +80,9 @@ object ScaleProbe {
     val probe = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(DefaultProbe)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scale-probe-x$copies")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // heap comes from the forked JVM's -Xmx (build.sbt: SPARK_DRIVER_MEM)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // heap comes from the forked JVM's -Xmx (build.sbt: SPARK_DRIVER_MEM)
+    val spark = GraftSession.local(cpus)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try {
       buildIfMissing(spark, src, dir, copies, cpus)
       val times = probe.map { name =>

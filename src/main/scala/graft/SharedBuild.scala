@@ -9,8 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * result that every query in `consumers` reads, computed once per
   * (session, dir) and reused by the rest — one session's work amortized
   * over many queries. The rows, in bench order, are
-  * [[SparkEntry.sharedBuilds]]; Bench, PlanCanon, ScaleProfile and the
-  * eviction listener all read that one table.
+  * [[SparkEntry.sharedBuilds]]; Bench, PlanCanon and the eviction
+  * listener all read that one table.
   *
   * A row with a `planFrame` is LABELED: `graft.Bench` times its build as
   * an entry named `name` (so consumers report incremental cost) and

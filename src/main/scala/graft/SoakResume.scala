@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Kill-and-resume soak (VERDICT r14 #3) — the driver of
   * `tools/soak_resume.sh`: proves the iterative-loop fault contract
@@ -24,11 +24,7 @@ object SoakResume {
   private val ChainNodes = 50000L
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(8)
     spark.conf.set(graft.operators.Ckpt.DirConf, "/tmp/graft-soak-ckpt")
     import spark.implicits._
     val edges = spark.range(1L, ChainNodes).selectExpr("id AS a", "id + 1 AS b")

@@ -29,8 +29,8 @@ import graft.operators.Ckpt.PinOps
   *     `localCheckpoint` per round caps lineage growth.
   *
   *     The threshold is a MEMORY guard, not a speed crossover — measured
-  *     from above in round 16 (`ScaleProfile r16`, 2.5M distinct words,
-  *     local[32]): the driver loop still beats the distributed one 1.7×
+  *     from above in round 16 (2.5M distinct words, local[32]): the
+  *     driver loop still beats the distributed one 1.7×
   *     for BPE (11.8 vs 20.2 s) and 21× for unigram (whose spans table
   *     shuffle-amplifies ~40× per EM round). Default re-pinned 2M → 4M
   *     accordingly: a 4M-word collect measured comfortably inside an

@@ -704,10 +704,8 @@ object Graph {
 
   /** ONE [[pageRank]] round: the rank table joins into the deg-carrying
     * edge set on src, the in-mass sums by dst, and the no-in-edge
-    * complement unions back. Shared by the loop and the plan-evidence
-    * snapper (`graft.LoopPlanSnap`) so the dumped round shape IS the
-    * executed one. */
-  private[graft] def pageRankRound(eDeg: DataFrame, zeroIn: DataFrame,
+    * complement unions back. */
+  private def pageRankRound(eDeg: DataFrame, zeroIn: DataFrame,
       ranks: DataFrame, base: Long, dampingPermille: Long): DataFrame = {
     val inSum = eDeg.join(ranks.select(col("node").as("src"), col("rank")),
         Seq("src"))
@@ -900,7 +898,7 @@ object Graph {
     * label loses the partial-aggregation collapse and lands on a single
     * reducer (guide §2.5); two keyed aggregates keep hub fan-in
     * arriving as per-partition partials. */
-  private[graft] def lpaRound(und: DataFrame, labels: DataFrame): DataFrame = {
+  private def lpaRound(und: DataFrame, labels: DataFrame): DataFrame = {
     val counts = und
       .join(labels.select(col("node").as("v"), col("label")), Seq("v"))
       .groupBy(col("u"), col("label")).agg(count(lit(1)).as("n"))
@@ -958,7 +956,7 @@ object Graph {
 
   /** ONE [[bfsLayers]] hop: the distance table joins into the symmetric
     * edge set on v, and the min-hops fold absorbs the new frontier. */
-  private[graft] def bfsRound(und: DataFrame, dist: DataFrame): DataFrame = {
+  private def bfsRound(und: DataFrame, dist: DataFrame): DataFrame = {
     val nxt = und
       .join(dist.select(col("node").as("v"), col("hops")), Seq("v"))
       .select(col("u").as("node"), (col("hops") + 1).as("hops"))

@@ -41,7 +41,7 @@ import graft.operators.FileStats
   * manifest's file list (round 18): the manifest already names every
   * file, so handing the set to Spark's InMemoryFileIndex per bucket
   * re-paid ~2 ms of driver listing per file — 26 s of planning at
-  * nBuckets=4096 (ScaleProfile r18 measured 2.2/10.2/26.5 s at
+  * nBuckets=4096 (round 18 measured 2.2/10.2/26.5 s at
   * 256/1024/4096). One `getFileStatus` pass supplies lengths for the
   * standard maxSplitBytes packing, and the same pass feeds the reported
   * statistics. The wrapper owns WHICH files a task sees, never HOW

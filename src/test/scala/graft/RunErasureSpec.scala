@@ -138,4 +138,24 @@ class RunErasureSpec extends SparkSpecBase {
       .select("key").as[Long].collect().toSet
     assert(left == (0L until 30L).toSet -- Seq(3L, 9L))
   }
+
+  test("an unknown or value-less flag is refused before anything is erased") {
+    val dir = Files.createTempDirectory("graft-erasure-flags").toString
+    val target = s"$dir/target"
+    Upsert.mergeIntoParquet(spark, target,
+      Seq(("a", 1L), ("b", 2L)).toDF("key", "v"), Seq("key"))
+    Seq("a").toDF("key").write.parquet(s"$dir/keys")
+    val before = treeState(target)
+    // a misspelled --vacuum would skip the vacuum and leave the erased
+    // row readable by time travel; a trailing flag has no value
+    Seq(Seq("--vacum", "true"), Seq("--vacuum")).foreach { bad =>
+      val e = intercept[IllegalArgumentException] {
+        RunErasure.run(spark, Array(target, s"$dir/keys", "--key-col", "key") ++ bad)
+      }
+      assert(e.getMessage.contains(s"'${bad.head}'") &&
+        e.getMessage.contains("usage: RunErasure"), e.getMessage)
+      assert(treeState(target) == before, s"$bad changed the target")
+    }
+    assert(Upsert.readTarget(spark, target).count() == 2)
+  }
 }

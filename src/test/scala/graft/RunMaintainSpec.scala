@@ -165,4 +165,25 @@ class RunMaintainSpec extends SparkSpecBase {
       RunMaintain.run(spark, Array("defrag", "/tmp/x"))
     }
   }
+
+  test("an unknown or value-less flag is refused before the action runs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-maint-flags").toString
+    val path = s"$dir/table"
+    Seq(0L, 1L, 2L).foreach { k =>
+      operators.Upsert.mergeIntoManifestBucketedParquet(spark, path,
+        Seq((k, s"v$k")).toDF("key", "v"), Seq("key"), nBuckets = 2,
+        keepSnapshots = 5)
+    }
+    val before = treeState(path)
+    // `--keep-snapshot 5` would vacuum down to the default 1 snapshot
+    Seq(Seq("--keep-snapshot", "5"), Seq("--keep-snapshots")).foreach { bad =>
+      val e = intercept[IllegalArgumentException] {
+        RunMaintain.run(spark, Array("vacuum", path) ++ bad)
+      }
+      assert(e.getMessage.contains(s"'${bad.head}'") &&
+        e.getMessage.contains("usage: RunMaintain"), e.getMessage)
+      assert(treeState(path) == before, s"$bad changed the table")
+    }
+    assert(operators.Upsert.snapshots(spark, path).size == 3)
+  }
 }

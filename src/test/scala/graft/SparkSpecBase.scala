@@ -4,20 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM, one session — keep
-  * startup cost out of every suite). */
+  * startup cost out of every suite), built like every local tool's. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // storage-partitioned joins over the graft DSv2 connector (round 17);
-    // inert for non-graft relations — only graft scans report a
-    // KeyGroupedPartitioning
-    .config("spark.sql.sources.v2.bucketing.enabled", "true")
-    .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(2)
 }
 
 abstract class SparkSpecBase extends AnyFunSuite {
