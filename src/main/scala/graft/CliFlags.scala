@@ -1,5 +1,9 @@
 package graft
 
+import java.sql.Timestamp
+import java.time.LocalDateTime
+import java.time.format.{DateTimeFormatter, DateTimeParseException}
+
 /** The `--flag value` tail of the spark-submit mains ([[RunPipeline]],
   * [[RunErasure]], [[RunMaintain]]). A main's usage text is its flag
   * list: every `--name` token in it is accepted and nothing else, so a
@@ -24,4 +28,17 @@ private[graft] object CliFlags {
         .getOrElse(refuse(s"flag '$k' has no value"))
     }.toMap
   }
+
+  private val WallClock = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+
+  /** `flag`'s `yyyy-MM-dd HH:mm:ss` value as UTC wall-clock time.
+    * `Timestamp.valueOf` would read it in the JVM's default zone, which
+    * is the host's, and shift the instant by its UTC offset. Throws
+    * `IllegalArgumentException` naming the flag on any other shape. */
+  def utcTimestamp(flag: String, value: String): Timestamp =
+    try Timestamp.from(LocalDateTime.parse(value, WallClock)
+      .toInstant(java.time.ZoneOffset.UTC))
+    catch { case _: DateTimeParseException =>
+      throw new IllegalArgumentException(
+        s"unparseable $flag '$value' (expected yyyy-MM-dd HH:mm:ss)") }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   *    [[renderingConfs]].
   *  - [[submitted]]: the spark-submit jobs. Master and executor sizing
   *    come from spark-submit; the session gets the [[GraftConf]] scale
-  *    profile.
+  *    profile and the UTC session zone.
   */
 object GraftSession {
 
@@ -45,9 +45,11 @@ object GraftSession {
     s
   }
 
-  /** The session of a spark-submit job, under the scale profile. */
+  /** The session of a spark-submit job, under the scale profile, with
+    * timestamps rendered and parsed in UTC whatever the host's zone. */
   def submitted(appName: String): SparkSession = {
     val s = SparkSession.builder().appName(appName).getOrCreate()
+    s.conf.set("spark.sql.session.timeZone", "UTC")
     GraftConf.applyScaleProfile(s)
     s
   }

@@ -2,13 +2,15 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Extract, Upsert}
-import graft.sources.WatermarkStore
+import graft.sources.{Parquet, WatermarkStore}
 
 /** End-to-end incremental pipeline — the whole reference DAG as ONE Spark
   * application (SURVEY.md §3.1): read → watermark filter → transform →
@@ -25,11 +27,12 @@ import graft.sources.WatermarkStore
   * reference does), flat (one file per writing task, `source` a column,
   * not a directory), and every downstream consumer (merge, watermark
   * maxima, row counts, file metrics) reads the much smaller staged batch.
-  * Counts come from `Observation` metrics and ONE per-source aggregate
-  * over the staged batch (rows + watermark maxima), never from
-  * re-executing the transform. An empty batch short-circuits before the
-  * merge (F6, `embeddings-pipeline.py:278-280`) so no full target rewrite
-  * happens for zero new rows.
+  * Counts come from `Observation` metrics on the staging write — among
+  * them one typed per-source aggregate (rows + watermark maxima,
+  * [[SourceStats]]) — never from re-executing the transform or re-reading
+  * the staged batch. An empty batch short-circuits before the merge (F6,
+  * `embeddings-pipeline.py:278-280`) so no full target rewrite happens for
+  * zero new rows.
   */
 object Pipeline {
 
@@ -41,7 +44,7 @@ object Pipeline {
       statePath: String,
       stagingPath: String,
       sourcesConfigPath: Option[String] = None,
-      fallbackDate: Timestamp = Timestamp.valueOf("2024-01-01 00:00:00"),
+      fallbackDate: Timestamp = DefaultFallback,
       mainRefcoMaxLength: Int = graft.schema.Schemas.MainRefcoMaxLength,
       cleanupStaging: Boolean = true,
       /** > 0 ⇒ manifest-bucketed target
@@ -97,6 +100,9 @@ object Pipeline {
       qualityRules: Seq[(String, org.apache.spark.sql.Column)] = Nil,
       qualityBudgets: Map[String, Long] = Map.empty)
 
+  /** The fallback watermark, 2024-01-01 00:00:00 UTC. */
+  val DefaultFallback: Timestamp = Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z"))
+
   case class RunStats(
       recordsProcessed: Long,
       uniqueRecords: Long,
@@ -130,8 +136,6 @@ object Pipeline {
 
     // S3: watermark state (missing file => full backfill from fallback)
     val prior = WatermarkStore.read(spark, conf.statePath)
-    import spark.implicits._
-    val wmDf = prior.toSeq.toDF("source", "wm")
 
     // F2 + P10 + F3/F4 + P1..P8 — one declarative plan over the source.
     // Quarantine runs BEFORE the watermark filter: a null-timestamp row is
@@ -156,7 +160,7 @@ object Pipeline {
           .as("n_cjk_unmapped"))
     val good = flagged.where(size(col("__errors")) === 0)
       .drop("__errors", "__malformed")
-    val filtered = Extract.incrementalFilter(good, wmDf, conf.fallbackDate)
+    val filtered = Extract.sinceWatermarks(good, prior, conf.fallbackDate)
     // source + event timestamp ride along for the per-source watermarks
     val incoming = Extract.deriveRecord(filtered, keep = Seq("source", "timestamp"))
       .withColumnRenamed("timestamp", "__ts")
@@ -164,8 +168,12 @@ object Pipeline {
     // S4: stage the incremental batch — the ONLY pass over the source.
     // Flat, not partitioned by source: at most one file per writing task
     // and no pre-write sort, and an overwrite replaces the whole staging
-    // directory even under dynamic partition overwrite.
-    Upsert.parquetWriter(incoming).parquet(conf.stagingPath)
+    // directory even under dynamic partition overwrite. The row count and
+    // the A2/A4 per-source watermark maxima (applied only after the
+    // merge) are observed on this write, not read back.
+    val perSourceObs = Observation("per_source")
+    Upsert.parquetWriter(SourceStats.observe(incoming, perSourceObs))
+      .parquet(conf.stagingPath)
     val nQuarantined = quarantineObs.get("n_bad") match {
       case n: Long => n
       case null => 0L
@@ -175,15 +183,9 @@ object Pipeline {
       case null => 0L
     }
 
-    // One read of the staged batch for its row count and the A2/A4
-    // per-source watermark maxima (applied only after the merge). Explicit
-    // schema: an empty staged batch has no footers to infer from (F6
-    // rerun path).
-    val staged = spark.read.schema(incoming.schema).parquet(conf.stagingPath)
-    val perSource = staged.groupBy("source")
-      .agg(count(lit(1)).as("n"), max("__ts").as("wm")).collect()
-    val recordsProcessed = perSource.map(_.getLong(1)).sum
-    val maxima = perSource.map(r => r.getString(0) -> r.getTimestamp(2)).toMap
+    val perSource = SourceStats.get(perSourceObs)
+    val recordsProcessed = perSource.values.map(_._1).sum
+    val maxima = perSource.map { case (src, (_, wm)) => src -> wm }
 
     // F6: empty-batch short-circuit — no merge, no watermark change.
     if (recordsProcessed == 0L) {
@@ -191,7 +193,9 @@ object Pipeline {
       return RunStats(0L, 0L, nQuarantined, 0L, 0L, 0L, prior, nCjkUnmapped)
     }
 
-    // W1: keep-latest per merge key, ordering lexicographic on ISO string
+    // W1: keep-latest per merge key, ordering lexicographic on ISO string.
+    // Read back with the schema it was written with: no footer read.
+    val staged = spark.read.schema(incoming.schema).parquet(conf.stagingPath)
     val batch = staged.drop("source", "__ts")
     val deduped = Dedup.latestPerKey(batch, Seq("main_refco"),
       Seq(col("original_timestamp").desc))
@@ -206,7 +210,7 @@ object Pipeline {
     // J1: broadcast dimension join (inner — unmatched rows drop silently)
     val withDim = conf.sourcesConfigPath match {
       case Some(p) =>
-        val dim = spark.read.parquet(p).select("display_name", "display_name_id")
+        val dim = Parquet.read(spark, p).select("display_name", "display_name_id")
         curated.join(broadcast(dim), Seq("display_name"), "inner")
       case None => curated.withColumn("display_name_id", lit(null).cast("long"))
     }
@@ -265,21 +269,67 @@ object Pipeline {
       maxima.size.toLong, nFiles, nBytes, advanced, nCjkUnmapped)
   }
 
+  /** source -> (rows, latest `__ts`). */
+  private[graft] type PerSource = Map[String, (Long, Timestamp)]
+
+  /** Rows and latest `__ts` per source as ONE typed aggregate, so the
+    * staging write observes them: the map
+    * `groupBy("source").agg(count(lit(1)), max("__ts"))` would collect,
+    * without a second pass. `source` is never null here (`flagErrors`
+    * quarantines a null source): a map key cannot be. */
+  private[graft] object SourceStats
+      extends Aggregator[(String, Timestamp), PerSource, PerSource] {
+    def zero: PerSource = Map.empty
+    def reduce(b: PerSource, row: (String, Timestamp)): PerSource =
+      add(b, row._1, 1L, row._2)
+    def merge(a: PerSource, b: PerSource): PerSource =
+      b.foldLeft(a) { case (m, (src, (n, wm))) => add(m, src, n, wm) }
+    def finish(b: PerSource): PerSource = b
+    def bufferEncoder: Encoder[PerSource] = ExpressionEncoder()
+    def outputEncoder: Encoder[PerSource] = ExpressionEncoder()
+
+    private def add(m: PerSource, src: String, n: Long, wm: Timestamp): PerSource = {
+      val (n0, wm0) = m.getOrElse(src, (0L, null))
+      // max semantics: a null never wins
+      m.updated(src, (n0 + n, if (wm0 == null || (wm != null && wm.after(wm0))) wm else wm0))
+    }
+
+    private val column = udaf(this, Encoders.tuple(Encoders.STRING, Encoders.TIMESTAMP))
+
+    /** `df` with the per-source aggregate of its `source` / `__ts`
+      * columns observed into `obs`. */
+    def observe(df: DataFrame, obs: Observation): DataFrame =
+      df.observe(obs, column(col("source"), col("__ts")).as("per_source"))
+
+    /** The observed aggregate, once the action over [[observe]]'s frame
+      * ran: source -> (rows, max `__ts`). */
+    def get(obs: Observation): PerSource =
+      obs.get("per_source") match {
+        case null => Map.empty
+        case m: scala.collection.Map[_, _] => m.map { case (src, r) =>
+          src.asInstanceOf[String] ->
+            (r.asInstanceOf[Row].getLong(0), r.asInstanceOf[Row].getTimestamp(1))
+        }.toMap
+      }
+  }
+
   /** S7: per-run file count and byte size of the staged Parquet batch
     * (reference `embeddings-pipeline.py:397-432` logs files + MB). */
   def stagingMetrics(spark: SparkSession, stagingPath: String): (Long, Long) = {
     val p = new Path(stagingPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return (0L, 0L)
-    val it = fs.listFiles(p, true)
-    var files = 0L; var bytes = 0L
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        files += 1; bytes += st.getLen
-      }
+    // listStatus, unlike listFiles, loads no per-file permissions
+    // (without the native Hadoop library the local FS forks one `ls` per
+    // file for those). `run` stages flat, so this is one listing; a
+    // staging directory partitioned by source is walked.
+    def parts(dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) parts(st.getPath)
+      else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+      else Nil
     }
-    (files, bytes)
+    val staged = parts(p)
+    (staged.size.toLong, staged.map(_.getLen).sum)
   }
 
   /** S8: delete the staged batch after a successful merge

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
+import graft.sources.Parquet
+
 /** CLI entry point for a compliance-erasure job (right-to-be-forgotten):
   * removes a key list from the merge target AND every content-derived
   * store the pipeline maintains, in one run:
@@ -53,7 +55,7 @@ object RunErasure {
     locally {
       val keys =
         (if (keysPath.endsWith(".json")) spark.read.json(keysPath)
-         else spark.read.parquet(keysPath)).select(col(keyCol))
+         else Parquet.read(spark, keysPath)).select(col(keyCol))
 
       val isManifest = operators.Upsert.currentSnapshot(spark, target)
         .exists { snap =>

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.Parquet
+
 /** CLI entry point for the periodic maintenance jobs a long-lived
   * deployment schedules next to the pipeline itself — the spark-submit
   * face of the library's compaction/retention operators (the reference
@@ -58,30 +60,37 @@ import org.apache.spark.sql.SparkSession
   *         snapshot protocol; add --vacuum true for a hard horizon)
   * }}}
   *
-  * A flag the usage text does not list, or one without a value, fails
-  * the job ([[CliFlags]]): `vacuum <t> --keep-snapshot 5` is refused
-  * instead of vacuuming to the default 1 snapshot.
+  * Each action accepts only the flags its own usage line lists; any
+  * other flag, or one without a value, fails the job before it touches
+  * anything ([[CliFlags]]): `vacuum <t> --keep-snapshot 5` is refused
+  * instead of vacuuming to the default 1 snapshot, and so is
+  * `vacuum <t> --zorder c`, a flag of `table-compact`.
   *
   * Every action commits through the snapshot/manifest protocol: a crash
   * mid-job leaves the previous state fully readable, and concurrent
   * pipeline runs keep reading the old snapshot until the pointer flips.
   */
 object RunMaintain {
-  private val usage =
-    "usage: RunMaintain <action> <path> [opts]\n" +
-      "  ivf-compact <index> [--id-col c]\n" +
-      "  hnsw-compact | neardup-compact | textindex-compact <index>\n" +
-      "  table-compact <target> [--keys k1,k2] [--zorder c1,c2] " +
-      "[--target-file-rows n] [--rebucket n] [--keep-snapshots n]\n" +
-      "  vacuum <target> [--keep-snapshots n]\n" +
-      "  snapshots <target>\n" +
-      "  changes <target> --keys k1,k2 [--since snap] [--out dir]\n" +
-      "  mirror <target> --keys k1,k2 --to dir\n" +
-      "  stats <target> [--small-file-bytes n]\n" +
-      "  expire <target> --ts-col c --older-than ts [--key-col c] " +
+  /** Each action's usage line: its `--flags` are the ones it accepts. */
+  private val actions: Seq[(String, String)] = Seq(
+    "ivf-compact" -> "<index> [--id-col c]",
+    "hnsw-compact" -> "<index>",
+    "neardup-compact" -> "<index>",
+    "textindex-compact" -> "<index>",
+    "table-compact" -> ("<target> [--keys k1,k2] [--zorder c1,c2] " +
+      "[--target-file-rows n] [--rebucket n] [--keep-snapshots n]"),
+    "vacuum" -> "<target> [--keep-snapshots n]",
+    "snapshots" -> "<target>",
+    "changes" -> "<target> --keys k1,k2 [--since snap] [--out dir]",
+    "mirror" -> "<target> --keys k1,k2 --to dir",
+    "stats" -> "<target> [--small-file-bytes n]",
+    "expire" -> ("<target> --ts-col c --older-than ts [--key-col c] " +
       "[--merge-buckets n] [--keep-snapshots n] [--ivf-index p] " +
       "[--ivf-id-col c] [--neardup-index p] [--text-index p] " +
-      "[--components p] [--vacuum true]"
+      "[--components p] [--vacuum true]"))
+
+  private val usage = "usage: RunMaintain <action> <path> [opts]\n" +
+    actions.map { case (a, line) => s"  $a $line" }.mkString("\n")
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.submitted("graft-maintain")
@@ -95,7 +104,9 @@ object RunMaintain {
     require(args.length >= 2, usage)
     val action = args(0)
     val path = args(1)
-    val opts = CliFlags.parse(args.drop(2).toSeq, usage)
+    val line = actions.toMap.getOrElse(action, throw new IllegalArgumentException(
+      s"unknown action '$action' (${actions.map(_._1).mkString(" | ")})\n$usage"))
+    val opts = CliFlags.parse(args.drop(2).toSeq, s"usage: RunMaintain $action $line")
     action match {
       case "ivf-compact" =>
         operators.Ivf.compactIndex(spark, path,
@@ -185,20 +196,9 @@ object RunMaintain {
             "expire requires --older-than <yyyy-MM-dd HH:mm:ss>"))
         // parse driver-side and FAIL LOUD on a malformed cutoff — a null
         // to_timestamp would match nothing and the retention job would
-        // exit 0 having silently retained everything. Interpret the
-        // wall-clock string as UTC explicitly: Timestamp.valueOf would
-        // use the JVM default zone and shift the retention horizon by
-        // the host's UTC offset (every entrypoint pins the SESSION to
-        // UTC; the driver JVM is whatever the host is).
-        val cutoff = try java.sql.Timestamp.from(
-            java.time.LocalDateTime.parse(cutoffStr,
-              java.time.format.DateTimeFormatter
-                .ofPattern("yyyy-MM-dd HH:mm:ss"))
-              .atZone(java.time.ZoneOffset.UTC).toInstant)
-          catch { case _: java.time.format.DateTimeParseException =>
-            throw new IllegalArgumentException(
-              s"unparseable --older-than '$cutoffStr' " +
-                "(expected yyyy-MM-dd HH:mm:ss)") }
+        // exit 0 having silently retained everything. UTC wall clock, as
+        // the session's zone ([[GraftSession.submitted]]).
+        val cutoff = CliFlags.utcTimestamp("--older-than", cutoffStr)
         val keyCol = opts.getOrElse("--key-col", "main_refco")
         import org.apache.spark.sql.functions.{col, lit}
         // Stage the computed key list UNDER THE TARGET'S filesystem (a
@@ -218,7 +218,7 @@ object RunMaintain {
             .where(col(tsCol) < lit(cutoff))
             .select(col(keyCol)).distinct()
             .write.mode("overwrite").parquet(keysPath)
-          val n = spark.read.parquet(keysPath).count()
+          val n = Parquet.read(spark, keysPath).count()
           if (n == 0) {
             System.err.println(s"[maintain] expire: nothing older than $cutoffStr")
           } else {
@@ -232,10 +232,6 @@ object RunMaintain {
               s"[maintain] expired $n key(s) older than $cutoffStr from $path")
           }
         } finally tmpFs.delete(tmpHPath, true)
-      case other =>
-        throw new IllegalArgumentException(s"unknown action '$other' " +
-          "(ivf-compact | hnsw-compact | neardup-compact | textindex-compact | " +
-          "table-compact | vacuum | snapshots | changes | mirror | stats | expire)")
     }
   }
 }

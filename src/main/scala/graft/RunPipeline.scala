@@ -1,7 +1,5 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.SparkSession
 
 /** CLI entry point for the daily incremental run — the piece an external
@@ -18,7 +16,9 @@ import org.apache.spark.sql.SparkSession
   * }}}
   *
   * Master/executor sizing come from spark-submit; the session gets the
-  * [[GraftConf]] scale profile ([[GraftSession.submitted]]). A flag the
+  * [[GraftConf]] scale profile and the UTC session zone
+  * ([[GraftSession.submitted]]); `--fallback` is UTC wall-clock time too,
+  * whatever the host's zone. A flag the
   * usage text does not list, or one without a value, fails the job
   * ([[CliFlags]]). Exit code 0 only after merge + watermark
   * advance succeed (state is written last — the reference's
@@ -62,30 +62,7 @@ object RunPipeline {
         println(s"""{"streamed": true, "target_rows": $n}""")
         return
       }
-      val conf = Pipeline.Config(
-        sourcePath = source,
-        targetPath = target,
-        statePath = state,
-        stagingPath = staging,
-        sourcesConfigPath = opts.get("--dims"),
-        fallbackDate = opts.get("--fallback").map(Timestamp.valueOf)
-          .getOrElse(Timestamp.valueOf("2024-01-01 00:00:00")),
-        mergeBuckets = opts.get("--merge-buckets").map(_.toInt).getOrElse(0),
-        sourceFormat = opts.getOrElse("--format", "parquet"),
-        ivfIndexPath = opts.get("--ivf-index"),
-        ivfNlist = opts.get("--ivf-nlist").map(_.toInt).getOrElse(16),
-        hnswIndexPath = opts.get("--hnsw-index"),
-        // --quality 'name:sqlPredicate;name2:pred2' — predicates parsed
-        // with expr(), TRUE = violation; --quality-budgets 'name=5;...'
-        qualityRules = opts.get("--quality").map(_.split(";").toSeq.map { r =>
-          val Array(n, p) = r.split(":", 2)
-          n -> org.apache.spark.sql.functions.expr(p)
-        }).getOrElse(Nil),
-        qualityBudgets = opts.get("--quality-budgets").map(_.split(";").map { b =>
-          val Array(n, v) = b.split("=", 2)
-          n -> v.toLong
-        }.toMap).getOrElse(Map.empty))
-      val stats = runWithRetries(spark, conf,
+      val stats = runWithRetries(spark, config(source, target, state, staging, opts),
         opts.get("--retries").map(_.toInt).getOrElse(0))
       // one parseable summary line, mirroring the reference's run metrics
       // log (`embeddings-pipeline.py:420-432`)
@@ -97,6 +74,34 @@ object RunPipeline {
         s""""staged_bytes":${stats.stagedBytes}}""")
     } finally spark.stop()
   }
+
+  /** The batch run's [[Pipeline.Config]] from the positional paths and
+    * the flags. */
+  private[graft] def config(source: String, target: String, state: String,
+      staging: String, opts: Map[String, String]): Pipeline.Config =
+    Pipeline.Config(
+      sourcePath = source,
+      targetPath = target,
+      statePath = state,
+      stagingPath = staging,
+      sourcesConfigPath = opts.get("--dims"),
+      fallbackDate = opts.get("--fallback")
+        .fold(Pipeline.DefaultFallback)(CliFlags.utcTimestamp("--fallback", _)),
+      mergeBuckets = opts.get("--merge-buckets").map(_.toInt).getOrElse(0),
+      sourceFormat = opts.getOrElse("--format", "parquet"),
+      ivfIndexPath = opts.get("--ivf-index"),
+      ivfNlist = opts.get("--ivf-nlist").map(_.toInt).getOrElse(16),
+      hnswIndexPath = opts.get("--hnsw-index"),
+      // --quality 'name:sqlPredicate;name2:pred2' — predicates parsed
+      // with expr(), TRUE = violation; --quality-budgets 'name=5;...'
+      qualityRules = opts.get("--quality").map(_.split(";").toSeq.map { r =>
+        val Array(n, p) = r.split(":", 2)
+        n -> org.apache.spark.sql.functions.expr(p)
+      }).getOrElse(Nil),
+      qualityBudgets = opts.get("--quality-budgets").map(_.split(";").map { b =>
+        val Array(n, v) = b.split("=", 2)
+        n -> v.toLong
+      }.toMap).getOrElse(Map.empty))
 
   /** Parse the `--enrich` flag (VERDICT r8 #7 — the streaming enrichment
     * stage was start()-only, unreachable from the CLI):

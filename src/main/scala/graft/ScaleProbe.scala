@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Compute-bound scaling probe (round 19, VERDICT r18 #5).
   *
   * The driver's 8-vs-32-core comparison at sf0.1 carries no parallelism
@@ -116,7 +118,7 @@ object ScaleProbe {
     if (marker.exists()) return
     val t0 = System.nanoTime()
     for ((table, keys) <- keyCols.toSeq.sortBy(_._1)) {
-      val base = spark.read.parquet(s"$src/$table.parquet")
+      val base = Parquet.read(spark, s"$src/$table.parquet")
       val stacked = (0 until copies).map { i =>
         keys.foldLeft(base) { (d, k) =>
           d.withColumn(k, (col(k) + lit(i * Offset)).cast(base.schema(k).dataType))
@@ -128,7 +130,7 @@ object ScaleProbe {
         .write.mode("overwrite").parquet(s"$dir/$table.parquet")
     }
     for (dim <- Seq("nation", "region")) {
-      spark.read.parquet(s"$src/$dim.parquet")
+      Parquet.read(spark, s"$src/$dim.parquet")
         .write.mode("overwrite").parquet(s"$dir/$dim.parquet")
     }
     marker.getParentFile.mkdirs()

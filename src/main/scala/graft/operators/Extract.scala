@@ -31,7 +31,10 @@ object Extract {
     * source has no watermark yet (`embeddings-pipeline.py:151-158`).
     *
     * `watermarks` is a tiny (source, wm) DataFrame — broadcast so the
-    * filter costs one map-side hash probe per row, never a shuffle.
+    * filter costs one map-side hash probe per row, never a shuffle, but
+    * the broadcast is a Spark job of its own. A caller holding the
+    * watermarks on the driver (`graft.Pipeline`) uses [[sinceWatermarks]],
+    * which needs neither the join nor the job.
     */
   def incrementalFilter(
       df: DataFrame,
@@ -44,6 +47,20 @@ object Extract {
       .where(when(col("__wm").isNotNull, col(tsCol) > col("__wm"))
         .otherwise(col(tsCol) >= lit(fallback)))
       .drop("__wm")
+  }
+
+  /** [[incrementalFilter]] for watermarks held on the driver, over the
+    * `source` and `timestamp` columns: each row's source is looked up in
+    * a `map<source, wm>` literal, so the plan has no join and building it
+    * runs no broadcast job. A source missing from the map, or a null
+    * source, takes the fallback. */
+  def sinceWatermarks(
+      df: DataFrame,
+      watermarks: Map[String, Timestamp],
+      fallback: Timestamp): DataFrame = {
+    val wm = typedLit(watermarks).apply(col("source"))
+    df.where(when(wm.isNotNull, col("timestamp") > wm)
+      .otherwise(col("timestamp") >= lit(fallback)))
   }
 
   /** P2–P4: the normalized, truncated merge key

@@ -5,6 +5,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Snapshot-committed store for DERIVED-INDEX tables — IVF centroids and
   * cell assignments ([[Ivf]]), MinHash sigs/bands ([[Dedup]]): the same
   * manifest + `_current`-pointer commit protocol as [[Upsert]]'s
@@ -94,10 +96,10 @@ object IndexStore {
           case Some(ps) => ps.flatMap(p => entries.getOrElse(p, Nil))
           case None => entries.values.flatten.toSeq
         }).map(Upsert.resolveEntry(root, _))
-        if (wanted.nonEmpty) spark.read.parquet(wanted: _*)
+        if (wanted.nonEmpty) Parquet.readFiles(spark, wanted)
         else Upsert.emptyFromManifest(spark, body, s"index table $root")
       case None =>
-        val df = spark.read.parquet(root)
+        val df = Parquet.read(spark, root)
         (partCol, parts) match {
           case (Some(pc), Some(ps)) =>
             df.where(col(pc).isin(ps.map(Int.box): _*))

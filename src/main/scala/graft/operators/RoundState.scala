@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Parquet
+
 /** Durable per-round loop state for CROSS-APPLICATION resume — the
   * complement of [[Ckpt]]'s fault contract. Reliable checkpoints
   * (`spark.graft.checkpointDir`) survive EXECUTOR loss inside one
@@ -37,7 +39,7 @@ final class RoundState(spark: SparkSession, dir: String) {
       .collect { case n if n.startsWith("round-") => n.stripPrefix("round-").toInt }
       .filter(i => fs.exists(marker(i)))
     committed.sorted.lastOption
-      .map(i => i -> spark.read.parquet(new Path(roundDir(i), "data").toString))
+      .map(i => i -> Parquet.read(spark, new Path(roundDir(i), "data").toString))
   }
 
   /** Commit round `i`: write the frame, then the marker (the commit

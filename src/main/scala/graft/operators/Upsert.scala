@@ -5,6 +5,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Join-based MERGE upsert — the reference's Snowflake `MERGE INTO`
   * (J3, `embeddings-pipeline.py:294-352`) re-expressed on vanilla Spark.
   *
@@ -303,7 +305,7 @@ object Upsert {
         val mf = new Path(targetPath, s"$snap.manifest.json")
         if (mf.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(mf))
           readManifestTable(spark, targetPath)
-        else spark.read.parquet(new Path(targetPath, snap).toString)
+        else Parquet.read(spark, new Path(targetPath, snap).toString)
       case None =>
         // no pointer: a manifest-layout table whose very first publish
         // was lost still has committed manifests — manifestBody rolls
@@ -311,7 +313,7 @@ object Upsert {
         val root = new Path(targetPath)
         val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (committedIds(fs, root).nonEmpty) readManifestTable(spark, targetPath)
-        else spark.read.parquet(targetPath)
+        else Parquet.read(spark, targetPath)
     }
 
   /** MERGE into a snapshot-pointer Parquet target. The merged result is
@@ -347,7 +349,7 @@ object Upsert {
     adoptLegacyTarget(fs, hadoopConf, targetPath)
     val current = currentSnapshot(spark, targetPath)
     val target = current match {
-      case Some(snap) => spark.read.parquet(new Path(root, snap).toString)
+      case Some(snap) => Parquet.read(spark, new Path(root, snap).toString)
       case None =>
         val extra = updates.schema.fields.filterNot(f => refreshExprs.contains(f.name))
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -450,9 +452,9 @@ object Upsert {
       val body = manifestBody(spark, targetPath, Some(snapshot)).get
       val files = parseManifestEntries(body)
         .values.flatten.toSeq.map(resolveEntry(targetPath, _))
-      if (files.nonEmpty) spark.read.parquet(files: _*)
+      if (files.nonEmpty) Parquet.readFiles(spark, files)
       else emptyFromManifest(spark, body, s"manifest $snapshot under $targetPath")
-    } else spark.read.parquet(new Path(targetPath, snapshot).toString)
+    } else Parquet.read(spark, new Path(targetPath, snapshot).toString)
   }
 
   /** Change-data-feed: the row-level diff between two retained snapshots
@@ -488,7 +490,7 @@ object Upsert {
         def readSide(m: Map[Int, Seq[String]], body: String): DataFrame = {
           val files = changed.toSeq.sorted.flatMap(b => m.getOrElse(b, Nil))
             .map(resolveEntry(targetPath, _))
-          if (files.nonEmpty) spark.read.parquet(files: _*)
+          if (files.nonEmpty) Parquet.readFiles(spark, files)
           else emptyFromManifest(spark, body,
             s"snapshot side of changesBetween under $targetPath")
         }
@@ -913,7 +915,7 @@ object Upsert {
             k
           }
         val wanted = kept.map(resolveEntry(targetPath, _))
-        if (wanted.nonEmpty) spark.read.parquet(wanted: _*)
+        if (wanted.nonEmpty) Parquet.readFiles(spark, wanted)
         else emptyFromManifest(spark, body, s"committed state of $targetPath")
     }
 
@@ -963,7 +965,7 @@ object Upsert {
       val merged =
         if (touchedFiles.isEmpty)
           refreshExprs.foldLeft(withBucket) { case (df, (c, e)) => df.withColumn(c, e) }
-        else merge(spark.read.parquet(touchedFiles: _*), withBucket,
+        else merge(Parquet.readFiles(spark, touchedFiles), withBucket,
           keys, insertOnlyCols, refreshExprs)
 
       val nextId = nextFreeId(spark, targetPath, current)
@@ -1821,7 +1823,7 @@ object Upsert {
     currentSnapshot(spark, targetPath) match {
       case None => 0L
       case Some(snap) =>
-        val target = spark.read.parquet(new Path(root, snap).toString)
+        val target = Parquet.read(spark, new Path(root, snap).toString)
         // NOT(pred) keeps rows where pred is NULL too — SQL DELETE
         // semantics (only rows where the predicate IS TRUE are removed)
         val remaining = target.where(!coalesce(predicate, lit(false)))
@@ -1831,7 +1833,7 @@ object Upsert {
         val writer = parquetWriter(remaining)
         (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
           .parquet(new Path(root, snapName).toString)
-        val after = spark.read.parquet(new Path(root, snapName).toString).count()
+        val after = Parquet.read(spark, new Path(root, snapName).toString).count()
         // same loud-conflict contract as mergeIntoParquet (single-writer
         // layout), incl. the cross-process create-exclusive claim (round 9)
         if (!currentSnapshot(spark, targetPath).contains(snap))
@@ -1878,7 +1880,7 @@ object Upsert {
     currentSnapshot(spark, targetPath) match {
       case None => 0L
       case Some(snap) =>
-        val target = spark.read.parquet(new Path(root, snap).toString)
+        val target = Parquet.read(spark, new Path(root, snap).toString)
         val remaining = antiJoinKeys(target,
           deleteKeys.select(keys.map(col): _*).distinct(), keys)
         val before = target.count()
@@ -1887,7 +1889,7 @@ object Upsert {
         val writer = parquetWriter(remaining)
         (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
           .parquet(new Path(root, snapName).toString)
-        val after = spark.read.parquet(new Path(root, snapName).toString).count()
+        val after = Parquet.read(spark, new Path(root, snapName).toString).count()
         // same loud-conflict contract as mergeIntoParquet (single-writer
         // layout), incl. the cross-process create-exclusive claim (round 9)
         if (!currentSnapshot(spark, targetPath).contains(snap))
@@ -1948,7 +1950,7 @@ object Upsert {
       val touchedFiles = touched.flatMap(b => manifest.getOrElse(b, Nil))
         .map(resolveEntry(targetPath, _)).toSeq
       val remaining = antiJoinKeys(
-        spark.read.parquet(touchedFiles: _*), delKeys.drop("__bucket"), keys)
+        Parquet.readFiles(spark, touchedFiles), delKeys.drop("__bucket"), keys)
       val nextId = nextFreeId(spark, targetPath, current)
       try {
         commitSnapshot(spark, targetPath, remaining, touched.toSeq,

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.F
 import graft.operators.{Anomaly, Correlate, DailyCounts, Experiment, Hnsw, IndexStore, TextIndex, TimeSeries, Web, Bpe, Cardinality, Clustering, Cooccur, Decontaminate, Dedup, EditDistance, Embeddings, Extract, Frequencies, Funnel, Graph, Ivf, Joins, Multimodal, Pq, Quantiles, Sampling, Scd2, Sessionize, Similarity, Sketch, TextAnalysis, Upsert, Validate}
+import graft.sources.Parquet
 import graft.streaming.IncrementalStream
 import graft.SparkEntry._
 
@@ -348,7 +349,7 @@ private[graft] object TierCore extends Registry {
                 val folded =
                   if (!fs.exists(cur)) batch.drop("change_type")
                   else Upsert.applyChanges(
-                    s.read.parquet(mirror), batch, Seq("doc_id"))
+                    Parquet.read(s, mirror), batch, Seq("doc_id"))
                 folded.write.mode("overwrite").parquet(next.toString)
                 fs.delete(cur, true)
                 fs.rename(next, cur)
@@ -368,7 +369,7 @@ private[graft] object TierCore extends Registry {
         drain() // incremental: the net diff of the second merge
         done.createNewFile()
       }
-      s.read.parquet(mirror).select("doc_id", "cleaned_ref", "category", "val")
+      Parquet.read(s, mirror).select("doc_id", "cleaned_ref", "category", "val")
     }),
 
     // r18 (VERDICT r17 #1): SQL predicate DELETE through the catalog —
@@ -632,7 +633,7 @@ private[graft] object TierCore extends Registry {
         drain() // incremental: exactly the appended files
         done.createNewFile()
       }
-      s.read.parquet(mirror).select("doc_id", "source", "n_chars")
+      Parquet.read(s, mirror).select("doc_id", "source", "n_chars")
     }),
 
     // r18 (VERDICT r17 #4): GROUPED aggregate pushdown — a GROUP BY over

@@ -138,10 +138,10 @@ private[sources] object GraftTableProvider {
               .map(Upsert.resolveEntry(path, _))
             require(files.nonEmpty,
               s"$path holds no data files and records no schema")
-            spark.read.parquet(files.head).schema
+            Parquet.readFiles(spark, files.take(1)).schema
           }
         StructType(full.fields.filterNot(_.name.startsWith("__")))
-      case DirPath(p) => spark.read.parquet(p).schema
+      case DirPath(p) => Parquet.read(spark, p).schema
     }
   }
 
@@ -728,7 +728,7 @@ private[sources] class GraftScanBuilder(tableSchema: StructType, path: String,
     if (GraftScanBuilder.verifiedLayouts.size > 10000)
       GraftScanBuilder.verifiedLayouts.clear()
     entries.toSeq.sortBy(_._1).find(_._2.nonEmpty).foreach { case (b, files) =>
-      val sampled = spark.read.parquet(Upsert.resolveEntry(path, files.head))
+      val sampled = Parquet.readFiles(spark, Seq(Upsert.resolveEntry(path, files.head)))
         .select(pmod(xxhash64(keys.map(col): _*), lit(nb)).cast("int").as("h"))
         .limit(1).collect()
       sampled.headOption.foreach { r =>

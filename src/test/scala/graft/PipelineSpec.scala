@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SaveMode
 
 import graft.sources.WatermarkStore
@@ -557,5 +559,23 @@ class PipelineSpec extends SparkSpecBase {
           s"$what (mergeBuckets = $buckets): $dict")
       }
     }
+  }
+
+  test("stagingMetrics counts flat and source-partitioned staging alike") {
+    val dir = Files.createTempDirectory("graft-pipe-metrics").toString
+    val rows = Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("source", "v")
+    rows.repartition(2).write.parquet(s"$dir/flat")
+    rows.write.partitionBy("source").parquet(s"$dir/nested")
+    def sizes(p: String) = {
+      val root = java.nio.file.Paths.get(p)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+        .map(Files.size).toSeq finally walk.close()
+    }
+    Seq(s"$dir/flat", s"$dir/nested").foreach { p =>
+      val want = sizes(p)
+      assert(Pipeline.stagingMetrics(spark, p) == (want.size.toLong, want.sum), p)
+    }
+    assert(Pipeline.stagingMetrics(spark, s"$dir/missing") == (0L, 0L))
   }
 }

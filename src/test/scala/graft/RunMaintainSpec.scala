@@ -186,4 +186,23 @@ class RunMaintainSpec extends SparkSpecBase {
     }
     assert(operators.Upsert.snapshots(spark, path).size == 3)
   }
+
+  test("another action's flag is refused before the action runs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-maint-own").toString
+    val path = s"$dir/table"
+    Seq(0L, 1L).foreach { k =>
+      operators.Upsert.mergeIntoManifestBucketedParquet(spark, path,
+        Seq((k, s"v$k")).toDF("key", "v"), Seq("key"), nBuckets = 2,
+        keepSnapshots = 5)
+    }
+    val before = treeState(path)
+    // --zorder belongs to table-compact; vacuum used to accept and ignore it
+    val e = intercept[IllegalArgumentException] {
+      RunMaintain.run(spark, Array("vacuum", path, "--zorder", "c"))
+    }
+    assert(e.getMessage.contains("'--zorder'") &&
+      e.getMessage.contains("usage: RunMaintain vacuum"), e.getMessage)
+    assert(treeState(path) == before, "the refused vacuum changed the table")
+    assert(operators.Upsert.snapshots(spark, path).size == 2)
+  }
 }

@@ -33,11 +33,14 @@ class ExtractSpec extends SparkSpecBase {
       ("b", Timestamp.valueOf("2024-01-05 00:00:00")), // == fallback: kept
       ("b", Timestamp.valueOf("2024-01-04 23:59:59"))  // < fallback: dropped
     ).toDF("source", "timestamp")
-    val out = Extract.incrementalFilter(rows, wm,
-      Timestamp.valueOf("2024-01-05 00:00:00"))
-    assert(out.select("timestamp").as[Timestamp].collect().toSet ==
-      Set(Timestamp.valueOf("2024-01-10 00:00:01"),
-        Timestamp.valueOf("2024-01-05 00:00:00")))
+    val fallback = Timestamp.valueOf("2024-01-05 00:00:00")
+    val want = Set(Timestamp.valueOf("2024-01-10 00:00:01"), fallback)
+    val joined = Extract.incrementalFilter(rows, wm, fallback)
+    assert(joined.select("timestamp").as[Timestamp].collect().toSet == want)
+    // the driver-held form: "b" is missing from the map, so takes the fallback
+    val lookedUp = Extract.sinceWatermarks(rows,
+      Map("a" -> Timestamp.valueOf("2024-01-10 00:00:00")), fallback)
+    assert(lookedUp.select("timestamp").as[Timestamp].collect().toSet == want)
   }
 
   test("P5: scalar country strings are coerced to 1-element arrays") {
