@@ -31,7 +31,7 @@ import graft.sources.{Parquet, WatermarkStore}
   * them one typed per-source aggregate (rows + watermark maxima,
   * [[SourceStats]]) — never from re-executing the transform or re-reading
   * the staged batch. An empty batch short-circuits before the merge (F6,
-  * `embeddings-pipeline.py:278-280`) so no full target rewrite happens for
+  * `embeddings-pipeline.py:278-280`) so no merge commit happens for
   * zero new rows.
   */
 object Pipeline {
@@ -47,11 +47,16 @@ object Pipeline {
       fallbackDate: Timestamp = DefaultFallback,
       mainRefcoMaxLength: Int = graft.schema.Schemas.MainRefcoMaxLength,
       cleanupStaging: Boolean = true,
-      /** > 0 ⇒ manifest-bucketed target
-        * ([[graft.operators.Upsert.mergeIntoManifestBucketedParquet]]):
-        * each run reads and rewrites only the touched buckets and commits
-        * with one atomic manifest publish — the 100 TB layout; 0 ⇒
-        * snapshot-pointer rewrite of the whole target. */
+      /** The target is a manifest table
+        * ([[graft.operators.Upsert.mergeIntoManifestBucketedParquet]]),
+        * committed with one atomic manifest publish. > 1 ⇒ hash-bucketed:
+        * each run reads and rewrites only the touched buckets. 0 (or 1) ⇒
+        * one bucket, merge-on-read: each run writes only the batch's
+        * post-merge rows and records the positions of the target rows they
+        * supersede; readers drop those rows, `RunMaintain table-compact`
+        * reclaims them. A first run onto an existing flat snapshot-directory
+        * or plain target adopts its files in place. A table's recorded
+        * bucket count wins over this field. */
       mergeBuckets: Int = 0,
       /** Selects no writer: bucketed targets are always manifest-committed.
         * `false` with `mergeBuckets > 0` named the removed
@@ -219,17 +224,12 @@ object Pipeline {
     val unique = Observation("unique")
     val observed = withDim.observe(unique, count(lit(1)).as("n"))
 
-    // J3: idempotent merge (cleaned_ref inserted but never updated)
-    if (conf.mergeBuckets > 0)
-      Upsert.mergeIntoManifestBucketedParquet(spark, conf.targetPath, observed,
-        keys = Seq("main_refco"), nBuckets = conf.mergeBuckets,
-        insertOnlyCols = Set("cleaned_ref"),
-        refreshExprs = Map("embedding_inserted_at" -> current_timestamp()))
-    else
-      Upsert.mergeIntoParquet(spark, conf.targetPath, observed,
-        keys = Seq("main_refco"),
-        insertOnlyCols = Set("cleaned_ref"),
-        refreshExprs = Map("embedding_inserted_at" -> current_timestamp()))
+    // J3: idempotent merge (cleaned_ref inserted but never updated); one
+    // bucket is the merge-on-read table
+    Upsert.mergeIntoManifestBucketedParquet(spark, conf.targetPath, observed,
+      keys = Seq("main_refco"), nBuckets = math.max(1, conf.mergeBuckets),
+      insertOnlyCols = Set("cleaned_ref"),
+      refreshExprs = Map("embedding_inserted_at" -> current_timestamp()))
     val uniqueRecords = unique.get("n").asInstanceOf[Long]
 
     // Incremental ANN index maintenance: assign ONLY this batch's vectors

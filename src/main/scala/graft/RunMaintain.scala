@@ -29,7 +29,9 @@ import graft.sources.Parquet
   *         full rewrite of a merge target: resize files, optionally
   *         re-bucket to a count that fits the data, and with --zorder,
   *         Morton-cluster the rewrite so file-stats pruning works on
-  *         every named dimension (Delta OPTIMIZE ZORDER's role)
+  *         every named dimension (Delta OPTIMIZE ZORDER's role). On a
+  *         one-bucket merge-on-read target (no --zorder / --rebucket) it
+  *         rewrites only the files holding superseded rows, dropping them
   *     vacuum <targetPath> [--keep-snapshots 1]
   *         expire retained snapshots of a merge target NOW (compliance
   *         erasure horizon; also the post-incident storage reclaim)
@@ -48,7 +50,8 @@ import graft.sources.Parquet
   *         invocation — schedule it); stdout prints the recorded cursor
   *     stats <targetPath> [--small-file-bytes N]
   *         metadata-only layout-health census: files/bytes per bucket,
-  *         small-file count, bucket skew — the table-compact tripwire
+  *         small-file count, bucket skew, superseded (dead) rows — the
+  *         table-compact tripwire
   *     expire <targetPath> --ts-col <c> --older-than <ts>
   *            [--key-col main_refco] [--merge-buckets N]
   *            [--keep-snapshots N] [--ivf-index p] [--ivf-id-col c]
@@ -160,8 +163,9 @@ object RunMaintain {
       case "stats" =>
         val small = opts.get("--small-file-bytes").map(_.toLong)
           .getOrElse(8L << 20) // default: files under 8 MiB are "small"
-        val rows = operators.Upsert.tableStats(spark, path)
-          .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+        val stats = operators.Upsert.tableStats(spark, path).collect()
+        val rows = stats.map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+        val superseded = stats.map(_.getMap[String, Long](3).values.sum).sum
         val files = rows.map(_._2).sum
         val bytes = rows.map(_._3).sum
         val smallCount = rows.collect {
@@ -173,7 +177,8 @@ object RunMaintain {
             math.max(1.0, bytes.toDouble / rows.length)
         // stdout: one summary line, machine-readable — the cron tripwire
         println(f"""{"buckets":${rows.length},"files":$files,"bytes":$bytes,""" +
-          f""""small_files":$smallCount,"max_bucket_skew":$skew%.2f}""")
+          f""""small_files":$smallCount,"max_bucket_skew":$skew%.2f,""" +
+          f""""superseded_rows":$superseded}""")
         rows.sortBy(_._1).foreach { case (b, n, sz) =>
           System.err.println(f"[maintain] bucket=$b%4d files=$n%5d bytes=$sz%12d")
         }

@@ -30,6 +30,19 @@ import graft.operators.Upsert
   *    val, every hot key reads its writer's last merge, and the DSv2
   *    connector (`spark.read.format("graft")`) serves the identical
   *    row multiset. Prints `SOAKC verify PASS rows=<n>`.
+  *  - `mor-writer <target> <wid> <nMerges>` merges into a ONE-bucket
+  *    (merge-on-read) table batches that overlap the other writer's:
+  *    besides its own rows, every batch updates the shared keys
+  *    `shared_<j>` to `100 * wid + i`. A writer that loses a commit race
+  *    must recompute the superseded positions against the winner's
+  *    manifest; stale positions would leave two live rows for a key.
+  *  - `mor-verify <target> <nWriters> <nMerges>` replays the commits:
+  *    every snapshot must be the one before it merged with exactly one
+  *    not-yet-seen batch (no key twice), every batch must appear once,
+  *    and the table must equal `Upsert.merge` folded over the batches in
+  *    that commit order. The DSv2 connector must refuse the table by
+  *    name (it cannot drop superseded rows). Prints
+  *    `SOAKC mor-verify PASS rows=<n>`.
   */
 object SoakCommit {
   private val RowsPerBatch = 20
@@ -41,6 +54,10 @@ object SoakCommit {
     def batch(wid: Int, i: Int) =
       ((0 until RowsPerBatch).map(j => (s"w${wid}_m${i}_r$j", i.toLong)) :+
         (s"hot_w$wid", i.toLong)).toDF("key", "v")
+
+    def morBatch(wid: Int, i: Int) =
+      ((0 until 5).map(j => (s"w${wid}_m${i}_r$j", i.toLong)) ++
+        (0 until 5).map(j => (s"shared_$j", 100L * wid + i))).toDF("key", "v")
 
     args.toList match {
       case "writer" :: target :: widS :: nS :: rest =>
@@ -101,9 +118,57 @@ object SoakCommit {
         println(s"SOAKC verify PASS rows=${t.size} commits=${ids.size}")
         spark.stop()
 
+      case "mor-writer" :: target :: widS :: nS :: Nil =>
+        val wid = widS.toInt
+        for (i <- 0 until nS.toInt) {
+          Upsert.mergeIntoManifestBucketedParquet(spark, target, morBatch(wid, i),
+            Seq("key"), nBuckets = 1, keepSnapshots = 1024, maxRetries = 10)
+          println(s"SOAKC mor w$wid merged $i")
+        }
+        println(s"SOAKC mor w$wid done")
+        spark.stop()
+
+      case "mor-verify" :: target :: nwS :: nmS :: Nil =>
+        val batches = (for (w <- 0 until nwS.toInt; i <- 0 until nmS.toInt)
+          yield (w, i) -> morBatch(w, i).as[(String, Long)].collect().toMap).toMap
+        val root = new org.apache.hadoop.fs.Path(target)
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val ids = Upsert.committedIds(fs, root).sorted
+        require(ids == (0L until batches.size.toLong),
+          s"snapshot ids not dense 0..${batches.size - 1}: $ids")
+        var state = Map.empty[String, Long]
+        val order = ids.map { id =>
+          val rows = Upsert.readTargetAt(spark, target, f"snap-$id%09d")
+            .select("key", "v").as[(String, Long)].collect()
+          val snap = rows.toMap
+          require(snap.size == rows.length, s"snap-$id serves a key twice: " +
+            "superseded positions were not recomputed against the winner")
+          val used = batches.collect { case (b, rs) if state ++ rs == snap => b }
+          require(used.size == 1, s"snap-$id is not the state before it " +
+            s"merged with exactly one batch (matches: $used)")
+          state = snap
+          used.head
+        }
+        require(order.distinct.size == batches.size, s"batches not each committed once: $order")
+        val empty = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          morBatch(0, 0).schema)
+        val fold = order.foldLeft(empty)((t, b) => Upsert.merge(t, morBatch(b._1, b._2), Seq("key")))
+          .select("key", "v").as[(String, Long)].collect().sorted.toSeq
+        val t = Upsert.readTarget(spark, target).select("key", "v")
+          .as[(String, Long)].collect().sorted.toSeq
+        require(t == fold, "table differs from the Upsert.merge fold in commit order")
+        val refused =
+          try { spark.read.format("graft").load(target).collect(); false }
+          catch { case _: Upsert.MergeOnReadUnsupportedException => true }
+        require(refused, "the DSv2 connector served a table with superseded rows")
+        println(s"SOAKC mor-verify PASS rows=${t.size} commits=${ids.size} " +
+          s"writers=${order.map(_._1).mkString("")}")
+        spark.stop()
+
       case other =>
         System.err.println(s"usage: writer <target> <wid> <n> [killAt [before|after [startAt]]] | " +
-          s"verify <target> <nWriters> <nMerges> <expectCommits>; got: $other")
+          s"verify <target> <nWriters> <nMerges> <expectCommits> | " +
+          s"mor-writer <target> <wid> <n> | mor-verify <target> <nWriters> <nMerges>; got: $other")
         sys.exit(2)
     }
   }

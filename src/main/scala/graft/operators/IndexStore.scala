@@ -92,12 +92,10 @@ object IndexStore {
         val body = Upsert.manifestBody(spark, root, Some(snap)).getOrElse(
           throw new IllegalStateException(s"unreadable manifest $snap under $root"))
         val entries = Upsert.parseManifestEntries(body)
-        val wanted = (parts match {
+        Upsert.readEntries(spark, root, body, parts match {
           case Some(ps) => ps.flatMap(p => entries.getOrElse(p, Nil))
           case None => entries.values.flatten.toSeq
-        }).map(Upsert.resolveEntry(root, _))
-        if (wanted.nonEmpty) Parquet.readFiles(spark, wanted)
-        else Upsert.emptyFromManifest(spark, body, s"index table $root")
+        }, s"index table $root")
       case None =>
         val df = Parquet.read(spark, root)
         (partCol, parts) match {

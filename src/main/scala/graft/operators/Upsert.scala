@@ -114,6 +114,14 @@ object Upsert {
   // previous complete snapshot — readers never observe a torn table — and
   // the orphan snapshot directory is clobbered/garbage-collected by the
   // next successful run.
+  //
+  // Every commit rewrites the whole table. `Pipeline.run` no longer
+  // writes this layout: it commits one-bucket merge-on-read manifest
+  // tables (see the manifest note below), and its first run onto an
+  // existing flat snapshot directory adopts that directory's files in
+  // place. `mergeIntoParquet` on a manifest table hands the merge to the
+  // manifest writer; on a snapshot-directory target it keeps writing
+  // snapshots.
   // ------------------------------------------------------------------
 
   private def pointerPath(targetPath: String): Path = new Path(targetPath, "_current")
@@ -320,7 +328,9 @@ object Upsert {
     * written as a NEW snapshot directory, then the `_current` pointer file
     * is atomically replaced — no directory rename anywhere on the commit
     * path (see layout note above). A missing target behaves as an empty
-    * table (first run = pure insert).
+    * table (first run = pure insert). On a manifest table the merge is
+    * [[mergeIntoManifestBucketedParquet]]'s, at the table's recorded
+    * bucket count (merge-on-read for one bucket).
     *
     * @param keepSnapshots snapshot dirs retained after a successful commit
     *   (>= 1; the live one counts). Retention > 1 keeps recent snapshots
@@ -343,6 +353,17 @@ object Upsert {
       keepSnapshots: Int = 1,
       evolveSchema: Boolean = false): Unit = {
     require(keepSnapshots >= 1, "keepSnapshots must be >= 1")
+    if (manifestBody(spark, targetPath, None).isDefined) {
+      // a manifest table (e.g. the one `Pipeline.run` commits): its own
+      // writer merges it; the table's recorded bucket count wins
+      require(partitionBy.isEmpty && !evolveSchema, s"$targetPath is a " +
+        "manifest table: partitionBy and evolveSchema apply to the " +
+        "snapshot-directory layout only")
+      mergeIntoManifestBucketedParquet(spark, targetPath, updates, keys,
+        nBuckets = 1, insertOnlyCols = insertOnlyCols,
+        refreshExprs = refreshExprs, keepSnapshots = keepSnapshots)
+      return
+    }
     val root = new Path(targetPath)
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val fs = root.getFileSystem(hadoopConf)
@@ -350,13 +371,7 @@ object Upsert {
     val current = currentSnapshot(spark, targetPath)
     val target = current match {
       case Some(snap) => Parquet.read(spark, new Path(root, snap).toString)
-      case None =>
-        val extra = updates.schema.fields.filterNot(f => refreshExprs.contains(f.name))
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(
-            extra ++ refreshExprs.keys.map(k =>
-              org.apache.spark.sql.types.StructField(k,
-                org.apache.spark.sql.types.TimestampType))))
+      case None => emptyTargetFor(spark, updates, refreshExprs)
     }
     val merged = merge(target, updates, keys, insertOnlyCols, refreshExprs,
       evolveSchema)
@@ -450,10 +465,9 @@ object Upsert {
     val mf = new Path(targetPath, s"$snapshot.manifest.json")
     if (mf.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(mf)) {
       val body = manifestBody(spark, targetPath, Some(snapshot)).get
-      val files = parseManifestEntries(body)
-        .values.flatten.toSeq.map(resolveEntry(targetPath, _))
-      if (files.nonEmpty) Parquet.readFiles(spark, files)
-      else emptyFromManifest(spark, body, s"manifest $snapshot under $targetPath")
+      readEntries(spark, targetPath, body,
+        parseManifestEntries(body).values.flatten.toSeq,
+        s"manifest $snapshot under $targetPath")
     } else Parquet.read(spark, new Path(targetPath, snapshot).toString)
   }
 
@@ -485,15 +499,16 @@ object Upsert {
       case (Some(fb), Some(tb)) =>
         val fm = parseManifestEntries(fb)
         val tm = parseManifestEntries(tb)
+        val (fd, td) = (parseRowDeletes(fb), parseRowDeletes(tb))
+        // a bucket changed when its files or their superseded rows did
+        def state(m: Map[Int, Seq[String]], d: Map[String, Seq[Long]], b: Int) =
+          m.getOrElse(b, Nil).map(f => f -> d.getOrElse(f, Nil).toSet).toSet
         val changed = (fm.keySet ++ tm.keySet).filter(b =>
-          fm.getOrElse(b, Nil).toSet != tm.getOrElse(b, Nil).toSet)
-        def readSide(m: Map[Int, Seq[String]], body: String): DataFrame = {
-          val files = changed.toSeq.sorted.flatMap(b => m.getOrElse(b, Nil))
-            .map(resolveEntry(targetPath, _))
-          if (files.nonEmpty) Parquet.readFiles(spark, files)
-          else emptyFromManifest(spark, body,
+          state(fm, fd, b) != state(tm, td, b))
+        def readSide(m: Map[Int, Seq[String]], body: String): DataFrame =
+          readEntries(spark, targetPath, body,
+            changed.toSeq.sorted.flatMap(b => m.getOrElse(b, Nil)),
             s"snapshot side of changesBetween under $targetPath")
-        }
         snapshotDiff(readSide(fm, fb), readSide(tm, tb), keys)
       case _ =>
         snapshotDiff(readTargetAt(spark, targetPath, fromSnapshot),
@@ -512,15 +527,20 @@ object Upsert {
     // the whole table as spurious 'update's (CdcSpec pins this)
     val dataCols = newDf.columns
       .filterNot(c => keys.contains(c) || c.startsWith("__")).toSeq
-    val o = oldDf.select((keys.map(col) ++
+    // keys match null-safely, as the merge matched them: an unchanged
+    // NULL-keyed row is no change
+    val o = oldDf.select((keys.map(k => col(k).as(s"__ko_$k")) ++
       dataCols.map(c => col(c).as(s"__old_$c"))): _*)
       .withColumn("__in_old", lit(true))
-    val n = newDf.select((keys.map(col) ++
+    val n = newDf.select((keys.map(k => col(k).as(s"__kn_$k")) ++
       dataCols.map(c => col(c).as(s"__new_$c"))): _*)
       .withColumn("__in_new", lit(true))
     val anyDiff = dataCols.map(c => !(col(s"__old_$c") <=> col(s"__new_$c")))
       .reduceOption(_ || _).getOrElse(lit(false))
-    o.join(n, keys, "full_outer")
+    keys.foldLeft(o.join(n,
+        keys.map(k => col(s"__ko_$k") <=> col(s"__kn_$k")).reduce(_ && _), "full_outer")) {
+        (df, k) => df.withColumn(k, coalesce(col(s"__kn_$k"), col(s"__ko_$k")))
+      }
       .withColumn("change_type",
         when(col("__in_old").isNull, lit("insert"))
           .when(col("__in_new").isNull, lit("delete"))
@@ -583,7 +603,7 @@ object Upsert {
   def applyChanges(state: DataFrame, changes: DataFrame,
       keys: Seq[String]): DataFrame = {
     val touched = changes.select(keys.map(col): _*).distinct()
-    val untouched = state.join(touched, keys, "left_anti")
+    val untouched = joinKeys(state, touched, keys, "left_anti")
     val upserts = changes.where(col("change_type") =!= "delete")
       .select(state.columns.map(col).toSeq: _*)
     untouched.unionByName(upserts)
@@ -652,7 +672,9 @@ object Upsert {
     * the manifest layout, a single `bucket = -1` row for the plain
     * snapshot layout. Feed it to `RunMaintain stats` for the
     * small-file / bucket-skew summary that says when `table-compact`
-    * (or `--rebucket`) is due. */
+    * (or `--rebucket`) is due. `superseded_rows` maps each file of the
+    * bucket that has rows a merge-on-read commit superseded to their
+    * count: the dead rows `table-compact` reclaims (empty when none). */
   def tableStats(spark: SparkSession, targetPath: String): DataFrame = {
     import spark.implicits._
     val snap = currentSnapshot(spark, targetPath).getOrElse(
@@ -662,33 +684,43 @@ object Upsert {
     def len(f: String): Long = fs.getFileStatus(new Path(f)).getLen
     val rows = manifestBody(spark, targetPath, Some(snap)) match {
       case Some(body) =>
+        val deletes = parseRowDeletes(body)
         parseManifestEntries(body).toSeq.map { case (b, files) =>
           val resolved = files.map(resolveEntry(targetPath, _))
-          (b, files.size.toLong, resolved.map(len).sum)
+          (b, files.size.toLong, resolved.map(len).sum,
+            files.flatMap(f => deletes.get(f).map(f -> _.size.toLong)).toMap)
         }
       case None =>
         val files = fs.listStatus(new Path(targetPath, snap)).toSeq
           .filter(st => !st.isDirectory &&
             st.getPath.getName.endsWith(".parquet"))
-        Seq((-1, files.size.toLong, files.map(_.getLen).sum))
+        Seq((-1, files.size.toLong, files.map(_.getLen).sum, Map.empty[String, Long]))
     }
-    rows.toDF("bucket", "n_files", "bytes")
+    rows.toDF("bucket", "n_files", "bytes", "superseded_rows")
   }
 
   /** Snapshot names currently on disk under a merge target, oldest first
     * — snapshot DIRS (plain layout) or retained manifest FILES
-    * (manifest-bucketed layout). Read one with [[readTargetAt]]. */
+    * (manifest-bucketed layout). Once a manifest is committed, `snap-<n>/`
+    * directories are the adopted files of the table, not snapshots of
+    * it, and are not listed. Read one with [[readTargetAt]]. */
   def snapshots(spark: SparkSession, targetPath: String): Seq[String] = {
     val root = new Path(targetPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("snap-") =>
-        st.getPath.getName
-      case st if !st.isDirectory && st.getPath.getName.startsWith("snap-") &&
-          st.getPath.getName.endsWith(".manifest.json") =>
-        st.getPath.getName.stripSuffix(".manifest.json")
-    }.sorted
+    else {
+      val listing = fs.listStatus(root).toSeq
+      val manifests = listing.collect {
+        case st if !st.isDirectory && st.getPath.getName.startsWith("snap-") &&
+            st.getPath.getName.endsWith(".manifest.json") =>
+          st.getPath.getName.stripSuffix(".manifest.json")
+      }
+      if (manifests.nonEmpty) manifests.sorted
+      else listing.collect {
+        case st if st.isDirectory && st.getPath.getName.startsWith("snap-") =>
+          st.getPath.getName
+      }.sorted
+    }
   }
 
   // ------------------------------------------------------------------
@@ -709,6 +741,26 @@ object Upsert {
   // `__bucket` rides IN the data files (the `__bucket_p=` directory level
   // exists only to split files per bucket at write time), so manifest
   // readers need no partition-discovery basePath.
+  //
+  // One bucket (`nBuckets = 1`, what `Pipeline.run` commits by default)
+  // is merge-on-read, the delta-based row-level model of Spark DSv2's
+  // `SupportsDelta`:
+  //
+  //   <targetPath>/data/run-<id>/part-*.parquet   no __bucket column
+  //   "0": [every file], "row_deletes": [["<file>", row index, ...], ...]
+  //
+  // A merge writes only the batch's post-merge rows as new files
+  // appended to entry 0, and records the (file, `_metadata.row_index`)
+  // positions of the target rows they supersede; the old files are never
+  // rewritten. Every reader of entries goes through [[readEntries]],
+  // which turns the positions into a scan-side filter; a reader that
+  // cannot (the DSv2 scan, the appends stream) refuses the table with
+  // [[MergeOnReadUnsupportedException]]. Compaction rewrites the files
+  // that carry positions and drops them; erasure rewrites the files that
+  // hold an erased key. Before its first manifest commit a one-bucket
+  // table adopts an existing flat snapshot directory or plain target in
+  // place (entries outside `data/`); the GC reclaims those files once no
+  // retained manifest references them.
   // ------------------------------------------------------------------
 
   /** Manifest entries are stored RELATIVE to the table root (e.g.
@@ -757,6 +809,87 @@ object Upsert {
   private[graft] def parseManifestString(body: String, field: String): Option[String] =
     (s""""$field"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""").r.findFirstMatchIn(body)
       .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
+
+  /** The target rows a merge-on-read commit superseded, as recorded in a
+    * manifest: relative entry -> Parquet row indexes (`_metadata.row_index`)
+    * within that file. Field `"row_deletes": [["<rel>", i, j, ...], ...]`:
+    * arrays, not an object, so no entry name can ever read as a bucket id
+    * to [[parseManifestEntries]]. Absent field: no superseded rows. */
+  private[graft] def parseRowDeletes(body: String): Map[String, Seq[Long]] =
+    """"row_deletes"\s*:\s*\[((?:\s*\["[^"]*"(?:\s*,\s*\d+)*\s*\]\s*,?)*)\s*\]""".r
+      .findFirstMatchIn(body).map { m =>
+        """\["([^"]*)"((?:\s*,\s*\d+)*)\s*\]""".r.findAllMatchIn(m.group(1)).map { e =>
+          e.group(1) -> e.group(2).split(",").map(_.trim).filter(_.nonEmpty)
+            .map(_.toLong).toSeq
+        }.toMap
+      }.getOrElse(Map.empty)
+
+  /** Manifest field for [[parseRowDeletes]]; nothing when empty. */
+  private def rowDeletesField(deletes: Map[String, Seq[Long]]): Seq[String] =
+    if (deletes.isEmpty) Nil
+    else Seq(deletes.toSeq.sortBy(_._1).map { case (rel, rows) =>
+      (("\"" + rel + "\"") +: rows.distinct.sorted.map(_.toString)).mkString("[", ",", "]")
+    }.mkString(""""row_deletes": [""", ",", "]"))
+
+  /** The recorded superseded rows of `prior` that still name a file of
+    * the next manifest (`referenced`), plus `fresh` ones: the deletes a
+    * commit carries forward. A file that leaves the manifest takes its
+    * deletes with it. */
+  private def carriedDeletes(prior: Map[String, Seq[Long]],
+      fresh: Map[String, Seq[Long]], referenced: Set[String]): Map[String, Seq[Long]] =
+    (prior.keySet ++ fresh.keySet).filter(referenced).map { rel =>
+      rel -> (prior.getOrElse(rel, Nil) ++ fresh.getOrElse(rel, Nil)).distinct
+    }.toMap
+
+  /** Columns [[readEntries]] adds with `withPositions`: the row's file as
+    * Spark's `_metadata.file_path` names it, and its row index there. */
+  private val PosFile = "__pos_file"
+  private val PosRow = "__pos_row"
+
+  /** The relative entry among `rels` that a `_metadata.file_path` names. */
+  private def entryOfUri(fs: org.apache.hadoop.fs.FileSystem, targetPath: String,
+      rels: Seq[String]): String => Option[String] = {
+    val byPath = rels.map(r => normalize(fs, new Path(resolveEntry(targetPath, r))) -> r).toMap
+    uri => byPath.get(normalize(fs, new Path(new java.net.URI(uri))))
+  }
+
+  /** THE reader of manifest entries: `rels` (entries of the manifest
+    * `body`) as one frame, without the rows the manifest records as
+    * superseded. The driver-held positions become a scan-side filter on
+    * `_metadata.file_path` / `_metadata.row_index`, so building the frame
+    * runs no job. Entries are relative, so the positions stay valid when
+    * the table is moved or hard-linked elsewhere. No entries: an empty
+    * frame with the recorded schema (`what` names the read in the error
+    * of a manifest too old to record one). `withPositions` adds
+    * [[PosFile]] / [[PosRow]] for a commit that supersedes rows. */
+  private[graft] def readEntries(spark: SparkSession, targetPath: String,
+      body: String, rels: Seq[String], what: => String,
+      withPositions: Boolean = false): DataFrame =
+    if (rels.isEmpty) emptyFromManifest(spark, body, what)
+    else {
+      val df = Parquet.readFiles(spark, rels.map(resolveEntry(targetPath, _)))
+      val deletes = parseRowDeletes(body)
+      // a row of `rel` has a `_metadata.file_path` (Spark's qualified URI
+      // of the file) ending with the entry's URI-encoded path: the
+      // suffix, so neither the scheme's spelling (`file:/` or `file:///`)
+      // nor the table's location matters
+      val dropped = rels.distinct.flatMap { rel =>
+        deletes.get(rel).map { rows =>
+          col("_metadata.file_path").endsWith("/" + new Path(rel).toUri.getRawPath) &&
+            col("_metadata.row_index").isInCollection(rows)
+        }
+      }
+      val live = if (dropped.isEmpty) df else df.where(!dropped.reduce(_ || _))
+      if (!withPositions) live
+      else live.withColumn(PosFile, col("_metadata.file_path"))
+        .withColumn(PosRow, col("_metadata.row_index"))
+    }
+
+  /** Refusal of a reader or writer that cannot honour the merge-on-read
+    * layout: serving a superseded row, or writing the hash-bucket
+    * placement column into a one-bucket table. */
+  final class MergeOnReadUnsupportedException(msg: String)
+      extends UnsupportedOperationException(msg)
 
   /** Structural completeness check for a manifest body (ADVICE r16): the
     * local hard-link publish and the tmp+rename publish are content-atomic,
@@ -846,12 +979,6 @@ object Upsert {
     }
   }
 
-  private def readBucketManifestRaw(spark: SparkSession,
-      targetPath: String,
-      snapshot: Option[String] = None): Map[Int, Seq[String]] =
-    manifestBody(spark, targetPath, snapshot)
-      .map(parseManifestEntries).getOrElse(Map.empty)
-
   /** Bucket count this manifest-bucketed target was written with, stored
     * in the manifest since round 8 — the erasure/merge jobs read it back
     * so a caller passing a WRONG `--merge-buckets` cannot silently prune
@@ -860,11 +987,12 @@ object Upsert {
     manifestBody(spark, targetPath, None)
       .flatMap(parseManifestLong(_, "nBuckets")).map(_.toInt)
 
-  /** Resolve the effective bucket count: the stored one wins over the
-    * caller's argument (with a stderr note on mismatch); the argument is
-    * only trusted for pre-round-8 manifests that never recorded it. */
-  private def effectiveNBuckets(spark: SparkSession, targetPath: String,
-      passed: Int): Int = storedNBuckets(spark, targetPath) match {
+  /** Resolve the effective bucket count: the one `body` (the manifest a
+    * commit attempt read) stores wins over the caller's argument (with a
+    * stderr note on mismatch); the argument is only trusted for
+    * pre-round-8 manifests that never recorded it. */
+  private def effectiveNBuckets(targetPath: String, body: Option[String],
+      passed: Int): Int = body.flatMap(parseManifestLong(_, "nBuckets")).map(_.toInt) match {
     case Some(stored) =>
       if (stored != passed)
         System.err.println(s"[graft] $targetPath was bucketed nBuckets=$stored; " +
@@ -875,12 +1003,15 @@ object Upsert {
 
   /** The committed manifest of a manifest-bucketed target:
     * bucket -> immutable data-file paths, resolved against the table root
-    * (directly readable). Empty if never committed. */
+    * (directly readable; on a one-bucket merge-on-read table they still
+    * hold the superseded rows [[readManifestTable]] drops). Empty if never
+    * committed. */
   def readBucketManifest(spark: SparkSession,
       targetPath: String): Map[Int, Seq[String]] =
-    readBucketManifestRaw(spark, targetPath).map { case (b, files) =>
-      b -> files.map(resolveEntry(targetPath, _))
-    }
+    manifestBody(spark, targetPath, None).map(parseManifestEntries)
+      .getOrElse(Map.empty).map { case (b, files) =>
+        b -> files.map(resolveEntry(targetPath, _))
+      }
 
   /** Read a manifest-bucketed target, optionally pruned to `buckets` —
     * pruning selects manifest ENTRIES, so unneeded files are never listed,
@@ -914,16 +1045,15 @@ object Upsert {
                 s"${pruned.size}/${wantedRel.size} files of $targetPath")
             k
           }
-        val wanted = kept.map(resolveEntry(targetPath, _))
-        if (wanted.nonEmpty) Parquet.readFiles(spark, wanted)
-        else emptyFromManifest(spark, body, s"committed state of $targetPath")
+        readEntries(spark, targetPath, body, kept, s"committed state of $targetPath")
     }
 
   /** MERGE into a manifest-bucketed target (see layout note above): reads
     * only the touched buckets' files, writes only their replacements, and
     * commits with one atomic create-exclusive manifest. Cost per run
     * scales with the batch's bucket spread; a crash at any point is
-    * invisible to readers.
+    * invisible to readers. With one bucket the merge is merge-on-read
+    * (see [[mergeOnRead]]): it writes only the batch's post-merge rows.
     *
     * CONCURRENT-WRITER SAFE (round 8): the commit is optimistic — if
     * another merge committed first, this one re-reads the new state,
@@ -952,27 +1082,31 @@ object Upsert {
     var committed = false
     while (!committed) {
       val current = repairPointer(spark, targetPath)
-      val manifest = readBucketManifestRaw(spark, targetPath, current)
-      requireManifestLayout(spark, targetPath, manifest)
-      val effN = effectiveNBuckets(spark, targetPath, nBuckets)
-      val withBucket = updates.withColumn("__bucket",
-        pmod(xxhash64(keys.map(col): _*), lit(effN)).cast("int"))
-      val touched = withBucket.select("__bucket").distinct()
-        .collect().map(_.getInt(0)).sorted // O(nBuckets) driver-side ids
-      val touchedFiles = touched.flatMap(b => manifest.getOrElse(b, Nil))
-        .map(resolveEntry(targetPath, _)).toSeq
-
-      val merged =
-        if (touchedFiles.isEmpty)
-          refreshExprs.foldLeft(withBucket) { case (df, (c, e)) => df.withColumn(c, e) }
-        else merge(Parquet.readFiles(spark, touchedFiles), withBucket,
-          keys, insertOnlyCols, refreshExprs)
-
+      val body = manifestBody(spark, targetPath, current)
+      val manifest = body.map(parseManifestEntries).getOrElse(Map.empty)
+      val effN = effectiveNBuckets(targetPath, body, nBuckets)
       val nextId = nextFreeId(spark, targetPath, current)
       try {
-        commitSnapshot(spark, targetPath, merged, touched.toIndexedSeq,
-          manifest, keys, nextId, keepSnapshots, Some("__bucket"), effN,
-          statsCols = statsCols)
+        if (effN == 1)
+          mergeOnRead(spark, targetPath, body, oneBucketBase(spark, targetPath, manifest),
+            updates, keys, insertOnlyCols, refreshExprs, nextId, keepSnapshots,
+            statsCols)
+        else {
+          requireManifestLayout(spark, targetPath, manifest)
+          val withBucket = updates.withColumn("__bucket",
+            pmod(xxhash64(keys.map(col): _*), lit(effN)).cast("int"))
+          val touched = withBucket.select("__bucket").distinct()
+            .collect().map(_.getInt(0)).sorted // O(nBuckets) driver-side ids
+          val touchedFiles = touched.flatMap(b => manifest.getOrElse(b, Nil)).toSeq
+          val merged =
+            if (touchedFiles.isEmpty)
+              refreshExprs.foldLeft(withBucket) { case (df, (c, e)) => df.withColumn(c, e) }
+            else merge(readEntries(spark, targetPath, body.get, touchedFiles, ""),
+              withBucket, keys, insertOnlyCols, refreshExprs)
+          commitSnapshot(spark, targetPath, merged, touched.toIndexedSeq,
+            manifest, keys, nextId, keepSnapshots, Some("__bucket"), effN,
+            statsCols = statsCols)
+        }
         committed = true
       } catch {
         case e: CommitConflictException =>
@@ -991,6 +1125,110 @@ object Upsert {
       }
     }
   }
+
+  /** One merge-on-read attempt on a one-bucket table whose entries are
+    * `base` (read from `body`, the attempt's manifest): ONE Spark job
+    * writes only the batch's post-merge rows — the rows [[merge]] gives
+    * the batch, from `updates LEFT OUTER JOIN target` — as new files appended to
+    * entry 0, and an `Observation` on that write collects the
+    * (file, `_metadata.row_index`) positions of the target rows they
+    * supersede. The commit records those positions beside the entries;
+    * the old files are never rewritten. A retry after a lost commit race
+    * recomputes the positions against the winner's manifest. The first
+    * merge into an empty table joins an empty relation, which the
+    * optimizer removes: the commit writes the batch as [[merge]] would. */
+  private def mergeOnRead(spark: SparkSession, targetPath: String,
+      body: Option[String], base: Map[Int, Seq[String]], updates: DataFrame,
+      keys: Seq[String], insertOnlyCols: Set[String],
+      refreshExprs: Map[String, org.apache.spark.sql.Column], nextId: Long,
+      keepSnapshots: Int, statsCols: Seq[String]): Unit = {
+    import org.apache.spark.sql.{Observation, Row}
+    val rels = base.getOrElse(0, Nil)
+    val target =
+      if (rels.isEmpty) emptyTargetFor(spark, updates, refreshExprs)
+        .withColumn(PosFile, lit(null).cast("string"))
+        .withColumn(PosRow, lit(null).cast("long"))
+      else readEntries(spark, targetPath, body.getOrElse(""), rels,
+        s"merge target $targetPath", withPositions = true)
+    // [[merge]]'s output for the rows of the batch, matched or not:
+    // every such row is touched
+    val updateCols = updates.columns.toSet -- keys
+    val outCols = target.columns.toSeq.filterNot(Set(PosFile, PosRow)).map { c =>
+      if (keys.contains(c)) col(s"u.$c").as(c)
+      else if (refreshExprs.contains(c)) refreshExprs(c).as(c)
+      else if (!updateCols.contains(c)) col(s"t.$c").as(c)
+      else if (insertOnlyCols.contains(c)) coalesce(col(s"t.$c"), col(s"u.$c")).as(c)
+      else col(s"u.$c").as(c)
+    }
+    val obs = Observation()
+    val rows = updates.as("u")
+      .join(target.as("t"), keys.map(k => col(s"t.$k") <=> col(s"u.$k")).reduce(_ && _),
+        "left_outer")
+      .observe(obs, collect_list(when(col(s"t.$PosRow").isNotNull,
+        struct(col(s"t.$PosFile"), col(s"t.$PosRow")))).as("superseded"))
+      .select(outCols: _*)
+    val relOf = entryOfUri(
+      new Path(targetPath).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      targetPath, rels)
+    def superseded(): Map[String, Seq[Long]] =
+      if (rels.isEmpty) Map.empty
+      else obs.get("superseded").asInstanceOf[scala.collection.Seq[Row]]
+        .map(r => (r.getString(0), r.getLong(1))).groupBy(_._1).map {
+          case (uri, rs) => relOf(uri).getOrElse(throw new IllegalStateException(
+            s"merge-on-read: superseded row in $uri, not an entry of $targetPath")) ->
+            rs.map(_._2).distinct.toSeq
+        }
+    commitSnapshot(spark, targetPath, rows, Seq(0), base, keys, nextId,
+      keepSnapshots, partCol = None, nBuckets = 1, appendEntries = true,
+      statsCols = statsCols, preClustered = true, supersede = () => superseded())
+  }
+
+  /** The empty target a first merge (into either layout) joins: the
+    * batch's columns, then the refreshed ones as timestamps. A local
+    * relation, so the optimizer drops the join against it. */
+  private def emptyTargetFor(spark: SparkSession, updates: DataFrame,
+      refreshExprs: Map[String, org.apache.spark.sql.Column]): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      StructType(updates.schema.fields.filterNot(f => refreshExprs.contains(f.name)) ++
+        refreshExprs.keys.map(k => StructField(k, TimestampType))))
+  }
+
+  /** Entries a one-bucket commit starts from: the committed manifest's,
+    * or — before the table's first manifest commit — the files of an
+    * existing flat snapshot directory (`snap-<n>/`, [[mergeIntoParquet]]'s
+    * layout) or plain Parquet directory, adopted in place: the first
+    * manifest lists them, nothing is moved or copied, and the GC reclaims
+    * them once no retained manifest references them. A partitioned one
+    * (subdirectories of data) cannot be listed as one bucket's files and
+    * is refused, as is a legacy `__bucket=<k>/` directory. */
+  private def oneBucketBase(spark: SparkSession, targetPath: String,
+      manifest: Map[Int, Seq[String]]): Map[Int, Seq[String]] =
+    if (manifest.nonEmpty) manifest
+    else {
+      val root = new Path(targetPath)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val listing = listSafe(fs, root)
+      refuseForeignLayout(targetPath, listing, manifestWriter = false)
+      val snapDir = currentSnapshot(spark, targetPath).map(new Path(root, _))
+        .filter(fs.isDirectory)
+      val dir = snapDir.getOrElse(root)
+      val files = (if (snapDir.isDefined) listSafe(fs, dir) else listing).filter { st =>
+        val n = st.getPath.getName
+        // the root's own bookkeeping and a crashed manifest commit's
+        // leftovers (`data/run-*`, manifest and claim files) are not data
+        val layout = snapDir.isEmpty && (n == "data" || n.startsWith("snap-"))
+        isDataFile(n) && !layout
+      }
+      files.find(_.isDirectory).foreach { st =>
+        throw new IllegalStateException(s"$targetPath holds a partitioned " +
+          s"table (${st.getPath.getName}/ under $dir); a one-bucket manifest " +
+          "lists files, not partitions. Read it with Upsert.readTarget and " +
+          "merge the rows into a fresh target")
+      }
+      if (files.isEmpty) Map.empty
+      else Map(0 -> files.map(st => relativizeToRoot(fs, targetPath, st.getPath)).toSeq.sorted)
+    }
 
   /** INSERT-ONLY commit on the manifest-bucketed layout (round 18): the
     * batch's rows land as NEW files in their hash buckets and the
@@ -1022,19 +1260,29 @@ object Upsert {
     var committed = false
     while (!committed) {
       val current = repairPointer(spark, targetPath)
-      val manifest = readBucketManifestRaw(spark, targetPath, current)
-      requireManifestLayout(spark, targetPath, manifest)
-      val effN = effectiveNBuckets(spark, targetPath, nBuckets)
-      val withBucket = rows.withColumn("__bucket",
-        pmod(xxhash64(keys.map(col): _*), lit(effN)).cast("int"))
-      val touched = withBucket.select("__bucket").distinct()
-        .collect().map(_.getInt(0)).sorted
+      val body = manifestBody(spark, targetPath, current)
+      val manifest = body.map(parseManifestEntries).getOrElse(Map.empty)
+      val effN = effectiveNBuckets(targetPath, body, nBuckets)
+      // one bucket: no placement column, the rows extend entry 0
+      val (placed, base, partCol) =
+        if (effN == 1) (rows, oneBucketBase(spark, targetPath, manifest), None)
+        else {
+          requireManifestLayout(spark, targetPath, manifest)
+          (rows.withColumn("__bucket",
+            pmod(xxhash64(keys.map(col): _*), lit(effN)).cast("int")),
+            manifest, Some("__bucket"))
+        }
+      val touched =
+        if (partCol.isEmpty) (if (rows.isEmpty) Array.empty[Int] else Array(0))
+        else placed.select("__bucket").distinct()
+          .collect().map(_.getInt(0)).sorted
       if (touched.isEmpty) return // empty batch: nothing to commit
       val nextId = nextFreeId(spark, targetPath, current)
       try {
-        commitSnapshot(spark, targetPath, withBucket, touched.toIndexedSeq,
-          manifest, keys, nextId, keepSnapshots, Some("__bucket"), effN,
-          appendEntries = true, statsCols = statsCols)
+        commitSnapshot(spark, targetPath, placed, touched.toIndexedSeq,
+          base, keys, nextId, keepSnapshots, partCol, effN,
+          appendEntries = true, statsCols = statsCols,
+          preClustered = partCol.isEmpty)
         committed = true
       } catch {
         case e: CommitConflictException =>
@@ -1253,7 +1501,11 @@ object Upsert {
     *   the layout's bucket count (0 = not a hash-bucketed table).
     * @param statsCols extra columns (beyond `sortCols`) to record per-file
     *   min/max stats for (see [[FileStats]]); supported-type columns only
-    *   — others are skipped, never an error. */
+    *   — others are skipped, never an error.
+    * @param supersede the merge-on-read positions this commit adds
+    *   (relative entry -> row indexes), asked for once the write ran —
+    *   an `Observation` of it. Recorded positions of files that stay in
+    *   the manifest carry forward; a file that leaves takes its own. */
   private[graft] def commitSnapshot(
       spark: SparkSession,
       targetPath: String,
@@ -1267,7 +1519,8 @@ object Upsert {
       nBuckets: Int = 0,
       appendEntries: Boolean = false,
       statsCols: Seq[String] = Nil,
-      preClustered: Boolean = false): Unit = {
+      preClustered: Boolean = false,
+      supersede: () => Map[String, Seq[Long]] = () => Map.empty): Unit = {
     val root = new Path(targetPath)
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val fs = root.getFileSystem(hadoopConf)
@@ -1361,13 +1614,17 @@ object Upsert {
     // pmod(xxhash64(keys), nBuckets) and prune to ONE bucket's files —
     // the DSv2 connector's point-lookup path. Index stores partition by
     // __cell/__idb, where bucket ≠ hash(sortCols), and record nothing.
+    // A one-bucket table (no placement column) records its merge keys too:
+    // every key hashes to its only bucket.
     val keysField =
-      if (partCol.contains("__bucket") && sortCols.nonEmpty)
+      if ((partCol.contains("__bucket") || nBuckets == 1) && sortCols.nonEmpty)
         Seq(s""""bucket_keys": "${sortCols.mkString(",")}"""")
       else Nil
+    val deletesField = rowDeletesField(carriedDeletes(
+      priorBody.map(parseRowDeletes).getOrElse(Map.empty), supersede(), referenced))
     val json = (Seq(s""""attempt": "$attempt"""",
       s""""nBuckets": $nBuckets""", s""""schema_ddl": "$ddl"""") ++
-      keysField ++
+      keysField ++ deletesField ++
       // streaming-sink exactly-once markers survive interleaved
       // batch commits (see commitStreamAppend)
       streamEpochFields(priorBody.map(parseStreamEpochs).getOrElse(Map.empty)) ++
@@ -1491,6 +1748,7 @@ object Upsert {
       }
     }.map(e => normalize(fs, new Path(resolveEntry(targetPath, e)))).toSet
     sweepDataRuns(fs, root, targetPath, nextId, live, known)
+    sweepAdopted(fs, root, live, known)
     fs.listStatus(root).foreach { st =>
       val n = st.getPath.getName
       val staleManifest = !st.isDirectory && n.endsWith(".manifest.json") &&
@@ -1580,8 +1838,11 @@ object Upsert {
         throw new IllegalStateException(
           s"$targetPath lost its manifest mid-operation"))
       val curEntries = parseManifestEntries(curBody)
+      val (curDeletes, pinnedDeletes) = (parseRowDeletes(curBody), parseRowDeletes(pinnedBody))
       touched.foreach { b =>
-        if (curEntries.getOrElse(b, Nil) != pinnedEntries.getOrElse(b, Nil))
+        val rels = curEntries.getOrElse(b, Nil)
+        if (rels != pinnedEntries.getOrElse(b, Nil) ||
+            rels.exists(r => curDeletes.get(r) != pinnedDeletes.get(r)))
           throw new CommitConflictException(
             s"bucket $b of $targetPath changed concurrently since this " +
               "statement pinned its snapshot — the rewrite would publish " +
@@ -1615,6 +1876,7 @@ object Upsert {
       val nb = parseManifestLong(pinnedBody, "nBuckets").getOrElse(0L)
       val json = (Seq(s""""attempt": "$attempt"""",
         s""""nBuckets": $nb""") ++ ddlField.toSeq ++ keysField.toSeq ++
+        rowDeletesField(carriedDeletes(curDeletes, Map.empty, referenced)) ++
         // streaming-sink exactly-once markers survive the rewrite
         streamEpochFields(parseStreamEpochs(curBody)) ++
         statsField.toSeq ++
@@ -1741,6 +2003,8 @@ object Upsert {
       val json = (Seq(s""""attempt": "$attempt"""",
         s""""nBuckets": $nBuckets""",
         s""""schema_ddl": "${esc(ddl)}"""") ++ keysField ++
+        rowDeletesField(carriedDeletes(
+          curBody.map(parseRowDeletes).getOrElse(Map.empty), Map.empty, referenced)) ++
         streamEpochFields(epochs + (queryId -> epochId)) ++
         statsField.toSeq ++
         nextEntries.toSeq.sortBy(_._1).map { case (b, files) =>
@@ -1798,6 +2062,22 @@ object Upsert {
         }
         if (!kept && !deferred) fs.delete(run.getPath, true)
       }
+    }
+  }
+
+  /** GC of adopted files: entries outside `data/`, which a one-bucket
+    * table's first manifest listed in place (see [[oneBucketBase]]).
+    * One is deleted once it is `known` (committed: a manifest on disk
+    * references it) but not `live` (no retained manifest does); a
+    * `snap-<n>/` directory left without data files goes with it. */
+  private def sweepAdopted(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+      live: Set[String], known: Set[String]): Unit = {
+    val dataDir = normalize(fs, new Path(root, "data")) + "/"
+    val dead = (known -- live).filterNot(_.startsWith(dataDir)).map(new Path(_))
+    dead.foreach(p => fs.delete(p, false))
+    dead.map(_.getParent).filter(_.getName.startsWith("snap-")).foreach { dir =>
+      if (!listSafe(fs, dir).exists(st => isDataFile(st.getPath.getName)))
+        fs.delete(dir, true)
     }
   }
 
@@ -1881,8 +2161,8 @@ object Upsert {
       case None => 0L
       case Some(snap) =>
         val target = Parquet.read(spark, new Path(root, snap).toString)
-        val remaining = antiJoinKeys(target,
-          deleteKeys.select(keys.map(col): _*).distinct(), keys)
+        val remaining = joinKeys(target,
+          deleteKeys.select(keys.map(col): _*).distinct(), keys, "left_anti")
         val before = target.count()
         val nextId = snap.stripPrefix("snap-").toLong + 1
         val snapName = f"snap-$nextId%09d"
@@ -1936,25 +2216,46 @@ object Upsert {
     var committed = false
     while (!committed) {
       val current = repairPointer(spark, targetPath)
-      val manifest = readBucketManifestRaw(spark, targetPath, current)
+      val body = manifestBody(spark, targetPath, current)
+      val manifest = body.map(parseManifestEntries).getOrElse(Map.empty)
       requireManifestLayout(spark, targetPath, manifest)
       if (manifest.isEmpty) return
-      val effN = effectiveNBuckets(spark, targetPath, nBuckets)
-      val delKeys = deleteKeys.select(keys.map(col): _*).distinct()
-        .withColumn("__bucket",
-          pmod(xxhash64(keys.map(col): _*), lit(effN)).cast("int"))
-      val touched = delKeys.select("__bucket").distinct()
-        .collect().map(_.getInt(0)).sorted
-        .filter(manifest.contains) // keys hashing to never-written buckets
-      if (touched.isEmpty) return
-      val touchedFiles = touched.flatMap(b => manifest.getOrElse(b, Nil))
-        .map(resolveEntry(targetPath, _)).toSeq
-      val remaining = antiJoinKeys(
-        Parquet.readFiles(spark, touchedFiles), delKeys.drop("__bucket"), keys)
+      val effN = effectiveNBuckets(targetPath, body, nBuckets)
+      val keyRows = deleteKeys.select(keys.map(col): _*).distinct()
       val nextId = nextFreeId(spark, targetPath, current)
       try {
-        commitSnapshot(spark, targetPath, remaining, touched.toSeq,
-          manifest, keys, nextId, keepSnapshots, Some("__bucket"), effN)
+        if (effN == 1) {
+          // one bucket: rewrite only the files holding a deleted key; the
+          // rewrite drops their superseded rows physically, and the files
+          // leave the manifest with their recorded positions
+          val rels = manifest.getOrElse(0, Nil)
+          val relOf = entryOfUri(
+            new Path(targetPath).getFileSystem(spark.sparkContext.hadoopConfiguration),
+            targetPath, rels)
+          val hit = joinKeys(readEntries(spark, targetPath, body.get, rels,
+              "", withPositions = true), keyRows, keys, "left_semi")
+            .select(PosFile).distinct().collect().map(_.getString(0))
+            .flatMap(relOf).toSeq
+          if (hit.isEmpty) return
+          commitSnapshot(spark, targetPath,
+            joinKeys(readEntries(spark, targetPath, body.get, hit, ""), keyRows,
+              keys, "left_anti"),
+            Seq(0), Map(0 -> rels.filterNot(hit.toSet)), keys, nextId,
+            keepSnapshots, partCol = None, nBuckets = 1, appendEntries = true,
+            preClustered = true)
+        } else {
+          val delKeys = keyRows.withColumn("__bucket",
+            pmod(xxhash64(keys.map(col): _*), lit(effN)).cast("int"))
+          val touched = delKeys.select("__bucket").distinct()
+            .collect().map(_.getInt(0)).sorted
+            .filter(manifest.contains) // keys hashing to never-written buckets
+          if (touched.isEmpty) return
+          val remaining = joinKeys(readEntries(spark, targetPath, body.get,
+            touched.flatMap(b => manifest.getOrElse(b, Nil)).toSeq, ""),
+            keyRows, keys, "left_anti")
+          commitSnapshot(spark, targetPath, remaining, touched.toSeq,
+            manifest, keys, nextId, keepSnapshots, Some("__bucket"), effN)
+        }
         committed = true
       } catch {
         case e: CommitConflictException =>
@@ -2011,61 +2312,86 @@ object Upsert {
     var committed = false
     while (!committed) {
       val current = repairPointer(spark, targetPath)
-      val oldManifest = readBucketManifestRaw(spark, targetPath, current)
+      val body = manifestBody(spark, targetPath, current)
+      val oldManifest = body.map(parseManifestEntries).getOrElse(Map.empty)
       requireManifestLayout(spark, targetPath, oldManifest)
       if (oldManifest.isEmpty || oldManifest.values.forall(_.isEmpty)) return
-      val read = readManifestTable(spark, targetPath)
-      val table = newNBuckets match {
-        case Some(n) => read.drop("__bucket").withColumn("__bucket",
-          pmod(xxhash64(keys.map(col): _*), lit(n)).cast("int"))
-        case None => read
-      }
-      val total = table.count()
-      if (total == 0L) return
-      val nParts = math.max(1, math.ceil(total.toDouble / targetFileRows).toInt)
-      val bucketCol = col("__bucket")
-      val clustered =
-        if (zorderCols.nonEmpty) {
-          val aggs = zorderCols.flatMap(c =>
-            Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
-          val mm = table.agg(aggs.head, aggs.tail: _*).head()
-          // row layout: min(c0), max(c0), min(c1), max(c1), ...
-          def bounds(i: Int): (Double, Double) =
-            (if (mm.isNullAt(2 * i)) 0d else mm.getDouble(2 * i),
-              if (mm.isNullAt(2 * i + 1)) 0d else mm.getDouble(2 * i + 1))
-          val bits = math.min(16, 63 / zorderCols.size)
-          val top = (1L << bits) - 1L
-          val scaled = zorderCols.zipWithIndex.map { case (c, i) =>
-            val (lo, hi) = bounds(i)
-            if (!(hi > lo)) lit(0L) // constant or all-null dimension
-            else coalesce( // NULL coordinate -> curve slot 0
-              least(lit(top), greatest(lit(0L),
-                ((col(c).cast("double") - lit(lo)) * lit(top.toDouble / (hi - lo)))
-                  .cast("long"))),
-              lit(0L))
-          }
-          table.withColumn("__z", Layout.zorderKey(scaled, bits))
-            .repartitionByRange(nParts, bucketCol, col("__z"))
-            .sortWithinPartitions(bucketCol, col("__z"))
-            .drop("__z") // projection keeps partition-local order
+      val storedN = body.flatMap(parseManifestLong(_, "nBuckets")).map(_.toInt)
+      val nOut = newNBuckets.orElse(storedN).getOrElse(0)
+      // one bucket: no placement column; its merge keys stay recorded
+      val partCol = if (nOut == 1) None else Some("__bucket")
+      val sortKeys = if (keys.nonEmpty || nOut != 1) keys
+        else body.flatMap(parseManifestString(_, "bucket_keys"))
+          .map(_.split(",").toSeq).getOrElse(Nil)
+      val commit: () => Unit =
+        if (nOut == 1 && storedN.contains(1) && zorderCols.isEmpty) {
+          // merge-on-read table: rewrite only the files with superseded
+          // rows; the rewrite drops those rows and the files leave the
+          // manifest with their recorded positions
+          val deletes = parseRowDeletes(body.get)
+          val rels = oldManifest.getOrElse(0, Nil)
+          val dirty = rels.filter(deletes.contains)
+          if (dirty.isEmpty) return
+          () => commitSnapshot(spark, targetPath,
+            readEntries(spark, targetPath, body.get, dirty, ""), Seq(0),
+            Map(0 -> rels.filterNot(dirty.toSet)), sortKeys,
+            nextFreeId(spark, targetPath, current), keepSnapshots,
+            partCol = None, nBuckets = 1, appendEntries = true, preClustered = true)
         } else {
-          val order = bucketCol +: keys.map(col)
-          table.repartitionByRange(nParts, order: _*)
-            .sortWithinPartitions(order: _*)
+          val read = readManifestTable(spark, targetPath)
+          val table = newNBuckets match {
+            case Some(1) => read.drop("__bucket")
+            case Some(n) => read.drop("__bucket").withColumn("__bucket",
+              pmod(xxhash64(keys.map(col): _*), lit(n)).cast("int"))
+            case None => read
+          }
+          val total = table.count()
+          if (total == 0L) return
+          val nParts = math.max(1, math.ceil(total.toDouble / targetFileRows).toInt)
+          val bucketCols = partCol.toSeq.map(col)
+          val clustered =
+            if (zorderCols.nonEmpty) {
+              val aggs = zorderCols.flatMap(c =>
+                Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
+              val mm = table.agg(aggs.head, aggs.tail: _*).head()
+              // row layout: min(c0), max(c0), min(c1), max(c1), ...
+              def bounds(i: Int): (Double, Double) =
+                (if (mm.isNullAt(2 * i)) 0d else mm.getDouble(2 * i),
+                  if (mm.isNullAt(2 * i + 1)) 0d else mm.getDouble(2 * i + 1))
+              val bits = math.min(16, 63 / zorderCols.size)
+              val top = (1L << bits) - 1L
+              val scaled = zorderCols.zipWithIndex.map { case (c, i) =>
+                val (lo, hi) = bounds(i)
+                if (!(hi > lo)) lit(0L) // constant or all-null dimension
+                else coalesce( // NULL coordinate -> curve slot 0
+                  least(lit(top), greatest(lit(0L),
+                    ((col(c).cast("double") - lit(lo)) * lit(top.toDouble / (hi - lo)))
+                      .cast("long"))),
+                  lit(0L))
+              }
+              table.withColumn("__z", Layout.zorderKey(scaled, bits))
+                .repartitionByRange(nParts, bucketCols :+ col("__z"): _*)
+                .sortWithinPartitions(bucketCols :+ col("__z"): _*)
+                .drop("__z") // projection keeps partition-local order
+            } else {
+              val order = bucketCols ++ sortKeys.map(col)
+              table.repartitionByRange(nParts, order: _*)
+                .sortWithinPartitions(order: _*)
+            }
+          // a re-bucket is a FULL re-mapping: every new bucket id is touched
+          // and the base manifest is empty, so stale old-bucket entries (and
+          // their files) drop out of the new snapshot entirely
+          val (touched, baseManifest) = newNBuckets match {
+            case Some(n) => ((0 until n): Seq[Int], Map.empty[Int, Seq[String]])
+            case None if nOut == 1 => (Seq(0), Map.empty[Int, Seq[String]])
+            case None => (oldManifest.keySet.toSeq.sorted, oldManifest)
+          }
+          () => commitSnapshot(spark, targetPath, clustered, touched, baseManifest,
+            sortKeys, nextFreeId(spark, targetPath, current), keepSnapshots, partCol,
+            nOut, statsCols = zorderCols, preClustered = true)
         }
-      // a re-bucket is a FULL re-mapping: every new bucket id is touched
-      // and the base manifest is empty, so stale old-bucket entries (and
-      // their files) drop out of the new snapshot entirely
-      val (touched, baseManifest) = newNBuckets match {
-        case Some(n) => ((0 until n): Seq[Int], Map.empty[Int, Seq[String]])
-        case None => (oldManifest.keySet.toSeq.sorted, oldManifest)
-      }
-      val nextId = nextFreeId(spark, targetPath, current)
       try {
-        commitSnapshot(spark, targetPath, clustered, touched, baseManifest,
-          keys, nextId, keepSnapshots, Some("__bucket"),
-          newNBuckets.orElse(storedNBuckets(spark, targetPath)).getOrElse(0),
-          statsCols = zorderCols, preClustered = true)
+        commit()
         committed = true
       } catch {
         case e: CommitConflictException =>
@@ -2079,16 +2405,16 @@ object Upsert {
     }
   }
 
-  /** left_anti with NULL-SAFE key equality (`<=>`) — the delete twin of
-    * [[merge]]'s match condition. A plain-equality anti join can never
-    * remove a NULL-keyed row that merge happily matches, which would make
-    * a compliance erasure silently incomplete (ADVICE r7). */
-  private def antiJoinKeys(target: DataFrame, delKeys: DataFrame,
-      keys: Seq[String]): DataFrame = {
+  /** `how` (`left_anti` / `left_semi`) join with NULL-SAFE key equality
+    * (`<=>`) — the delete twin of [[merge]]'s match condition. A
+    * plain-equality anti join can never remove a NULL-keyed row that
+    * merge happily matches, which would make a compliance erasure
+    * silently incomplete (ADVICE r7). */
+  private def joinKeys(target: DataFrame, delKeys: DataFrame,
+      keys: Seq[String], how: String): DataFrame = {
     val t = target.as("t")
     val d = delKeys.as("d")
-    t.join(d, keys.map(k => col(s"t.$k") <=> col(s"d.$k")).reduce(_ && _),
-      "left_anti")
+    t.join(d, keys.map(k => col(s"t.$k") <=> col(s"d.$k")).reduce(_ && _), how)
   }
 
   /** Tighten retention NOW, without a new commit: keep the newest
@@ -2121,6 +2447,7 @@ object Upsert {
         val live = entriesOf(retainedIds)
         val known = entriesOf(committedIds(fs, root))
         sweepDataRuns(fs, root, targetPath, curId, live, known)
+        sweepAdopted(fs, root, live, known)
         fs.listStatus(root).foreach { st =>
           val n = st.getPath.getName
           if (!st.isDirectory && n.endsWith(".manifest.json") &&

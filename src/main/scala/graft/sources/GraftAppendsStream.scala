@@ -83,24 +83,35 @@ private[sources] class GraftAppendsStream(schema: StructType,
 
   override def reportLatestOffset(): Offset = SnapOffset(newestId)
 
-  private def manifestFiles(id: Long): Seq[String] = {
-    val body = Upsert.manifestBody(spark, path, Some(snapName(id))).getOrElse(
+  private def manifestOf(id: Long): String =
+    Upsert.manifestBody(spark, path, Some(snapName(id))).getOrElse(
       throw new IllegalStateException(
         s"graft appends stream: snapshot '${snapName(id)}' is no longer " +
           s"retained under $path (vacuumed?) — delete the checkpoint to " +
           "re-bootstrap, and raise --keep-snapshots above the consumer's lag"))
+
+  private def manifestFiles(body: String): Seq[String] =
     Upsert.parseManifestEntries(body).toSeq.sortBy(_._1).flatMap(_._2)
-  }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[SnapOffset].id
     val e = end.asInstanceOf[SnapOffset].id
     if (e <= s) return Array.empty
-    val endFiles = manifestFiles(e)
+    val endBody = manifestOf(e)
+    val endFiles = manifestFiles(endBody)
+    // a merge-on-read commit superseded rows: its added files carry
+    // updates, not appends
+    val startBody = if (s < 0L) "" else manifestOf(s)
+    if (Upsert.parseRowDeletes(endBody) != Upsert.parseRowDeletes(startBody))
+      throw new Upsert.MergeOnReadUnsupportedException(
+        s"graft appends stream: snapshots ${snapName(s)}..${snapName(e)} of " +
+          s"$path supersede rows (merge-on-read) — the table is not " +
+          "insert-only over this range. Stream the change feed instead: " +
+          ".option(\"cdc\", \"true\")")
     val added =
       if (s < 0L) endFiles
       else {
-        val startFiles = manifestFiles(s).toSet
+        val startFiles = manifestFiles(startBody).toSet
         val removed = startFiles -- endFiles.toSet
         if (removed.nonEmpty) throw new IllegalStateException(
           s"graft appends stream: snapshots ${snapName(s)}..${snapName(e)} " +

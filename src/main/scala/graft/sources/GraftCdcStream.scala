@@ -176,12 +176,22 @@ private[sources] class GraftCdcMicroBatchStream(schema: StructType,
       val files = Upsert.parseManifestEntries(body)
         .toSeq.sortBy(_._1).flatMap(_._2).map(Upsert.resolveEntry(path, _))
       if (files.isEmpty) return Array.empty
-      return bootstrapScan(files).toBatch.planInputPartitions()
-        .map(GraftCdcBootstrapPartition(_): InputPartition)
+      // superseded rows (merge-on-read) must not reach the consumer: the
+      // bootstrap is then materialized like a diff, from readTargetAt
+      if (Upsert.parseRowDeletes(body).isEmpty)
+        return bootstrapScan(files).toBatch.planInputPartitions()
+          .map(GraftCdcBootstrapPartition(_): InputPartition)
     }
     val dir = batchDir(s, e)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(dir, "_SUCCESS"))) {
+    if (s < 0L) {
+      if (!fs.exists(new Path(dir, "_SUCCESS")))
+        Upsert.readTargetAt(spark, path, snapName(e))
+          .select(schema.fieldNames.map(c =>
+            if (c == "change_type") org.apache.spark.sql.functions.lit("insert").as(c)
+            else org.apache.spark.sql.functions.col(c)).toIndexedSeq: _*)
+          .write.mode("overwrite").parquet(dir.toString)
+    } else if (!fs.exists(new Path(dir, "_SUCCESS"))) {
       require(Upsert.snapshots(spark, path).contains(snapName(s)),
         s"graft cdc stream: cursor snapshot '${snapName(s)}' is no " +
           s"longer retained under $path (vacuumed?) — the stream " +

@@ -46,6 +46,11 @@ private[sources] final class GraftStreamingAppend(
     nBuckets: Int,
     info: LogicalWriteInfo) extends StreamingWrite {
 
+  if (nBuckets <= 1) throw new Upsert.MergeOnReadUnsupportedException(
+    s"graft table $path is a one-bucket merge-on-read table: the streaming " +
+      "sink writes hash-bucketed files. Merge each micro-batch with " +
+      "foreachBatch + Upsert.mergeIntoManifestBucketedParquet")
+
   private val spark = SparkSession.active
   // stable across restarts (stream checkpoint metadata id)
   private val queryId = info.queryId()

@@ -497,6 +497,8 @@ private[sources] class GraftScanBuilder(tableSchema: StructType, path: String,
       case ManifestFiles(b) => b
       case _ => return None
     }
+    // per-file counts include superseded rows: build() refuses those
+    if (Upsert.parseRowDeletes(body).nonEmpty) return None
     val allRels = Upsert.parseManifestEntries(body).values.flatten.toSeq
     val stats = FileStats.parse(body)
     // every referenced file must carry a row count, or nothing is answerable
@@ -643,11 +645,17 @@ private[sources] class GraftScanBuilder(tableSchema: StructType, path: String,
           System.err.println(s"[graft] dsv2 file-stats pruning dropped " +
             s"${afterBucketCount - keptCount}/$afterBucketCount files of $path")
         if (keptCount == 0) return new GraftEmptyScan(required)
+        val superseded = Upsert.parseRowDeletes(body)
+        if (keptByBucket.valuesIterator.flatten.exists(superseded.contains))
+          throw new Upsert.MergeOnReadUnsupportedException(s"the graft DSv2 " +
+            s"read cannot drop the rows merge-on-read commits superseded in " +
+            s"$path: read it with Upsert.readTarget, or compact it first " +
+            "(RunMaintain table-compact)")
         val bucketKeys = Upsert.parseManifestString(body, "bucket_keys")
           .map(_.split(",").toSeq).getOrElse(Nil)
         val nb = Upsert.parseManifestLong(body, "nBuckets").getOrElse(0L).toInt
         val requiredNames = required.fieldNames.toSet
-        if (bucketKeys.nonEmpty && nb > 0 &&
+        if (bucketKeys.nonEmpty && nb > 1 &&
             bucketKeys.forall(requiredNames.contains)) {
           // hash-bucket layout with the keys still in the projected
           // output: serve the bucket-aware scan — KeyGroupedPartitioning
@@ -685,7 +693,7 @@ private[sources] class GraftScanBuilder(tableSchema: StructType, path: String,
     val keys = Upsert.parseManifestString(body, "bucket_keys")
       .map(_.split(",").toSeq).getOrElse(Nil)
     val nb = Upsert.parseManifestLong(body, "nBuckets").getOrElse(0L)
-    if (keys.isEmpty || nb <= 0) return None
+    if (keys.isEmpty || nb <= 1) return None // one bucket: nothing to prune
     // mined from ALL pushed-down filters, not just stats-translatable
     // ones: bucket keys are hashed, so a STRING key's equality literal
     // point-prunes here even though string stats never range-prune
@@ -761,7 +769,7 @@ private[sources] class GraftScanBuilder(tableSchema: StructType, path: String,
     * Non-bucketed layouts have no such physical column. */
   private lazy val delegateSchema: StructType = resolvedState match {
     case ManifestFiles(body)
-        if Upsert.parseManifestLong(body, "nBuckets").exists(_ > 0) &&
+        if Upsert.parseManifestLong(body, "nBuckets").exists(_ > 1) &&
           !tableSchema.fieldNames.contains("__bucket") =>
       StructType(tableSchema.fields :+ org.apache.spark.sql.types.StructField(
         "__bucket", org.apache.spark.sql.types.IntegerType, nullable = true))

@@ -60,14 +60,15 @@ object WatermarkStore {
 
   private[sources] def render(state: Map[String, java.sql.Timestamp]): String =
     state.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"""  "${escape(k)}": "${v.toLocalDateTime.toString}""""
+      s"""  "${escape(k)}": "${v.toInstant.atOffset(java.time.ZoneOffset.UTC).toLocalDateTime}""""
     }.mkString("{\n", ",\n", "\n}")
 
   private[sources] def parse(raw: String): Map[String, java.sql.Timestamp] = {
     val entry = """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
     entry.findAllMatchIn(raw).map { m =>
       unescape(m.group(1)) ->
-        java.sql.Timestamp.valueOf(java.time.LocalDateTime.parse(m.group(2)))
+        java.sql.Timestamp.from(
+          java.time.LocalDateTime.parse(m.group(2)).toInstant(java.time.ZoneOffset.UTC))
     }.toMap
   }
 

@@ -47,6 +47,36 @@ class PipelineSpec extends SparkSpecBase {
     assert(keys.contains("xy"))
   }
 
+  test("mergeBuckets = 0 merges on read: later runs append the batch; a snapshot target is adopted") {
+    val dir = Files.createTempDirectory("graft-pipe-mor").toString
+    val conf = Pipeline.Config(
+      sourcePath = s"$dir/source",
+      targetPath = s"$dir/target",
+      statePath = s"$dir/state.json",
+      stagingPath = s"$dir/staging",
+      vectorDim = 2)
+    Seq(doc("s1", "2024-02-01 10:00:00", "r1", ""),
+      doc("s1", "2024-02-01 11:00:00", "r2", ""))
+      .toDF(cols: _*).write.mode(SaveMode.Overwrite).parquet(conf.sourcePath)
+    // an existing snapshot-directory target holding the first day
+    Pipeline.run(spark, conf.copy(targetPath = s"$dir/seed"))
+    graft.operators.Upsert.mergeIntoParquet(spark, conf.targetPath,
+      graft.operators.Upsert.readTarget(spark, s"$dir/seed"), Seq("main_refco"))
+    Seq(doc("s1", "2024-02-02 10:00:00", "r2", "", Seq(5f, 6f)),
+      doc("s1", "2024-02-02 11:00:00", "r3", ""))
+      .toDF(cols: _*).write.mode(SaveMode.Append).parquet(conf.sourcePath)
+    Pipeline.run(spark, conf)
+    val body = graft.operators.Upsert.manifestBody(spark, conf.targetPath, None).get
+    val files = graft.operators.Upsert.parseManifestEntries(body)
+    assert(files.keySet == Set(0) && files(0).exists(_.startsWith("snap-000000000/")))
+    // r2 (updated) was superseded in place, not rewritten
+    assert(graft.operators.Upsert.parseRowDeletes(body).values.map(_.size).sum == 1)
+    val t = graft.operators.Upsert.readTarget(spark, conf.targetPath)
+      .select("main_refco", "embedding_vector").as[(String, Seq[Float])]
+      .collect().sortBy(_._1).toSeq
+    assert(t == Seq(("r1", Seq(1f, 2f)), ("r2", Seq(5f, 6f)), ("r3", Seq(1f, 2f))))
+  }
+
   test("manifest-commit bucketed pipeline merges incrementally") {
     val dir = Files.createTempDirectory("graft-pipe-manifest").toString
     val conf = Pipeline.Config(
@@ -284,7 +314,12 @@ class PipelineSpec extends SparkSpecBase {
       doc("s1", "2024-02-01 10:00:00", "r1", ""),
       doc("s2", "2024-02-03 10:00:00", "r2", "red"))
       .toDF(cols: _*).write.mode(SaveMode.Overwrite).parquet(conf.sourcePath)
-    Pipeline.run(spark, conf) // mergeBuckets = 0: snapshot layout
+    // the watermark state of a first run, over a snapshot-directory
+    // target holding that run's rows (the layout `mergeIntoParquet`
+    // writes; `Pipeline.run` commits manifest tables)
+    Pipeline.run(spark, conf.copy(targetPath = s"$dir/first"))
+    graft.operators.Upsert.mergeIntoParquet(spark, conf.targetPath,
+      graft.operators.Upsert.readTarget(spark, s"$dir/first"), Seq("main_refco"))
     val state = java.nio.file.Paths.get(conf.statePath)
     val watermark = Files.readAllBytes(state)
 

@@ -114,8 +114,9 @@ class FileStatsSpec extends SparkSpecBase {
 
   test("all-null stats column: file prunes under any range; nulls counted") {
     val path = mkTarget()
+    // one input partition: a one-bucket commit writes a file per task
     val rows = Seq((1L, Option.empty[Long], "a"),
-      (2L, Option.empty[Long], "b")).toDF("key", "ts", "v")
+      (2L, Option.empty[Long], "b")).toDF("key", "ts", "v").coalesce(1)
     Upsert.mergeIntoManifestBucketedParquet(spark, path, rows,
       Seq("key"), nBuckets = 1, statsCols = Seq("ts"))
     val body = Upsert.manifestBody(spark, path, None).get

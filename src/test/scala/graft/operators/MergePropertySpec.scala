@@ -79,4 +79,52 @@ class MergePropertySpec extends SparkSpecBase {
       }
     })
   }
+
+  test("property: merge-on-read commits then a compaction equal the merge fold") {
+    // random rows over keys 0..5 and NULL (matched null-safely), plus
+    // fixed ones: day 0 lands key 0 twice (duplicate target keys) and a
+    // NULL key, day 2 updates that NULL key, and key 1 is updated every
+    // day, with a NULL value on odd days
+    val keyGen = Gen.frequency(1 -> Gen.const(Option.empty[Long]),
+      6 -> Gen.choose(0L, 5L).map(Option(_)))
+    val rowGen = for {
+      k <- keyGen
+      ref <- Gen.option(Gen.alphaStr.map(_.take(3)))
+      v <- Gen.option(Gen.alphaStr.map(_.take(3)))
+    } yield (k, ref, v)
+    val daysGen = Gen.listOfN(4, Gen.listOfN(5, rowGen))
+    import org.apache.spark.sql.types._
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("id", LongType), StructField("ref", StringType),
+        StructField("v", StringType), StructField("ts", TimestampType))))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("id", "ref", "v", "ts").as[(Option[Long], Option[String], Option[String],
+        java.sql.Timestamp)].collect().toSeq.map(_.toString).sorted
+    val prop = Prop.forAll(daysGen) { days =>
+      val path = java.nio.file.Files.createTempDirectory("graft-mor-prop").toString + "/t"
+      val ref = days.zipWithIndex.foldLeft(empty) { case (t, (b, day)) =>
+        val fixed: List[(Option[Long], Option[String], Option[String])] =
+          (Some(1L), Some(s"d$day"), if (day % 2 == 1) None else Some(s"v$day")) ::
+          (day match {
+            case 0 => List((Some(0L), Some("a"), Some("x")), (Some(0L), Some("b"), Some("y")),
+              (None, Some("n"), Some("n0")))
+            case 2 => List((None, Some("m"), None))
+            case _ => Nil
+          })
+        val batch = (fixed ++ b).toDF("id", "ref", "v")
+        val refresh = Map("ts" -> lit(java.sql.Timestamp.valueOf(s"2024-01-0${day + 1} 00:00:00")))
+        Upsert.mergeIntoManifestBucketedParquet(spark, path, batch, Seq("id"),
+          nBuckets = 1, insertOnlyCols = Set("ref"), refreshExprs = refresh)
+        Upsert.merge(t, batch, Seq("id"), insertOnlyCols = Set("ref"), refreshExprs = refresh)
+      }
+      val want = rows(ref)
+      val beforeCompaction = rows(Upsert.readTarget(spark, path))
+      Upsert.compactManifestBucketedParquet(spark, path)
+      val body = Upsert.manifestBody(spark, path, None).get
+      beforeCompaction == want && rows(Upsert.readTarget(spark, path)) == want &&
+        Upsert.parseRowDeletes(body).isEmpty
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6), prop)
+    assert(res.passed, res.status.toString)
+  }
 }

@@ -40,4 +40,22 @@ class WatermarkStoreSpec extends SparkSpecBase {
       "b" -> Timestamp.valueOf("2024-01-20 00:00:00"),
       "c" -> Timestamp.valueOf("2024-01-01 00:00:00")))
   }
+
+  test("watermarks are UTC on disk: a write and a read in different JVM zones agree") {
+    val dir = Files.createTempDirectory("graft-wm").toString
+    val path = s"$dir/state.json"
+    val state = Map(
+      "s1" -> Timestamp.from(java.time.Instant.parse("2024-03-01T12:00:00.123456Z")),
+      "s2" -> Timestamp.from(java.time.Instant.parse("2024-07-01T23:30:00Z")))
+    val zone = java.util.TimeZone.getDefault
+    try {
+      java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("America/Los_Angeles"))
+      WatermarkStore.write(spark, path, state)
+      java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("Asia/Tokyo"))
+      val read = WatermarkStore.read(spark, path)
+      assert(read.map { case (k, v) => k -> v.toInstant } == state.map { case (k, v) => k -> v.toInstant })
+    } finally java.util.TimeZone.setDefault(zone)
+    assert(new String(Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
+      .contains("2024-03-01T12:00:00.123456"))
+  }
 }

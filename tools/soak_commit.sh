@@ -4,7 +4,8 @@
 # writer at the exact commit point (after the manifest create — commit
 # durable, pointer/retention unrun) and just before it (attempt must
 # vanish). Verifies dense snapshot ids (exactly-once), zero lost merges,
-# per-batch row integrity, and DSv2-connector agreement. See
+# per-batch row integrity, and DSv2-connector agreement; a fourth leg races
+# two merge-on-read writers with overlapping batches. See
 # graft.SoakCommit. Writers run as PLAIN `java` processes (sbt holds a
 # project-level lock, so two concurrent `sbt runMain`s would serialize —
 # the add-opens set below mirrors build.sbt's).
@@ -76,4 +77,22 @@ run_jvm verify "$DIR/t" 2 "$N" $((2 * N)) | grep "SOAKC verify PASS" \
   || fail "leg C verify"
 echo "[soakc] leg C PASS"
 
-echo "[soakc] PASS: all legs (concurrency, kill-after-commit, kill-before-commit)"
+# ---- Leg D: two merge-on-read writers, overlapping batches --------------
+# One-bucket table: every batch updates the same shared keys, so a writer
+# that loses a commit race must recompute the superseded row positions
+# against the winner's manifest. The verify replays every snapshot and
+# compares the table with the serial Upsert.merge fold in commit order.
+DIR=/tmp/graft-soak-commit-d
+rm -rf "$DIR"
+echo "[soakc] leg D: 2 concurrent merge-on-read writer JVMs x $N overlapping merges..."
+run_jvm mor-writer "$DIR/t" 0 "$N" > /tmp/soakc_w0d.log 2>&1 &
+P0=$!
+run_jvm mor-writer "$DIR/t" 1 "$N" > /tmp/soakc_w1d.log 2>&1 &
+P1=$!
+wait $P0 || fail "leg D writer 0 exited nonzero"
+wait $P1 || fail "leg D writer 1 exited nonzero"
+run_jvm mor-verify "$DIR/t" 2 "$N" | grep "SOAKC mor-verify PASS" \
+  || fail "leg D verify"
+echo "[soakc] leg D PASS"
+
+echo "[soakc] PASS: all legs (concurrency, kill-after-commit, kill-before-commit, merge-on-read)"
