@@ -53,8 +53,9 @@ object Pipeline {
         * each run reads and rewrites only the touched buckets. 0 (or 1) ⇒
         * one bucket, merge-on-read: each run writes only the batch's
         * post-merge rows and records the positions of the target rows they
-        * supersede; readers drop those rows, `RunMaintain table-compact`
-        * reclaims them. A first run onto an existing flat snapshot-directory
+        * supersede; readers drop those rows, and a merge rewrites a file
+        * once they pass 30% of its rows (`RunMaintain table-compact`
+        * reclaims them all). A first run onto an existing flat snapshot-directory
         * or plain target adopts its files in place. A table's recorded
         * bucket count wins over this field. */
       mergeBuckets: Int = 0,

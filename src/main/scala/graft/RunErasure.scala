@@ -22,8 +22,9 @@ import graft.sources.Parquet
   * `keysPath` is a Parquet/JSON key list (one column, `--key-col`).
   * Target layout is auto-detected: a manifest target erases via the
   * bucket-pruned rewrite at its recorded bucket count (a one-bucket
-  * merge-on-read table rewrites the files that hold an erased key, which
-  * drops their superseded rows too); otherwise the snapshot-pointer key
+  * merge-on-read table rewrites every file that holds a copy of an erased
+  * key, live or superseded, so none stays on disk); otherwise the
+  * snapshot-pointer key
   * delete runs
   * (it refuses a legacy hash-bucketed directory rather than adopt it).
   * Ordering matters for crash-safety: the TARGET commits first

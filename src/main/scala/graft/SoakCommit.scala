@@ -41,7 +41,8 @@ import graft.operators.Upsert
   *    not-yet-seen batch (no key twice), every batch must appear once,
   *    and the table must equal `Upsert.merge` folded over the batches in
   *    that commit order. The DSv2 connector must refuse the table by
-  *    name (it cannot drop superseded rows). Prints
+  *    name while it records superseded rows, and serve it otherwise.
+  *    Merges also rewrite worn files, so retries race those too. Prints
   *    `SOAKC mor-verify PASS rows=<n>`.
   */
 object SoakCommit {
@@ -157,10 +158,16 @@ object SoakCommit {
         val t = Upsert.readTarget(spark, target).select("key", "v")
           .as[(String, Long)].collect().sorted.toSeq
         require(t == fold, "table differs from the Upsert.merge fold in commit order")
-        val refused =
-          try { spark.read.format("graft").load(target).collect(); false }
-          catch { case _: Upsert.MergeOnReadUnsupportedException => true }
-        require(refused, "the DSv2 connector served a table with superseded rows")
+        // the DSv2 connector refuses the table while it records superseded
+        // rows (a merge rewrites a worn file, so it may record none)
+        val body = Upsert.manifestBody(spark, target, None).get
+        val served =
+          try Some(spark.read.format("graft").load(target).select("key", "v")
+            .as[(String, Long)].collect().sorted.toSeq)
+          catch { case _: Upsert.MergeOnReadUnsupportedException => None }
+        require(served == (if (Upsert.hasSuperseded(body,
+            Upsert.parseManifestEntries(body).values.flatten)) None else Some(t)),
+          "the DSv2 connector served superseded rows, or refused a table without them")
         println(s"SOAKC mor-verify PASS rows=${t.size} commits=${ids.size} " +
           s"writers=${order.map(_._1).mkString("")}")
         spark.stop()

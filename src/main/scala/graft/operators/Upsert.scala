@@ -755,9 +755,13 @@ object Upsert {
   // rewritten. Every reader of entries goes through [[readEntries]],
   // which turns the positions into a scan-side filter; a reader that
   // cannot (the DSv2 scan, the appends stream) refuses the table with
-  // [[MergeOnReadUnsupportedException]]. Compaction rewrites the files
-  // that carry positions and drops them; erasure rewrites the files that
-  // hold an erased key. Before its first manifest commit a one-bucket
+  // [[MergeOnReadUnsupportedException]] ([[requireNoSuperseded]],
+  // [[requireHashBuckets]]). A merge also rewrites, in its one write, the
+  // files whose recorded rows pass [[MaxDeadFraction]] of their rows, so
+  // dead rows and positions stay bounded without maintenance. Compaction
+  // rewrites every file that carries positions and drops them; erasure
+  // rewrites every file that holds a copy of an erased key, live or
+  // superseded. Before its first manifest commit a one-bucket
   // table adopts an existing flat snapshot directory or plain target in
   // place (entries outside `data/`); the GC reclaims those files once no
   // retained manifest references them.
@@ -814,15 +818,58 @@ object Upsert {
     * manifest: relative entry -> Parquet row indexes (`_metadata.row_index`)
     * within that file. Field `"row_deletes": [["<rel>", i, j, ...], ...]`:
     * arrays, not an object, so no entry name can ever read as a bucket id
-    * to [[parseManifestEntries]]. Absent field: no superseded rows. */
+    * to [[parseManifestEntries]]. Absent field: no superseded rows.
+    * Scanned by hand, not by a repeated regex group: java.util.regex
+    * recurses once per repetition of a group, so a file with thousands
+    * of positions would overflow the stack. */
   private[graft] def parseRowDeletes(body: String): Map[String, Seq[Long]] =
-    """"row_deletes"\s*:\s*\[((?:\s*\["[^"]*"(?:\s*,\s*\d+)*\s*\]\s*,?)*)\s*\]""".r
-      .findFirstMatchIn(body).map { m =>
-        """\["([^"]*)"((?:\s*,\s*\d+)*)\s*\]""".r.findAllMatchIn(m.group(1)).map { e =>
-          e.group(1) -> e.group(2).split(",").map(_.trim).filter(_.nonEmpty)
-            .map(_.toLong).toSeq
-        }.toMap
-      }.getOrElse(Map.empty)
+    """"row_deletes"\s*:\s*\[""".r.findFirstMatchIn(body).map { m =>
+      def malformed(at: Int) = new IllegalStateException(
+        s"malformed row_deletes field in a manifest at offset $at")
+      val out = Map.newBuilder[String, Seq[Long]]
+      var i = m.end
+      def skip(): Unit =
+        while (i < body.length && (body(i).isWhitespace || body(i) == ',')) i += 1
+      skip()
+      while (i < body.length && body(i) == '[') {
+        val q0 = body.indexOf('"', i)
+        val q1 = if (q0 < 0) -1 else body.indexOf('"', q0 + 1)
+        val end = if (q1 < 0) -1 else body.indexOf(']', q1)
+        if (end < 0) throw malformed(i)
+        out += body.substring(q0 + 1, q1) -> body.substring(q1 + 1, end).split(',')
+          .iterator.map(_.trim).filter(_.nonEmpty).map(_.toLong).toVector
+        i = end + 1
+        skip()
+      }
+      if (i >= body.length || body(i) != ']') throw malformed(i)
+      out.result()
+    }.getOrElse(Map.empty)
+
+  /** Whether any of `rels` has rows that `body` records as superseded
+    * and `since` (a manifest the reader already served) does not. */
+  private[graft] def hasSuperseded(body: String, rels: Iterable[String],
+      since: String = ""): Boolean = {
+    val (now, before) = (parseRowDeletes(body), parseRowDeletes(since))
+    rels.exists(r => now.get(r).exists(rows => !before.get(r).contains(rows)))
+  }
+
+  /** THE refusal of a connector that cannot serve a one-bucket
+    * merge-on-read table: a reader of `rels` when [[hasSuperseded]]
+    * holds (it would serve superseded rows). `who` names the reader,
+    * `instead` the way to do it. */
+  private[graft] def requireNoSuperseded(path: String, body: String,
+      rels: Iterable[String], who: String, instead: String, since: String = ""): Unit =
+    if (hasSuperseded(body, rels, since)) throw new MergeOnReadUnsupportedException(
+      s"$who cannot serve $path: merge-on-read commits recorded rows of it " +
+        s"as superseded, and it would serve them. $instead")
+
+  /** The same refusal for a writer of the hash-bucket placement column
+    * (`__bucket`), which a one-bucket table (`nBuckets <= 1`) has not. */
+  private[graft] def requireHashBuckets(path: String, nBuckets: Int,
+      who: String, instead: String): Unit =
+    if (nBuckets <= 1) throw new MergeOnReadUnsupportedException(
+      s"$who cannot serve $path: it is a one-bucket merge-on-read table, " +
+        s"and it would write the __bucket placement column. $instead")
 
   /** Manifest field for [[parseRowDeletes]]; nothing when empty. */
   private def rowDeletesField(deletes: Map[String, Seq[Long]]): Seq[String] =
@@ -1144,6 +1191,7 @@ object Upsert {
       keepSnapshots: Int, statsCols: Seq[String]): Unit = {
     import org.apache.spark.sql.{Observation, Row}
     val rels = base.getOrElse(0, Nil)
+    val worn = body.fold(Seq.empty[String])(wornFiles(spark, targetPath, _, rels))
     val target =
       if (rels.isEmpty) emptyTargetFor(spark, updates, refreshExprs)
         .withColumn(PosFile, lit(null).cast("string"))
@@ -1161,12 +1209,17 @@ object Upsert {
       else col(s"u.$c").as(c)
     }
     val obs = Observation()
-    val rows = updates.as("u")
+    val batchRows = updates.as("u")
       .join(target.as("t"), keys.map(k => col(s"t.$k") <=> col(s"u.$k")).reduce(_ && _),
         "left_outer")
       .observe(obs, collect_list(when(col(s"t.$PosRow").isNotNull,
         struct(col(s"t.$PosFile"), col(s"t.$PosRow")))).as("superseded"))
       .select(outCols: _*)
+    // the worn files' rows that stay live ride along in the same write;
+    // the files leave the manifest, and their positions with them
+    val rows = if (worn.isEmpty) batchRows
+      else batchRows.unionByName(joinKeys(readEntries(spark, targetPath, body.get,
+        worn, ""), updates, keys, "left_anti"))
     val relOf = entryOfUri(
       new Path(targetPath).getFileSystem(spark.sparkContext.hadoopConfiguration),
       targetPath, rels)
@@ -1178,9 +1231,51 @@ object Upsert {
             s"merge-on-read: superseded row in $uri, not an entry of $targetPath")) ->
             rs.map(_._2).distinct.toSeq
         }
-    commitSnapshot(spark, targetPath, rows, Seq(0), base, keys, nextId,
-      keepSnapshots, partCol = None, nBuckets = 1, appendEntries = true,
+    commitSnapshot(spark, targetPath, rows, Seq(0), Map(0 -> rels.filterNot(worn.toSet)),
+      keys, nextId, keepSnapshots, partCol = None, nBuckets = 1, appendEntries = true,
       statsCols = statsCols, preClustered = true, supersede = () => superseded())
+  }
+
+  /** Share of a file's rows that may be recorded as superseded before
+    * the next merge-on-read commit rewrites the file ([[wornFiles]]).
+    * It bounds both the dead bytes a one-bucket table keeps and the
+    * positions every read carries as a filter literal. */
+  private val MaxDeadFraction = 0.3
+
+  /** The files among `rels` whose superseded rows, as `body` records
+    * them, are more than [[MaxDeadFraction]] of the file's rows. Row
+    * counts come from the manifest's [[FileStats]], else (an adopted
+    * file carries none) from the file's footer: driver metadata only,
+    * and only for files that have positions. */
+  private def wornFiles(spark: SparkSession, targetPath: String, body: String,
+      rels: Seq[String]): Seq[String] = {
+    val deletes = parseRowDeletes(body)
+    val dirty = rels.distinct.filter(deletes.contains)
+    if (dirty.isEmpty) Nil
+    else {
+      val stats = FileStats.parse(body)
+      val conf = spark.sparkContext.hadoopConfiguration
+      dirty.filter { rel =>
+        val rows = FileStats.rowCount(stats.getOrElse(rel, Map.empty)).getOrElse(
+          FileStats.rowCount(FileStats.collect(conf,
+            Seq(rel -> resolveEntry(targetPath, rel)), Nil)(rel)).get)
+        deletes(rel).size > MaxDeadFraction * rows
+      }
+    }
+  }
+
+  /** One commit that rewrites `subset` of a one-bucket table's files
+    * (entry 0 holds `rels`, of manifest `body`): their live rows, less
+    * those whose `keys` are in `erase`, become new files sorted by
+    * `keys`; the rewritten files leave the manifest, and their recorded
+    * positions with them. Shared by compaction and erasure. */
+  private def rewriteOneBucketFiles(spark: SparkSession, targetPath: String,
+      body: String, rels: Seq[String], subset: Seq[String], keys: Seq[String],
+      erase: Option[DataFrame], nextId: Long, keepSnapshots: Int): Unit = {
+    val live = readEntries(spark, targetPath, body, subset, "")
+    commitSnapshot(spark, targetPath, erase.fold(live)(joinKeys(live, _, keys, "left_anti")),
+      Seq(0), Map(0 -> rels.filterNot(subset.toSet)), keys, nextId, keepSnapshots,
+      partCol = None, nBuckets = 1, appendEntries = true, preClustered = true)
   }
 
   /** The empty target a first merge (into either layout) joins: the
@@ -1467,8 +1562,16 @@ object Upsert {
       case None => currentSnapshot(spark, targetPath)
       case Some(id) =>
         val top = f"snap-$id%09d"
+        // the pointer is derived state: a publish lost to another
+        // process's (the local FS's OVERWRITE rename is delete-then-rename)
+        // leaves it for the next repair, and `top` is still the table
         if (!currentSnapshot(spark, targetPath).contains(top))
-          publishPointer(fs, hadoopConf, targetPath, top, s"repair-$id")
+          try publishPointer(fs, hadoopConf, targetPath, top, s"repair-$id")
+          catch {
+            case e: java.io.IOException =>
+              System.err.println(s"[graft] pointer repair of $targetPath to " +
+                s"$top lost a race (${e.getClass.getSimpleName}); left to the next repair")
+          }
         Some(top)
     }
   }
@@ -1758,8 +1861,11 @@ object Upsert {
       // racer's tmp — the write→link window is microseconds — never goes
       val staleMfTmp = !st.isDirectory && n.contains(".mftmp-") &&
         System.currentTimeMillis() - st.getModificationTime >= gcGraceMs
-      if (staleManifest || staleMfTmp ||
-          (!st.isDirectory && n.startsWith("_current.tmp-")))
+      // likewise a pointer tmp: another process may be between its
+      // write and its rename
+      val stalePointerTmp = !st.isDirectory && n.startsWith("_current.tmp-") &&
+        System.currentTimeMillis() - st.getModificationTime >= gcGraceMs
+      if (staleManifest || staleMfTmp || stalePointerTmp)
         fs.delete(st.getPath, false)
     }
     } catch {
@@ -2225,24 +2331,21 @@ object Upsert {
       val nextId = nextFreeId(spark, targetPath, current)
       try {
         if (effN == 1) {
-          // one bucket: rewrite only the files holding a deleted key; the
-          // rewrite drops their superseded rows physically, and the files
+          // one bucket: rewrite only the files holding a copy of a deleted
+          // key, live or superseded, so no copy stays on disk; the files
           // leave the manifest with their recorded positions
           val rels = manifest.getOrElse(0, Nil)
           val relOf = entryOfUri(
             new Path(targetPath).getFileSystem(spark.sparkContext.hadoopConfiguration),
             targetPath, rels)
-          val hit = joinKeys(readEntries(spark, targetPath, body.get, rels,
-              "", withPositions = true), keyRows, keys, "left_semi")
+          val raw = Parquet.readFiles(spark, rels.map(resolveEntry(targetPath, _)))
+            .withColumn(PosFile, col("_metadata.file_path"))
+          val hit = joinKeys(raw, keyRows, keys, "left_semi")
             .select(PosFile).distinct().collect().map(_.getString(0))
             .flatMap(relOf).toSeq
           if (hit.isEmpty) return
-          commitSnapshot(spark, targetPath,
-            joinKeys(readEntries(spark, targetPath, body.get, hit, ""), keyRows,
-              keys, "left_anti"),
-            Seq(0), Map(0 -> rels.filterNot(hit.toSet)), keys, nextId,
-            keepSnapshots, partCol = None, nBuckets = 1, appendEntries = true,
-            preClustered = true)
+          rewriteOneBucketFiles(spark, targetPath, body.get, rels, hit, keys,
+            Some(keyRows), nextId, keepSnapshots)
         } else {
           val delKeys = keyRows.withColumn("__bucket",
             pmod(xxhash64(keys.map(col): _*), lit(effN)).cast("int"))
@@ -2332,11 +2435,8 @@ object Upsert {
           val rels = oldManifest.getOrElse(0, Nil)
           val dirty = rels.filter(deletes.contains)
           if (dirty.isEmpty) return
-          () => commitSnapshot(spark, targetPath,
-            readEntries(spark, targetPath, body.get, dirty, ""), Seq(0),
-            Map(0 -> rels.filterNot(dirty.toSet)), sortKeys,
-            nextFreeId(spark, targetPath, current), keepSnapshots,
-            partCol = None, nBuckets = 1, appendEntries = true, preClustered = true)
+          () => rewriteOneBucketFiles(spark, targetPath, body.get, rels, dirty,
+            sortKeys, None, nextFreeId(spark, targetPath, current), keepSnapshots)
         } else {
           val read = readManifestTable(spark, targetPath)
           val table = newNBuckets match {

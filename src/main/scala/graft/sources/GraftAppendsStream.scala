@@ -102,12 +102,10 @@ private[sources] class GraftAppendsStream(schema: StructType,
     // a merge-on-read commit superseded rows: its added files carry
     // updates, not appends
     val startBody = if (s < 0L) "" else manifestOf(s)
-    if (Upsert.parseRowDeletes(endBody) != Upsert.parseRowDeletes(startBody))
-      throw new Upsert.MergeOnReadUnsupportedException(
-        s"graft appends stream: snapshots ${snapName(s)}..${snapName(e)} of " +
-          s"$path supersede rows (merge-on-read) — the table is not " +
-          "insert-only over this range. Stream the change feed instead: " +
-          ".option(\"cdc\", \"true\")")
+    Upsert.requireNoSuperseded(path, endBody, endFiles,
+      s"the graft appends stream over ${snapName(s)}..${snapName(e)}",
+      "Stream the change feed instead: .option(\"cdc\", \"true\")",
+      since = startBody)
     val added =
       if (s < 0L) endFiles
       else {

@@ -173,13 +173,13 @@ private[sources] class GraftCdcMicroBatchStream(schema: StructType,
             s"longer retained under $path (vacuumed?) — delete the " +
             "checkpoint to re-bootstrap, and raise --keep-snapshots " +
             "above the consumer's lag"))
-      val files = Upsert.parseManifestEntries(body)
-        .toSeq.sortBy(_._1).flatMap(_._2).map(Upsert.resolveEntry(path, _))
-      if (files.isEmpty) return Array.empty
+      val rels = Upsert.parseManifestEntries(body).toSeq.sortBy(_._1).flatMap(_._2)
+      if (rels.isEmpty) return Array.empty
       // superseded rows (merge-on-read) must not reach the consumer: the
       // bootstrap is then materialized like a diff, from readTargetAt
-      if (Upsert.parseRowDeletes(body).isEmpty)
-        return bootstrapScan(files).toBatch.planInputPartitions()
+      if (!Upsert.hasSuperseded(body, rels))
+        return bootstrapScan(rels.map(Upsert.resolveEntry(path, _)))
+          .toBatch.planInputPartitions()
           .map(GraftCdcBootstrapPartition(_): InputPartition)
     }
     val dir = batchDir(s, e)

@@ -120,10 +120,8 @@ private[sources] final class GraftRowLevelScanBuilder(
     required = requiredSchema
 
   override def build(): Scan = {
-    if (op.nBuckets <= 1) throw new Upsert.MergeOnReadUnsupportedException(
-      s"graft table ${op.path} is a one-bucket merge-on-read table: the " +
-        "SQL row-level rewrite groups by hash bucket and writes the __bucket " +
-        "placement column. Merge into it with Upsert.mergeIntoManifestBucketedParquet " +
+    Upsert.requireHashBuckets(op.path, op.nBuckets, "the SQL row-level rewrite",
+      "Merge into it with Upsert.mergeIntoManifestBucketedParquet " +
         "(or SQL INSERT), delete by its keys, or rebucket it " +
         "(RunMaintain table-compact --rebucket)")
     val spark = SparkSession.active

@@ -46,10 +46,9 @@ private[sources] final class GraftStreamingAppend(
     nBuckets: Int,
     info: LogicalWriteInfo) extends StreamingWrite {
 
-  if (nBuckets <= 1) throw new Upsert.MergeOnReadUnsupportedException(
-    s"graft table $path is a one-bucket merge-on-read table: the streaming " +
-      "sink writes hash-bucketed files. Merge each micro-batch with " +
-      "foreachBatch + Upsert.mergeIntoManifestBucketedParquet")
+  Upsert.requireHashBuckets(path, nBuckets, "the graft streaming sink",
+    "Merge each micro-batch with foreachBatch + " +
+      "Upsert.mergeIntoManifestBucketedParquet")
 
   private val spark = SparkSession.active
   // stable across restarts (stream checkpoint metadata id)

@@ -498,8 +498,8 @@ private[sources] class GraftScanBuilder(tableSchema: StructType, path: String,
       case _ => return None
     }
     // per-file counts include superseded rows: build() refuses those
-    if (Upsert.parseRowDeletes(body).nonEmpty) return None
     val allRels = Upsert.parseManifestEntries(body).values.flatten.toSeq
+    if (Upsert.hasSuperseded(body, allRels)) return None
     val stats = FileStats.parse(body)
     // every referenced file must carry a row count, or nothing is answerable
     if (allRels.exists(rel =>
@@ -645,12 +645,9 @@ private[sources] class GraftScanBuilder(tableSchema: StructType, path: String,
           System.err.println(s"[graft] dsv2 file-stats pruning dropped " +
             s"${afterBucketCount - keptCount}/$afterBucketCount files of $path")
         if (keptCount == 0) return new GraftEmptyScan(required)
-        val superseded = Upsert.parseRowDeletes(body)
-        if (keptByBucket.valuesIterator.flatten.exists(superseded.contains))
-          throw new Upsert.MergeOnReadUnsupportedException(s"the graft DSv2 " +
-            s"read cannot drop the rows merge-on-read commits superseded in " +
-            s"$path: read it with Upsert.readTarget, or compact it first " +
-            "(RunMaintain table-compact)")
+        Upsert.requireNoSuperseded(path, body, keptByBucket.values.flatten,
+          "the graft DSv2 read", "Read it with Upsert.readTarget, or compact " +
+            "it first (RunMaintain table-compact)")
         val bucketKeys = Upsert.parseManifestString(body, "bucket_keys")
           .map(_.split(",").toSeq).getOrElse(Nil)
         val nb = Upsert.parseManifestLong(body, "nBuckets").getOrElse(0L).toInt

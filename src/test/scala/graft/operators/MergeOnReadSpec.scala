@@ -54,14 +54,13 @@ class MergeOnReadSpec extends SparkSpecBase {
     val body = Upsert.manifestBody(spark, path, None).get
     assert(Upsert.parseManifestLong(body, "nBuckets").contains(1L))
     assert(Upsert.parseManifestString(body, "bucket_keys").contains("id"))
-    val entries = Upsert.parseManifestEntries(body)
-    assert(entries.keySet == Set(0))
-    // three commits, none rewrote a file: every earlier file is still listed
-    val first = Upsert.parseManifestEntries(
-      Upsert.manifestBody(spark, path, Some("snap-000000000")).get)(0)
-    assert(first.forall(entries(0).contains))
-    // id 2 (twice), the null key and id 1 were superseded: 4 positions
-    assert(Upsert.parseRowDeletes(body).values.map(_.size).sum == 4)
+    assert(Upsert.parseManifestEntries(body).keySet == Set(0))
+    // the second commit rewrote no file: every first file is still listed,
+    // with the positions of id 2 and the null key
+    def snap(n: Int) = Upsert.manifestBody(spark, path, Some(f"snap-$n%09d")).get
+    val first = Upsert.parseManifestEntries(snap(0))(0)
+    assert(first.forall(Upsert.parseManifestEntries(snap(1))(0).contains))
+    assert(Upsert.parseRowDeletes(snap(1)).values.map(_.size).sum == 2)
     val got = Upsert.readTarget(spark, path)
     assert(!got.columns.contains("__bucket"))
     assert(rows(got) == rows(ref))
@@ -177,6 +176,48 @@ class MergeOnReadSpec extends SparkSpecBase {
     // no rewritten file's bytes still hold an erased key
     val raw = spark.read.parquet(files.toSeq.map(f => s"$path/$f"): _*)
     assert(raw.where(col("id").isNull || col("id") === 3L).count() == 0L)
+  }
+
+  test("erasure rewrites the files holding only superseded copies of a key") {
+    val (path, ref) = build(Seq(day1, day2, day3))
+    def copiesOf2(): Long = {
+      val files = Upsert.parseManifestEntries(Upsert.manifestBody(spark, path, None).get)(0)
+      spark.read.parquet(files.map(f => s"$path/$f"): _*).where(col("id") === 2L).count()
+    }
+    // id 2 was updated on days 2 and 3: a superseded copy is still on disk
+    assert(copiesOf2() > 1L)
+    Upsert.deleteKeysFromManifestBucketedParquet(spark, path, Seq(Some(2L)).toDF("id"), keys)
+    assert(copiesOf2() == 0L)
+    assert(rows(Upsert.readTarget(spark, path)) == rows(ref.where(!(col("id") <=> 2L))))
+  }
+
+  test("tens of thousands of positions parse and read; a merge rewrites a worn file") {
+    val path = mkTarget()
+    def day(ids: org.apache.spark.sql.Column, v: String): DataFrame =
+      spark.range(100000L).where(ids)
+        .select(col("id"), lit("r").as("ref"), lit(v).as("v")).coalesce(1)
+    def merge(b: DataFrame): Unit = Upsert.mergeIntoManifestBucketedParquet(
+      spark, path, b, keys, nBuckets = 1, insertOnlyCols = ins)
+    def body = Upsert.manifestBody(spark, path, None).get
+    merge(day(lit(true), "a"))
+    val first = Upsert.parseManifestEntries(body)(0)
+    assert(first.size == 1)
+    def positions = Upsert.parseRowDeletes(body).getOrElse(first.head, Nil).size
+    merge(day(col("id") < 25000L, "b"))
+    assert(positions == 25000)
+    // the first file's dead share (25%) is within the bound: it stays
+    merge(day(col("id") >= 25000L && col("id") < 35000L, "c"))
+    assert(Upsert.parseManifestEntries(body)(0).contains(first.head))
+    assert(positions == 35000)
+    def counts = Upsert.readTarget(spark, path).groupBy("v").count()
+      .as[(String, Long)].collect().toMap
+    assert(counts == Map("a" -> 65000L, "b" -> 25000L, "c" -> 10000L))
+    // now 35% dead: the next merge rewrites it in the same write
+    merge(day(col("id") >= 99990L, "d"))
+    assert(!Upsert.parseManifestEntries(body)(0).contains(first.head))
+    assert(Upsert.parseRowDeletes(body).isEmpty)
+    assert(counts == Map("a" -> 64990L, "b" -> 25000L, "c" -> 10000L, "d" -> 10L))
+    assert(Upsert.readTarget(spark, path).select("id").distinct().count() == 100000L)
   }
 
   test("streams: the appends read refuses, the change feed mirrors the table") {
